@@ -354,9 +354,10 @@ DEFAULT_MAX_PAYLOAD_ROWS = 1_000_000
 
 # On-disk doc_map bytes under which shard images are ALSO held
 # driver-resident and small-payload queries are answered with zero extra
-# Spark jobs. Python tuple/dict overhead makes the resident term store
-# cost ~10x its on-disk bytes in driver RAM, so the budget is set well
-# inside the default 20g driver (session.py). 0 disables.
+# Spark jobs. The resident term store (_TermStore, numpy columns) measured
+# 1.28 MB for 0.75 MB of on-disk term tables at 2k generated pages and
+# 7.86 MB for 4.22 MB at 20k (1.7-1.9x), so the budget sits well inside the
+# default 20g driver (session.py). 0 disables.
 DRIVER_IMAGE_BYTES = 128 << 20
 
 
@@ -389,40 +390,98 @@ def _dir_parquet_bytes(path: str) -> int:
     return total
 
 
-def _load_term_store(index_dir: str):
-    """Driver-resident term dictionaries (small-index fast path): term ->
-    per-shard block rows in the exact payload tuple shapes the shard_fns
-    consume. Sourced from the same parquet tables the distributed scans
-    read, so results are identical by construction."""
-    import pyarrow.parquet as pq
+# Payload tuple layouts the shard_fns consume, per kind: P = posting
+# blocks, X = position blocks, D = term_dict df rows. ``_payload_tuples``
+# is the one place they are built.
+PAYLOAD_COLS = {
+    "P": ("term", "salt", "block_id", "doc_count", "first_doc_id",
+          "last_doc_id", "max_freq", "max_tfn", "doc_ids_enc", "freqs_enc"),
+    "X": ("term", "salt", "first_doc_id", "doc_ids_enc", "flags_enc",
+          "pos_counts_enc", "positions_enc"),
+    "D": ("term", "df"),
+}
+PAYLOAD_TABLES = {"P": "postings", "X": "positions", "D": "term_dict"}
 
-    d = pq.read_table(os.path.join(index_dir, "postings")).to_pydict()
-    n = len(d["term"])
-    mt = d.get("max_tfn") or [None] * n
-    post: dict[str, list] = {}
-    for i in range(n):
-        post.setdefault(d["term"][i], []).append(
-            (int(d["shard"][i]), int(d["salt"][i]), int(d["block_id"][i]),
-             int(d["doc_count"][i]), int(d["first_doc_id"][i]),
-             int(d["last_doc_id"][i]), int(d["max_freq"][i]),
-             None if mt[i] is None else float(mt[i]),
-             d["doc_ids_enc"][i], d["freqs_enc"][i])
-        )
-    d = pq.read_table(os.path.join(index_dir, "positions")).to_pydict()
-    pos: dict[str, list] = {}
-    for i in range(len(d["term"])):
-        pos.setdefault(d["term"][i], []).append(
-            (int(d["shard"][i]), int(d["salt"][i]),
-             int(d["first_doc_id"][i]), d["doc_ids_enc"][i],
-             d["flags_enc"][i], d["pos_counts_enc"][i],
-             d["positions_enc"][i])
-        )
-    d = pq.read_table(os.path.join(index_dir, "term_dict")).to_pydict()
-    dfs: dict[str, list] = {}
-    for i in range(len(d["term"])):
-        dfs.setdefault(d["term"][i], []).append(
-            (int(d["shard"][i]), int(d["df"][i])))
-    return post, pos, dfs
+
+def _payload_tuples(kind: str, column) -> list[tuple]:
+    """One kind's payload tuples, in PAYLOAD_COLS order: the one place they
+    are built. ``column(name)`` returns a column's values as a Python list:
+    ``to_pylist`` of an Arrow table's column for a direct read or a
+    collected union scan, a row gather for the resident store."""
+    return list(zip(*map(column, PAYLOAD_COLS[kind])))
+
+
+def _resident_column(col):
+    """Arrow column -> what the resident store gathers rows from: a
+    zero-copy numpy array for numbers (an object array keeps a null
+    max_tfn ``None``), or (int64 offsets, data bytes) for binary."""
+    import pyarrow as pa
+
+    col = col.combine_chunks()
+    if col.null_count:
+        return np.array(col.to_pylist(), dtype=object)
+    if not pa.types.is_binary(col.type):
+        return col.to_numpy()
+    _validity, offsets, data = col.cast(pa.large_binary()).buffers()
+    return np.frombuffer(offsets, np.int64), data.to_pybytes() if data else b""
+
+
+def _gather(col, idx) -> list:
+    """Rows ``idx`` of a ``_resident_column`` as a Python list."""
+    if isinstance(col, tuple):
+        offsets, data = col
+        return [data[a:b] for a, b in
+                zip(offsets[idx].tolist(), offsets[idx + 1].tolist())]
+    return col[idx].tolist()
+
+
+class _TermStore:
+    """Driver-resident term store (small-index fast path): the postings,
+    positions and term_dict tables as numpy columns sorted by term, like the
+    reference's term-sorted dictionary (index/src/TermDictionary.cpp:40-58).
+    Per kind, the sorted unique terms (fixed-width numpy bytes) and their
+    row-range bounds form the term index, so no per-term or per-row Python
+    object stays resident; a query's tuples are gathered from its terms'
+    row ranges only. Sourced from the same parquet tables the distributed
+    scans read, so payloads are identical by construction."""
+
+    def __init__(self, index_dir: str):
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+
+        self._kinds = {}
+        for kind, table in PAYLOAD_TABLES.items():
+            t = pq.read_table(os.path.join(index_dir, table),
+                              columns=["shard", *PAYLOAD_COLS[kind]])
+            t = t.sort_by("term")
+            runs = pc.run_end_encode(t.column("term").combine_chunks())
+            vocab = runs.values.cast(pa.binary()).to_numpy(
+                zero_copy_only=False).astype("S")
+            bounds = np.concatenate(([0], runs.run_ends.to_numpy()))
+            cols = {c: _resident_column(t.column(c))
+                    for c in ("shard", *PAYLOAD_COLS[kind][1:])}
+            self._kinds[kind] = (cols, vocab, bounds)
+
+    def rows(self, kind: str, terms) -> tuple[list[int], list[tuple]]:
+        """(shard per row, payload tuples) of ``terms``' rows of one kind;
+        terms absent from the index contribute no rows."""
+        cols, vocab, bounds = self._kinds[kind]
+        terms = list(terms)
+        if not terms or not len(vocab):
+            return [], []
+        q = np.array([t.encode() for t in terms], dtype="S")
+        i = np.minimum(np.searchsorted(vocab, q), len(vocab) - 1)
+        found = vocab[i] == q
+        hits = i[found]
+        if not len(hits):
+            return [], []
+        lo, hi = bounds[hits].tolist(), bounds[hits + 1].tolist()
+        idx = np.concatenate([np.arange(a, b) for a, b in zip(lo, hi)])
+        names = [t for t, f in zip(terms, found.tolist()) if f]
+        term_col = [t for t, a, b in zip(names, lo, hi) for _ in range(b - a)]
+        return cols["shard"][idx].tolist(), _payload_tuples(
+            kind, lambda c: term_col if c == "term" else _gather(cols[c], idx))
 
 
 def _read_shard_payload(index_dir: str, shard: int, posting_terms,
@@ -439,7 +498,7 @@ def _read_shard_payload(index_dir: str, shard: int, posting_terms,
     (pyarrow's dataset reader ignores the same dot/underscore side files
     Spark does, and picks up LSM segment files identically), same
     (bucket, term, shard) predicates the union scan pushes down, same
-    tuple shapes as ``_load_term_store``/``_payload_from_pdf``. Block
+    tuple shapes (``_payload_tuples``) as the resident store. Block
     ORDER is irrelevant — ``_build_shard`` orders a term's blocks by
     (salt, first_doc_id) itself (the LSM contract). Read amplification
     is shards x the query's own blocks (each task prunes to its shard by
@@ -451,43 +510,20 @@ def _read_shard_payload(index_dir: str, shard: int, posting_terms,
     from .indexer import term_bucket
 
     payload: dict[str, list] = {"P": [], "X": [], "D": []}
-
-    def _read(table: str, terms):
+    for kind, terms in (("P", posting_terms), ("X", position_terms),
+                        ("D", df_terms)):
         if not terms:
-            return None
+            continue
         buckets = sorted({term_bucket(t, num_buckets) for t in terms})
-        return pq.read_table(
-            os.path.join(index_dir, table),
+        tbl = pq.read_table(
+            os.path.join(index_dir, PAYLOAD_TABLES[kind]),
+            columns=list(PAYLOAD_COLS[kind]),
             filters=[("bucket", "in", buckets),
                      ("term", "in", sorted(terms)),
                      ("shard", "=", shard)],
-        ).to_pydict()
-
-    d = _read("postings", posting_terms)
-    if d:
-        n = len(d["term"])
-        mt = d.get("max_tfn") or [None] * n
-        for i in range(n):
-            payload["P"].append(
-                (d["term"][i], int(d["salt"][i]), int(d["block_id"][i]),
-                 int(d["doc_count"][i]), int(d["first_doc_id"][i]),
-                 int(d["last_doc_id"][i]), int(d["max_freq"][i]),
-                 None if mt[i] is None else float(mt[i]),
-                 d["doc_ids_enc"][i], d["freqs_enc"][i])
-            )
-    d = _read("positions", position_terms)
-    if d:
-        for i in range(len(d["term"])):
-            payload["X"].append(
-                (d["term"][i], int(d["salt"][i]),
-                 int(d["first_doc_id"][i]), d["doc_ids_enc"][i],
-                 d["flags_enc"][i], d["pos_counts_enc"][i],
-                 d["positions_enc"][i])
-            )
-    d = _read("term_dict", df_terms)
-    if d:
-        for i in range(len(d["term"])):
-            payload["D"].append((d["term"][i], int(d["df"][i])))
+        )
+        payload[kind] = _payload_tuples(
+            kind, lambda c: tbl.column(c).to_pylist())
     return payload
 
 
@@ -631,7 +667,7 @@ class SearchEngine:
                 for d in ("postings", "positions", "term_dict")
             )
             if idx_bytes <= driver_serve_bytes:
-                self._driver_store = _load_term_store(index_dir)
+                self._driver_store = _TermStore(index_dir)
         # WAND soundness across append-mode segments (indexer.py): blocks
         # encoded before a shard's avg body length grew carry a too-small
         # max_tfn bound; scale bounds up by avg_now/min_enc. Exactly 1.0
@@ -721,24 +757,16 @@ class SearchEngine:
         """Per-shard payload dicts from the resident term store (no Spark
         job); returns (payload, posting+position row count) for the same
         size guard the collected path applies."""
-        post, pos, dfs = self._driver_store
         payload: dict[int, dict[str, list]] = {}
-
-        def pl(shard):
-            return payload.setdefault(shard, {"P": [], "X": [], "D": []})
-
         n = 0
-        for t in posting_terms:
-            for row in post.get(t, ()):
-                pl(row[0])["P"].append((t,) + row[1:])
-                n += 1
-        for t in position_terms:
-            for row in pos.get(t, ()):
-                pl(row[0])["X"].append((t,) + row[1:])
-                n += 1
-        for t in df_terms:
-            for row in dfs.get(t, ()):
-                pl(row[0])["D"].append((t, row[1]))
+        for kind, terms in (("P", posting_terms), ("X", position_terms),
+                            ("D", df_terms)):
+            shards, rows = self._driver_store.rows(kind, terms)
+            for shard, row in zip(shards, rows):
+                payload.setdefault(
+                    shard, {"P": [], "X": [], "D": []})[kind].append(row)
+            if kind != "D":
+                n += len(rows)
         return payload, n
 
     def _one_pass_limit(self):
@@ -873,8 +901,8 @@ class SearchEngine:
             return self.shard_images.mapInPandas(run_direct, schema).collect()
 
         union_df = self._blocks_df(posting_terms, position_terms, df_terms)
-        rows = None
         if self.max_payload_rows > 0 and self._driver_store is None:
+            import pyarrow.compute as pc
             from pyspark.sql import functions as F
 
             # one collect job: the kind filters fold per union branch
@@ -886,41 +914,24 @@ class SearchEngine:
                     .unionByName(
                         union_df.filter(F.col("kind") == "X")
                         .limit(x_cap + 1))
-                    .collect()
+                    .toArrow()
                 )
-            n_x = sum(1 for r in limited if r["kind"] == "X")
-            if (len(limited) - n_x) <= cap and n_x <= x_cap:
-                rows = limited
-
-        if rows is not None:
-            payload: dict[int, dict[str, list]] = {}
-            for r in rows:
-                pl = payload.setdefault(
-                    int(r["shard"]), {"P": [], "X": [], "D": []}
-                )
-                kind = r["kind"]
-                if kind == "P":
-                    pl["P"].append(
-                        (r["term"], int(r["salt"]), int(r["block_id"]),
-                         int(r["doc_count"]), int(r["first_doc_id"]),
-                         int(r["last_doc_id"]), int(r["max_freq"]),
-                         None if r["max_tfn"] is None else float(r["max_tfn"]),
-                         bytes(r["doc_ids_enc"]), bytes(r["freqs_enc"]))
-                    )
-                elif kind == "X":
-                    pl["X"].append(
-                        (r["term"], int(r["salt"]), int(r["first_doc_id"]),
-                         bytes(r["doc_ids_enc"]),
-                         bytes(r["flags_enc"]), bytes(r["pos_counts_enc"]),
-                         bytes(r["positions_enc"]))
-                    )
-                else:
-                    pl["D"].append((r["term"], int(r["doc_count"])))
-
-            # images resident but term store not (mid-size index): the
-            # payload collect above was the only Spark job; per-shard
-            # evaluation runs in-driver (same shard_fn, same results)
-            return _driver_eval(payload)
+            kinds = limited.column("kind")
+            n_x = pc.sum(pc.equal(kinds, "X")).as_py() or 0
+            if (len(kinds) - n_x) <= cap and n_x <= x_cap:
+                # images resident but term store not (mid-size index): the
+                # payload collect above was the only Spark job; per-shard
+                # evaluation runs in-driver (same shard_fn, same results)
+                payload: dict[int, dict[str, list]] = {}
+                for kind in ("P", "X", "D"):
+                    sub = limited.filter(pc.equal(kinds, kind))
+                    rows = _payload_tuples(kind, lambda c: sub.column(
+                        "doc_count" if c == "df" else c).to_pylist())
+                    for shard, row in zip(sub.column("shard").to_pylist(),
+                                          rows):
+                        payload.setdefault(
+                            shard, {"P": [], "X": [], "D": []})[kind].append(row)
+                return _driver_eval(payload)
 
         def run_co(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
             if not len(left):
@@ -1155,7 +1166,9 @@ class SearchEngine:
     ) -> dict[int, dict[str, list[int]]]:
         """Per-hit-docid {term: body positions} via ONE pruned positions
         fetch for the query's terms (VERDICT r04 #6): the resident term
-        store when available, else the LIMIT-capped pruned union collect.
+        store when available, else the LIMIT-capped pruned union scan,
+        collected as Arrow (a one-job plan: local limits on every
+        partition, then a single-partition merge).
         Returns {} when the payload would be oversized (head terms) — the
         caller degrades to the substring stage, exactly the positions-less
         behavior. k hit docs means the decode work is one bounded pass
@@ -1176,33 +1189,20 @@ class SearchEngine:
 
         shard_size = self.meta["shard_size"]
         cap = max(self.max_payload_rows // 8192, 64)
-        rows: list[tuple] = []  # (shard, term, salt, first, de, fe, ce, pe)
         if self._driver_store is not None:
-            _post, pos, _dfs = self._driver_store
-            for t in terms:
-                for r in pos.get(t, ()):
-                    rows.append((r[0], t) + tuple(r[1:]))
-            if len(rows) > cap:
-                return {}
+            shards, rows = self._driver_store.rows("X", terms)
         else:
-            with self._one_pass_limit():
-                collected = self._blocks_df(set(), terms).limit(
-                    cap + 1).collect()
-            if len(collected) > cap:
-                return {}
-            rows = [
-                (int(r["shard"]), r["term"], int(r["salt"]),
-                 int(r["first_doc_id"]), bytes(r["doc_ids_enc"]),
-                 bytes(r["flags_enc"]), bytes(r["pos_counts_enc"]),
-                 bytes(r["positions_enc"]))
-                for r in collected
-            ]
+            tbl = self._blocks_df(set(), terms).limit(cap + 1).toArrow()
+            shards = tbl.column("shard").to_pylist()
+            rows = _payload_tuples("X", lambda c: tbl.column(c).to_pylist())
+        if len(rows) > cap:
+            return {}
         want_by_shard: dict[int, dict[int, int]] = {}
         for gid in hit_ids:
             s = gid // shard_size
             want_by_shard.setdefault(s, {})[gid - s * shard_size] = gid
         by_key: dict[tuple, list] = {}
-        for s, t, salt, fd, de, fe, ce, pe in rows:
+        for s, (t, salt, fd, de, fe, ce, pe) in zip(shards, rows):
             if s in want_by_shard:
                 by_key.setdefault((s, t), []).append((salt, fd, de, fe, ce, pe))
         out: dict[int, dict[str, list[int]]] = {}

@@ -27,6 +27,11 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
+# spark.sql.files.openCostInBytes default: Spark pads every scanned file
+# by this many bytes when it sizes and packs file splits.
+_SCAN_OPEN_COST = 4 << 20
+
+
 def _t_wide(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Scan + round-robin repartition to the session's parallelism.
 
@@ -41,11 +46,27 @@ def _t_wide(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     order-independent, so results are unchanged on any partitioning.
     Scale-adaptive: at real file sizes the scan already yields >= cores
     splits and the repartition is skipped.
+
+    The split count comes from the input files' sizes: Spark sizes splits
+    at max(open cost, padded bytes / cores) capped by maxPartitionBytes,
+    so the scan reaches ``cores`` splits once its padded bytes fill
+    ``cores`` open-cost units. Reading it back from
+    ``df.rdd.getNumPartitions()`` instead converts the plan to a Python
+    RDD: 0.5-0.9 s in a fresh session on the sf0.1 documents table
+    (4 vCPUs), against 0.01-0.2 s for the file listing.
     """
+    import pyarrow.fs as pafs
+
     df = _t(spark, sf_dir, name)
     cores = spark.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() >= cores:
-        return df
+    files = df.inputFiles()
+    if files:
+        fs, _ = pafs.FileSystem.from_uri(files[0])
+        infos = fs.get_file_info(
+            [pafs.FileSystem.from_uri(f)[1] for f in files])
+        padded = sum(i.size + _SCAN_OPEN_COST for i in infos)
+        if padded >= cores * _SCAN_OPEN_COST:
+            return df
     return df.repartition(cores)
 
 

@@ -51,6 +51,13 @@ def get_spark(
         .config("spark.sql.files.maxPartitionBytes", "128m")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.extraJavaOptions", "-Djava.net.preferIPv4Stack=true")
+        # PySpark's DataFrame debugging captures the Python call site of
+        # every Column/DataFrame call: the first pyspark.sql.functions call
+        # imports IPython (+26.6 MB driver RSS) and every later call pays
+        # extra py4j round trips (2000 `F.col(..) + F.lit(..)` took
+        # 4.1-5.0 s with it, 1.3-1.9 s without). Read once per process at
+        # the first Column call; extra_conf can turn it back on.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -67,6 +67,29 @@ def test_distributed_collect_path_rank_identity(spark, corpus, oracle_pages,
             resident.top_k_with_snippets(q), q
 
 
+def test_collect_tier_rank_identity(spark, corpus, oracle_pages,
+                                    tmp_path_factory):
+    """A budget that fits the doc map but not the term tables keeps the
+    images driver-resident without the term store: each query's payload
+    comes from one LIMIT-capped union collect, evaluated in-driver, and
+    must stay rank-identical to the oracle and WAND-identical to the
+    resident engine."""
+    import os
+
+    from mithril_spark.engine import SearchEngine, _dir_parquet_bytes
+
+    path = _index(spark, corpus, tmp_path_factory, 2)
+    budget = _dir_parquet_bytes(os.path.join(path, "doc_map"))
+    engine = SearchEngine(spark, path, driver_serve_bytes=budget)
+    assert engine._driver_images is not None and engine._driver_store is None
+    oracle = OracleIndex.build(oracle_pages, num_shards=2)
+    resident = SearchEngine(spark, path)
+    for q in QUERY_SET:
+        assert engine.top_k(q) == oracle.top_k(q), q
+    for q in ["search engine", "granite OR marble", "the and of"]:
+        assert engine.bm25_topk(q, k=5) == resident.bm25_topk(q, k=5), q
+
+
 def test_worker_image_cache_is_lru(tmp_path, monkeypatch):
     """ADVICE r04: hits must refresh recency — a hot image is never the
     eviction victim. No JVM: drives _worker_image against tiny parquet
@@ -110,19 +133,25 @@ def test_worker_image_cache_is_lru(tmp_path, monkeypatch):
 
 def test_direct_payload_read_equals_union_scan(spark, corpus,
                                                tmp_path_factory):
-    """r06 direct worker tier: _read_shard_payload (per-task pyarrow read)
-    must yield EXACTLY the payload tuples the Spark pruned-union scan
-    yields for the same (shard, terms) — the tier's entire correctness
-    contract, asserted at the payload level (the e2e rank-identity tests
-    would also catch a divergence, but only if it flips a top-50)."""
+    """The three payload readers agree: the Spark pruned-union scan, the
+    direct tier's per-task pyarrow read (_read_shard_payload) and the
+    resident Arrow term store (_payload_from_store) must yield EXACTLY the
+    same payload tuples per shard for the same terms, including a term
+    absent from the index (the e2e rank-identity tests would also catch a
+    divergence, but only if it flips a top-50). _hit_positions must also
+    return the same positions from the resident store as from the capped
+    union collect."""
     from mithril_spark.engine import SearchEngine, _read_shard_payload
 
     path = _index(spark, corpus, tmp_path_factory, 3)
     e = SearchEngine(spark, path, driver_serve_bytes=0)
+    resident = SearchEngine(spark, path)
+    assert resident._driver_store is not None
     nb = e.meta["num_buckets"]
-    pt = frozenset({"search", "engine", "granite", "thermite"})
-    xt = frozenset({"search", "engine"})
-    dt = frozenset({"search", "engine", "granite"})
+    absent = "zzqxabsentterm"
+    pt = frozenset({"search", "engine", "granite", "thermite", absent})
+    xt = frozenset({"search", "engine", absent})
+    dt = frozenset({"search", "engine", "granite", absent})
     rows = e._blocks_df(pt, xt, dt).collect()
     by_shard: dict[int, dict[str, set]] = {}
     for r in rows:
@@ -142,11 +171,25 @@ def test_direct_payload_read_equals_union_scan(spark, corpus,
         else:
             pl["D"].add((r["term"], int(r["doc_count"])))
     assert by_shard, "fixture terms matched nothing"
+    stored, n_rows = resident._payload_from_store(pt, xt, dt)
+    assert n_rows == sum(len(pl["P"]) + len(pl["X"])
+                         for pl in by_shard.values())
+    assert set(stored) <= set(e.stats)
     for shard in sorted(e.stats):
-        got = _read_shard_payload(path, shard, pt, xt, dt, nb)
         want = by_shard.get(shard, {"P": set(), "X": set(), "D": set()})
+        direct = _read_shard_payload(path, shard, pt, xt, dt, nb)
+        store = stored.get(shard, {"P": [], "X": [], "D": []})
         for kind in ("P", "X", "D"):
-            assert set(map(tuple, got[kind])) == want[kind], (shard, kind)
+            for name, got in (("direct", direct), ("store", store)):
+                assert len(set(got[kind])) == len(got[kind]), (name, kind)
+                assert set(got[kind]) == want[kind], (name, shard, kind)
+                assert absent not in {t[0] for t in got[kind]}
+
+    hits = [d for d, _s in resident.bm25_topk("granite quartz marble", k=20)]
+    terms = {"granite", "quartz", "marble", absent}
+    got = resident._hit_positions(terms, hits)
+    assert got, "no positions recovered for the hits"
+    assert got == e._hit_positions(terms, hits)
 
 
 def test_image_load_stats_plumbing(spark, corpus, tmp_path_factory):
