@@ -1,40 +1,36 @@
 """Spark query engine: BM25 top-k over the parquet/Iceberg index tables.
 
-Spark-first mapping of the reference query path
-(/root/reference/query/src/QueryManager.cpp + QueryCoordinator.cpp):
-partitions are shards; the per-shard single-threaded ISR walk + ranking run
-inside ``mapInPandas`` using the exact same core as the oracle
-(query/shard.py), and the cross-shard merge is the driver-side
+Spark-first mapping of the reference query path (the reference's
+query/src/QueryManager.cpp + QueryCoordinator.cpp): partitions are shards;
+the per-shard single-threaded ISR walk + ranking use the exact same core as
+the oracle (query/shard.py), and the cross-shard merge is the driver-side
 sorted-lists merge (the reference coordinator's k-way head merge — which is
 also precisely what Spark's TakeOrderedAndProject computes).
 
-Plan shape per query (designed so the bulk of the index never moves):
-1. driver: parse the query -> the handful of needed terms (ISR terms, raw
-   quote/phrase terms, ranking tokens + their %desc variants);
-2. ONE pruned-scan job: postings + positions + term_dict rows for those
-   terms (``bucket`` partition pruning + parquet min/max skipping — the
-   Spark analog of the reference's dictionary seek) are unioned, collected
-   to the driver under a row cap, and shipped to executors in the task
-   closure (a broadcast of query-term slices, SURVEY.md §1.4);
-3. the doc map is packed once into per-shard binary images cached in the
-   block manager (the analog of the reference's mmap+mlock'd per-shard doc
-   map, DocumentMapReader.cpp:15-100); each query is then ONE shuffle-free
-   job over those cached rows;
-4. per-shard top-50s (a few rows) come back for the coordinator merge.
+Per query the driver parses the query into the handful of needed terms
+(ISR terms, raw quote/phrase terms, ranking tokens + their %desc variants);
+then one of two serving tiers answers it:
 
-Head-term caveat: a stop-word-scale term's blocks would be large to collect;
-the step-2 collect carries ``LIMIT cap+1``, so an oversized payload is
-detected by row count without ever materializing it driver-side, and the
-engine switches to the cogroup path: the same pruned union is grouped by
-shard and joined against the cached shard images executor-side, so
-head-term blocks flow executor-to-executor and never transit the driver
-(the Spark analog of the reference's per-shard mmap reads,
-index/src/TermReader.cpp:20-214). ``max_payload_rows=0`` forces cogroup.
+1. RESIDENT — when the whole index (doc_map, postings, positions and
+   term_dict bytes on disk) fits ``driver_serve_bytes``, the driver holds
+   the shard doc-map images and the term store (``_TermStore``) and
+   evaluates every shard itself: zero Spark jobs;
+2. DIRECT — otherwise, and for any resident query whose payload is over
+   ``PAYLOAD_ROW_CAP`` rows (head terms): ONE ``mapInPandas`` job over the
+   shard rows. Each task reads its own shard's pruned payload with
+   ``_read_shard_payload`` (``bucket`` partition pruning + parquet min/max
+   skipping on ``term`` — the analog of the reference's dictionary seek
+   and per-shard posting reads, index/src/TermReader.cpp:20-214) and takes
+   its doc-map image from a worker-resident LRU (the analog of the
+   reference's mmap+mlock'd per-shard doc map,
+   DocumentMapReader.cpp:15-100). Posting blocks never transit the
+   driver; only per-shard top-50s (a few rows) come back for the
+   coordinator merge.
 
-Throughput: ``top_k_many`` answers a batch of queries with the same two
-jobs (one union collect for all their terms, one pass over the shard
-images evaluating every query) — the Spark analog of the reference
-coordinator multiplexing concurrent queries over resident shards.
+Throughput: ``top_k_many`` answers a batch of queries on the same tier as
+one query (one term fetch for all their terms, one evaluation pass per
+shard) — the Spark analog of the reference coordinator multiplexing
+concurrent queries over resident shards.
 """
 
 from __future__ import annotations
@@ -43,13 +39,12 @@ import collections
 import json
 import os
 import pickle
-import threading
 
 import numpy as np
 import pandas as pd
 
 from .query import grammar as g
-from .query.isr import DocMapCols, DocMeta, ShardIndex
+from .query.isr import DocMapCols, ShardIndex
 from .query.shard import evaluate_query, handle_ranking, merge_shard_topk
 from .ranking import tokenify_query
 
@@ -93,7 +88,7 @@ def plan_terms(
 
 
 def _image_dict(pdf: pd.DataFrame) -> dict:
-    """One shard's doc_map rows -> columnar image (v2).
+    """One shard's doc_map rows -> columnar image.
 
     The payload is the column set of query/isr.py::DocMapCols — numpy
     arrays for every numeric column (``to_numpy``, no per-row Python) and
@@ -126,7 +121,6 @@ def _image_dict(pdf: pd.DataFrame) -> dict:
         for tw in titles
     ]
     return {
-        "v": 2,
         "local_ids": pdf["local_id"].to_numpy(dtype=np.int64),
         "urls": urls,
         "titles": titles,
@@ -185,45 +179,6 @@ _IMAGE_CACHE: "collections.OrderedDict" = collections.OrderedDict()
 _IMAGE_CACHE_BUDGET = int(
     os.environ.get("MITHRIL_IMAGE_CACHE_BYTES", str(512 << 20)))
 _IMAGE_LOADS = 0  # parquet loads in this worker (churn diagnostic)
-
-# _one_pass_limit refcounts (see SearchEngine._one_pass_limit): one entry
-# per live SparkSession holding [depth, snapshot-before-first-entry].
-_LIMIT_SCOPE_LOCK = threading.Lock()
-_LIMIT_SCOPE_STATE: dict[int, list] = {}
-
-
-def _one_pass_limit_scope(spark):
-    """Refcounted scoped set of spark.sql.limit.initialNumPartitions=10000
-    on ``spark``: first entrant snapshots and sets, last exit restores.
-    Safe under concurrent queries multiplexed over one session — see
-    SearchEngine._one_pass_limit for the interleaving this prevents."""
-    import contextlib
-
-    @contextlib.contextmanager
-    def scope():
-        key = "spark.sql.limit.initialNumPartitions"
-        sid = id(spark)
-        with _LIMIT_SCOPE_LOCK:
-            st = _LIMIT_SCOPE_STATE.get(sid)
-            if st is None:
-                prev = spark.conf.get(key, None)
-                spark.conf.set(key, "10000")
-                st = _LIMIT_SCOPE_STATE[sid] = [0, prev]
-            st[0] += 1
-        try:
-            yield
-        finally:
-            with _LIMIT_SCOPE_LOCK:
-                st[0] -= 1
-                if st[0] == 0:
-                    del _LIMIT_SCOPE_STATE[sid]
-                    if st[1] is None:
-                        spark.conf.unset(key)
-                    else:
-                        spark.conf.set(key, st[1])
-
-    return scope()
-
 
 def _image_nbytes(img: dict) -> int:
     """Estimated resident bytes of one image (numpy + payload + overhead),
@@ -319,42 +274,24 @@ def _docmap_cols(img: dict) -> DocMapCols:
     )
 
 
-def _payload_from_pdf(pdf: pd.DataFrame) -> dict:
-    """One shard's cogrouped union rows -> the payload dict shape."""
-    payload: dict[str, list] = {"P": [], "X": [], "D": []}
-    for row in pdf.itertuples(index=False):
-        if row.kind == "P":
-            mt = row.max_tfn
-            if mt is not None and mt != mt:  # NaN from the nullable union
-                mt = None
-            payload["P"].append(
-                (row.term, int(row.salt), int(row.block_id),
-                 int(row.doc_count), int(row.first_doc_id),
-                 int(row.last_doc_id), int(row.max_freq),
-                 None if mt is None else float(mt),
-                 bytes(row.doc_ids_enc), bytes(row.freqs_enc))
-            )
-        elif row.kind == "X":
-            payload["X"].append(
-                (row.term, int(row.salt), int(row.first_doc_id),
-                 bytes(row.doc_ids_enc),
-                 bytes(row.flags_enc), bytes(row.pos_counts_enc),
-                 bytes(row.positions_enc))
-            )
-        else:  # "D": term_dict df row
-            payload["D"].append((row.term, int(row.doc_count)))
-    return payload
-
-
-# Estimated posting entries above which query blocks stop being collected
-# to the driver and flow executor-side instead (cogroup path). ~1M entries
-# is a few thousand 128-doc blocks — tens of MB — comfortably collectable;
-# a head term at web scale blows far past it.
+# Estimated posting entries a resident query may gather in the driver. ~1M
+# entries is a few thousand 128-doc blocks — tens of MB; a head term at web
+# scale blows far past it, and such a query is served by the DIRECT tier,
+# which bounds every payload per task instead.
 DEFAULT_MAX_PAYLOAD_ROWS = 1_000_000
+# The same bound in payload rows: ~128 postings per posting block row.
+# Position (X) rows are a DIFFERENT granularity: one row packs a whole
+# (term, shard, salt) group of up to SALT_RANGE (32k) docs' position lists,
+# so the posting-calibrated cap under-guards X bytes by up to ~256x — X
+# rows get their own, much lower cap, the driver-memory bound of
+# ``_hit_positions``.
+PAYLOAD_ROW_CAP = DEFAULT_MAX_PAYLOAD_ROWS // 128
+POSITION_ROW_CAP = DEFAULT_MAX_PAYLOAD_ROWS // 8192
 
-# On-disk doc_map bytes under which shard images are ALSO held
-# driver-resident and small-payload queries are answered with zero extra
-# Spark jobs. The resident term store (_TermStore, numpy columns) measured
+# On-disk bytes of the whole index (doc_map, postings, positions and
+# term_dict) under which the shard images and the term store are held
+# driver-resident and small-payload queries are answered with zero Spark
+# jobs. The resident term store (_TermStore, numpy columns) measured
 # 1.28 MB for 0.75 MB of on-disk term tables at 2k generated pages and
 # 7.86 MB for 4.22 MB at 20k (1.7-1.9x), so the budget sits well inside the
 # default 20g driver (session.py). 0 disables.
@@ -406,8 +343,8 @@ PAYLOAD_TABLES = {"P": "postings", "X": "positions", "D": "term_dict"}
 def _payload_tuples(kind: str, column) -> list[tuple]:
     """One kind's payload tuples, in PAYLOAD_COLS order: the one place they
     are built. ``column(name)`` returns a column's values as a Python list:
-    ``to_pylist`` of an Arrow table's column for a direct read or a
-    collected union scan, a row gather for the resident store."""
+    ``to_pylist`` of an Arrow table's column for a direct read, a row
+    gather for the resident store."""
     return list(zip(*map(column, PAYLOAD_COLS[kind])))
 
 
@@ -442,8 +379,8 @@ class _TermStore:
     Per kind, the sorted unique terms (fixed-width numpy bytes) and their
     row-range bounds form the term index, so no per-term or per-row Python
     object stays resident; a query's tuples are gathered from its terms'
-    row ranges only. Sourced from the same parquet tables the distributed
-    scans read, so payloads are identical by construction."""
+    row ranges only. Sourced from the same parquet tables the DIRECT tier
+    reads, so payloads are identical by construction."""
 
     def __init__(self, index_dir: str):
         import pyarrow as pa
@@ -484,43 +421,65 @@ class _TermStore:
             kind, lambda c: term_col if c == "term" else _gather(cols[c], idx))
 
 
+def _term_filter(terms, num_buckets: int):
+    """pyarrow filter selecting ``terms``' rows of a term table: ``bucket``
+    partition pruning (only the terms' bucket directories are opened — the
+    Spark-side analog of the reference's dictionary seek; guarded by
+    tests/test_plans.py) plus a ``term`` predicate that parquet row-group
+    min/max statistics skip on."""
+    import pyarrow.dataset as ds
+
+    from .indexer import term_bucket
+
+    buckets = sorted({term_bucket(t, num_buckets) for t in terms})
+    return (ds.field("bucket").isin(buckets)
+            & ds.field("term").isin(sorted(terms)))
+
+
+def _count_rows(index_dir: str, kind: str, terms, num_buckets: int) -> int:
+    """Rows of one kind for ``terms`` across all shards, counted from the
+    ``term`` column alone — no payload bytes are read."""
+    import pyarrow.dataset as ds
+
+    return ds.dataset(
+        os.path.join(index_dir, PAYLOAD_TABLES[kind]), format="parquet",
+        partitioning="hive",
+    ).count_rows(filter=_term_filter(terms, num_buckets))
+
+
 def _read_shard_payload(index_dir: str, shard: int, posting_terms,
                         position_terms, df_terms, num_buckets: int) -> dict:
     """One shard's pruned query payload read DIRECTLY from the parquet
-    tables with pyarrow — the executor-side twin of the driver's
-    LIMIT-capped union collect (r06, VERDICT r5 #3: the worker-image tier
-    paid TWO Spark jobs per query, and ~0.4 s of its ~0.43 s/query was
-    job submission, not compute). Each serving task calls this for its
-    own shard inside the single mapInPandas job, so posting blocks never
-    transit the driver and the payload-collect job disappears.
+    tables with pyarrow — the engine's one disk reader of query payloads.
+    Each DIRECT-tier task calls it for its own shard inside the single
+    mapInPandas job, so posting blocks never transit the driver and no
+    payload-collect job runs (r06, VERDICT r5 #3: a collect-then-dispatch
+    plan paid TWO Spark jobs per query, ~0.4 s of its ~0.43 s/query in job
+    submission); ``_hit_positions`` calls it driver-side for the hit
+    shards only, after a row count.
 
-    Row equality with the Spark path is by construction: same files
-    (pyarrow's dataset reader ignores the same dot/underscore side files
-    Spark does, and picks up LSM segment files identically), same
-    (bucket, term, shard) predicates the union scan pushes down, same
-    tuple shapes (``_payload_tuples``) as the resident store. Block
-    ORDER is irrelevant — ``_build_shard`` orders a term's blocks by
-    (salt, first_doc_id) itself (the LSM contract). Read amplification
-    is shards x the query's own blocks (each task prunes to its shard by
-    row filter), the same bytes the cogroup shuffle would move, without
-    the shuffle or the second job; oversized payloads are naturally
-    bounded per task exactly like the cogroup tier."""
+    It reads the same files the Spark scans would (pyarrow's dataset
+    reader ignores the same dot/underscore side files Spark does, and
+    picks up LSM segment files identically) and builds the same tuples
+    (``_payload_tuples``) as the resident store; test_engine_paths checks
+    both against an independent Spark read. Block ORDER is irrelevant —
+    ``_build_shard`` orders a term's blocks by (salt, first_doc_id) itself
+    (the LSM contract). Read amplification is shards x the query's own
+    blocks (each task prunes to its shard by row filter), and oversized
+    (head-term) payloads are bounded per task."""
+    import pyarrow.dataset as ds
     import pyarrow.parquet as pq
-
-    from .indexer import term_bucket
 
     payload: dict[str, list] = {"P": [], "X": [], "D": []}
     for kind, terms in (("P", posting_terms), ("X", position_terms),
                         ("D", df_terms)):
         if not terms:
             continue
-        buckets = sorted({term_bucket(t, num_buckets) for t in terms})
         tbl = pq.read_table(
             os.path.join(index_dir, PAYLOAD_TABLES[kind]),
             columns=list(PAYLOAD_COLS[kind]),
-            filters=[("bucket", "in", buckets),
-                     ("term", "in", sorted(terms)),
-                     ("shard", "=", shard)],
+            filters=(_term_filter(terms, num_buckets)
+                     & (ds.field("shard") == shard)),
         )
         payload[kind] = _payload_tuples(
             kind, lambda c: tbl.column(c).to_pylist())
@@ -529,33 +488,19 @@ def _read_shard_payload(index_dir: str, shard: int, posting_terms,
 
 class SearchEngine:
     def __init__(self, spark, index_dir: str, cache_doc_map: bool = True,
-                 max_payload_rows: int = DEFAULT_MAX_PAYLOAD_ROWS,
-                 cache_partitions: int | None = None,
                  pagerank_weight: float = 0.0,
                  driver_serve_bytes: int | None = None):
         self.spark = spark
         self.index_dir = index_dir
-        self.max_payload_rows = max_payload_rows
         self.pagerank_weight = pagerank_weight
         with open(os.path.join(index_dir, "index_meta.json")) as f:
             self.meta = json.load(f)
-        if cache_partitions is None:
-            # serving-tuned: a query touches a handful of terms, so scan
-            # latency is task-scheduling-bound, not IO-bound — keep the
-            # cached tables in few partitions (task setup is ~10 ms each)
-            par = spark.sparkContext.defaultParallelism
-            cache_partitions = max(4, min(16, par // 4))
+        # plain scan handles on the term tables for callers that want them
+        # as DataFrames; serving reads them with pyarrow (_TermStore,
+        # _read_shard_payload), never through these
         self.postings = spark.read.parquet(os.path.join(index_dir, "postings"))
         self.positions = spark.read.parquet(os.path.join(index_dir, "positions"))
         self.term_dict = spark.read.parquet(os.path.join(index_dir, "term_dict"))
-        if cache_doc_map:
-            # lazy block-manager caching: only bucket partitions a query
-            # actually scans get cached — a hot-term cache, not a full load
-            self.postings = self.postings.coalesce(cache_partitions).cache()
-            self.positions = self.positions.coalesce(cache_partitions).cache()
-            self.term_dict = self.term_dict.coalesce(
-                max(2, cache_partitions // 2)).cache()
-        self._union_df = self._build_union_df()
         self.stats = {
             int(r["shard"]): {
                 "doc_count": int(r["doc_count"]),
@@ -633,20 +578,24 @@ class SearchEngine:
                     "rows out (every query ships the tombstone arrays in "
                     "its task closure)",
                 )
-        # DRIVER-resident images for small indexes: when the whole doc_map
-        # fits a byte budget, small-payload queries are answered entirely
-        # in-driver (the payload collect is the ONLY Spark job) — the
-        # single-node analog of the reference's resident QueryWorker. The
-        # threshold is on-disk doc_map bytes; past it the engine always
-        # serves distributed (worker-resident images above / cogroup), so
-        # no driver-side loop ever touches an at-scale corpus. Oversized
-        # payloads (head terms) still take the cogroup path even here.
+        # DRIVER-resident serving for small indexes: when the WHOLE index
+        # (doc_map plus the three term tables, on-disk bytes) fits the
+        # budget, the driver holds the shard images and the term store —
+        # resident dictionaries seeded from the same parquet tables the
+        # DIRECT tier reads — and small-payload queries run with ZERO Spark
+        # jobs: the single-node analog of the reference's resident
+        # QueryWorker. Past the budget every query is served DIRECT, so no
+        # driver-side loop ever touches an at-scale corpus. Oversized
+        # payloads (head terms) are served DIRECT even here.
         if driver_serve_bytes is None:
             driver_serve_bytes = DRIVER_IMAGE_BYTES
         self._driver_images = None
         self._driver_store = None
         dm_bytes = _dir_parquet_bytes(os.path.join(index_dir, "doc_map"))
-        if shard_rows and 0 < dm_bytes <= driver_serve_bytes:
+        idx_bytes = dm_bytes + sum(
+            _dir_parquet_bytes(os.path.join(index_dir, t))
+            for t in PAYLOAD_TABLES.values())
+        if shard_rows and 0 < dm_bytes and idx_bytes <= driver_serve_bytes:
             import pyarrow.parquet as pq
 
             pdf = pq.read_table(
@@ -658,16 +607,7 @@ class SearchEngine:
                     grp = grp[~grp["local_id"].isin(dead)]
                 grp = _apply_pagerank_sidecar(grp, index_dir, int(s))
                 self._driver_images[int(s)] = _image_dict(grp)
-            # term store too, when the WHOLE index fits the budget: then a
-            # small-payload query runs with ZERO Spark jobs — resident
-            # dictionaries seeded from the same parquet tables the
-            # distributed paths scan (the mmap'd single-node reference)
-            idx_bytes = dm_bytes + sum(
-                _dir_parquet_bytes(os.path.join(index_dir, d))
-                for d in ("postings", "positions", "term_dict")
-            )
-            if idx_bytes <= driver_serve_bytes:
-                self._driver_store = _TermStore(index_dir)
+            self._driver_store = _TermStore(index_dir)
         # WAND soundness across append-mode segments (indexer.py): blocks
         # encoded before a shard's avg body length grew carry a too-small
         # max_tfn bound; scale bounds up by avg_now/min_enc. Exactly 1.0
@@ -698,65 +638,10 @@ class SearchEngine:
 
     # --- helpers ---
 
-    def _build_union_df(self):
-        """The posting+position+term_dict union plan, built ONCE at init.
-
-        Constructing this three-branch, 15-column union per query cost
-        ~0.3 s of pure py4j round-trips (hundreds of Column objects) —
-        a third of serving latency. Per query, ``_blocks_df`` now applies
-        a single per-kind (bucket, term) filter to this prebuilt plan;
-        Catalyst folds the literal ``kind`` per branch and pushes the
-        bucket/term predicates into each scan, so partition pruning and
-        predicate pushdown are unchanged (tests/test_plans.py)."""
-        from pyspark.sql import functions as F
-
-        tfn_col = (
-            F.col("max_tfn").cast("double")
-            if "max_tfn" in self.postings.columns
-            else F.lit(None).cast("double")
-        ).alias("max_tfn")
-        null = lambda t: F.lit(None).cast(t)
-        p = self.postings.select(
-            "shard", F.lit("P").alias("kind"), "term", "bucket", "salt",
-            F.col("block_id").cast("long").alias("block_id"),
-            F.col("doc_count").cast("long").alias("doc_count"),
-            F.col("first_doc_id").cast("long").alias("first_doc_id"),
-            F.col("last_doc_id").cast("long").alias("last_doc_id"),
-            F.col("max_freq").cast("long").alias("max_freq"), tfn_col,
-            "doc_ids_enc", "freqs_enc",
-            null("binary").alias("flags_enc"),
-            null("binary").alias("pos_counts_enc"),
-            null("binary").alias("positions_enc"),
-        )
-        x = self.positions.select(
-            "shard", F.lit("X").alias("kind"), "term", "bucket", "salt",
-            null("long").alias("block_id"), null("long").alias("doc_count"),
-            F.col("first_doc_id").cast("long").alias("first_doc_id"),
-            null("long").alias("last_doc_id"),
-            null("long").alias("max_freq"), null("double").alias("max_tfn"),
-            "doc_ids_enc", null("binary").alias("freqs_enc"),
-            "flags_enc", "pos_counts_enc", "positions_enc",
-        )
-        d = self.term_dict.select(
-            "shard", F.lit("D").alias("kind"), "term", "bucket",
-            F.lit(0).alias("salt"),
-            null("long").alias("block_id"),
-            F.col("df").cast("long").alias("doc_count"),
-            null("long").alias("first_doc_id"),
-            null("long").alias("last_doc_id"),
-            null("long").alias("max_freq"), null("double").alias("max_tfn"),
-            null("binary").alias("doc_ids_enc"),
-            null("binary").alias("freqs_enc"),
-            null("binary").alias("flags_enc"),
-            null("binary").alias("pos_counts_enc"),
-            null("binary").alias("positions_enc"),
-        )
-        return p.unionByName(x).unionByName(d)
-
     def _payload_from_store(self, posting_terms, position_terms, df_terms):
         """Per-shard payload dicts from the resident term store (no Spark
-        job); returns (payload, posting+position row count) for the same
-        size guard the collected path applies."""
+        job); returns (payload, posting+position row count) for the
+        PAYLOAD_ROW_CAP guard."""
         payload: dict[int, dict[str, list]] = {}
         n = 0
         for kind, terms in (("P", posting_terms), ("X", position_terms),
@@ -769,188 +654,61 @@ class SearchEngine:
                 n += len(rows)
         return payload, n
 
-    def _one_pass_limit(self):
-        """Scoped conf for the LIMIT-capped payload collects: default
-        CollectLimit tries 1 partition then grows (several sequential
-        sub-jobs, ~3x query latency) — run all partitions in one pass
-        (driver receives at most cap+1 rows per task, bounded). Scoped
-        set-and-restore instead of a permanent engine-init mutation
-        (code-review r5): a session-global setting silently turned every
-        OTHER df.limit().collect() in the session — indexer LIMIT-1
-        probes, user code — into an all-partitions job.
-
-        The scope is REFCOUNTED per session (code-review r5 #2): the
-        coordinator multiplexes concurrent queries over one shared
-        SparkSession, and independent set/restore pairs interleave — an
-        earlier scope's restore would strip the setting out from under a
-        still-planning collect, then the later restore would pin the
-        first scope's snapshot on the session forever. First entrant
-        sets, last exit restores; the lock makes snapshot-then-set
-        atomic."""
-        return _one_pass_limit_scope(self.spark)
-
-    def _blocks_df(self, posting_terms, position_terms, df_terms=frozenset()):
-        """Pruned posting+position+term_dict scans as ONE union DataFrame
-        keyed by shard — one collect job on the driver path, the
-        executor-side payload on the cogroup path. A single filter over
-        the prebuilt union plan (see _build_union_df)."""
-        from pyspark.sql import functions as F
-
-        from .indexer import term_bucket
-
-        cond = None
-        for kind, terms in (("P", posting_terms), ("X", position_terms),
-                            ("D", df_terms)):
-            if not terms:
-                continue
-            buckets = sorted(
-                {term_bucket(t, self.meta["num_buckets"]) for t in terms})
-            c = (
-                (F.col("kind") == kind)
-                & F.col("bucket").isin(buckets)
-                & F.col("term").isin(sorted(terms))
-            )
-            cond = c if cond is None else (cond | c)
-        if cond is None:
-            return self._union_df.filter(F.lit(False))
-        return self._union_df.filter(cond)
-
     def _execute(self, posting_terms, position_terms, df_terms,
                  shard_fn, schema) -> list:
         """Run ``shard_fn(shard_id, payload, docmap_img) -> pd.DataFrame``
         once per shard and collect the (small) per-shard results.
 
-        Path choice (the ``max_payload_rows`` guard): the pruned union of
-        the query's posting/position blocks and term_dict df rows is
-        collected under ``LIMIT cap+1`` — one job, and an oversized payload
-        is detected by row count without materializing it driver-side. At
-        or below the cap, the payload ships in the task closure of a
-        shuffle-free pass over the cached shard images. Above it (or with
-        ``max_payload_rows=0``), blocks never touch the driver: the same
-        union is cogrouped with the shard images by shard and decoded
-        executor-side — the shuffle moves only the query's own blocks."""
+        RESIDENT when the engine holds the index in the driver and the
+        query's payload is at most ``PAYLOAD_ROW_CAP`` posting+position
+        rows: payload from the term store, evaluation over the driver
+        images, zero Spark jobs. Otherwise DIRECT: ONE mapInPandas job in
+        which each task reads its own shard's pruned payload with
+        ``_read_shard_payload`` and takes its worker-resident image
+        (``_worker_image``), so a head-term payload is bounded per task and
+        never transits the driver."""
         col_names = [c.strip().split()[0] for c in schema.split(",")]
 
         def _empty():
             return pd.DataFrame({c: [] for c in col_names})
 
-        def _driver_eval(payload):
-            # deliberately SERIAL: an A/B with a per-shard thread pool
-            # (the reference's thread-per-shard posture,
-            # query/src/QueryManager.cpp:116-125) measured 0.39x at
-            # 20k/4-shard and 0.68x at 100k/4-shard — the per-shard walk
-            # is GIL-bound between its numpy kernels, so threads only add
-            # contention. Cross-shard parallelism belongs to the
-            # distributed tiers, where shards rank in separate worker
-            # PROCESSES; the resident tier's byte budget caps how much
-            # serial work can accumulate here.
-            outs = [
-                shard_fn(sid, payload.get(sid), img)
-                for sid, img in sorted(self._driver_images.items())
-            ]
-            out = pd.concat(outs, ignore_index=True) if outs else _empty()
-            return out.to_dict("records")
-
-        # ~128 postings per block row -> row cap from the postings cap.
-        # Position (X) rows are a DIFFERENT granularity: one row packs a
-        # whole (term, shard, salt) group of up to SALT_RANGE (32k) docs'
-        # position lists, so the posting-calibrated row cap under-guards X
-        # bytes by up to ~256x (code-review r5) — X rows get their own,
-        # much lower cap; past it the payload flows cogroup/executor-side
-        # like any oversized head term.
-        cap = max(self.max_payload_rows // 128, 512)
-        x_cap = max(self.max_payload_rows // 8192, 64)
-        if self.max_payload_rows > 0 and self._driver_store is not None:
-            # resident fast path: payload from the in-driver term store,
-            # evaluation over the resident images — ZERO Spark jobs. An
-            # oversized payload (head terms) falls through to cogroup,
-            # same as the collected path.
+        if self._driver_store is not None:
             payload, n_rows = self._payload_from_store(
                 posting_terms, position_terms, df_terms)
-            if n_rows <= cap:
-                return _driver_eval(payload)
+            if n_rows <= PAYLOAD_ROW_CAP:
+                # deliberately SERIAL: an A/B with a per-shard thread pool
+                # (the reference's thread-per-shard posture,
+                # query/src/QueryManager.cpp:116-125) measured 0.39x at
+                # 20k/4-shard and 0.68x at 100k/4-shard — the per-shard
+                # walk is GIL-bound between its numpy kernels, so threads
+                # only add contention. Cross-shard parallelism belongs to
+                # the DIRECT tier, where shards rank in separate worker
+                # PROCESSES; the resident tier's byte budget caps how much
+                # serial work can accumulate here.
+                outs = [
+                    shard_fn(sid, payload.get(sid), img)
+                    for sid, img in sorted(self._driver_images.items())
+                ]
+                out = pd.concat(outs, ignore_index=True) if outs else _empty()
+                return out.to_dict("records")
 
-        if (self.max_payload_rows > 0 and self._driver_store is None
-                and self._driver_images is None):
-            # worker-image tier, r06: ONE Spark job per query instead of
-            # two. Each task assembles its own shard's pruned payload
-            # with a direct pyarrow read (_read_shard_payload) instead of
-            # the driver collecting blocks and shipping them in the task
-            # closure — identical payload rows, no driver transit, no
-            # second job (the old collect+dispatch paid ~2x the job
-            # submission floor; VERDICT r5 #3). Oversized payloads are
-            # per-task-bounded exactly like the cogroup tier, so no
-            # LIMIT-cap guard is needed here; max_payload_rows=0 still
-            # forces the cogroup path below.
-            nb = self.meta["num_buckets"]
-            pt = frozenset(posting_terms)
-            xt = frozenset(position_terms)
-            dt = frozenset(df_terms)
+        nb = self.meta["num_buckets"]
+        pt = frozenset(posting_terms)
+        xt = frozenset(position_terms)
+        dt = frozenset(df_terms)
 
-            def run_direct(batches):
-                outs = []
-                for pdf in batches:
-                    for row in pdf.itertuples(index=False):
-                        sid = int(row.shard)
-                        img = _worker_image(row.index_dir, sid, row.token)
-                        pl = _read_shard_payload(
-                            row.index_dir, sid, pt, xt, dt, nb)
-                        outs.append(shard_fn(sid, pl, img))
-                yield pd.concat(outs, ignore_index=True) if outs else _empty()
+        def run_direct(batches):
+            outs = []
+            for pdf in batches:
+                for row in pdf.itertuples(index=False):
+                    sid = int(row.shard)
+                    img = _worker_image(row.index_dir, sid, row.token)
+                    pl = _read_shard_payload(
+                        row.index_dir, sid, pt, xt, dt, nb)
+                    outs.append(shard_fn(sid, pl, img))
+            yield pd.concat(outs, ignore_index=True) if outs else _empty()
 
-            return self.shard_images.mapInPandas(run_direct, schema).collect()
-
-        union_df = self._blocks_df(posting_terms, position_terms, df_terms)
-        if self.max_payload_rows > 0 and self._driver_store is None:
-            import pyarrow.compute as pc
-            from pyspark.sql import functions as F
-
-            # one collect job: the kind filters fold per union branch
-            # (X keeps only the positions scan, non-X the other two), so
-            # the per-kind LIMITs add no extra table scans
-            with self._one_pass_limit():
-                limited = (
-                    union_df.filter(F.col("kind") != "X").limit(cap + 1)
-                    .unionByName(
-                        union_df.filter(F.col("kind") == "X")
-                        .limit(x_cap + 1))
-                    .toArrow()
-                )
-            kinds = limited.column("kind")
-            n_x = pc.sum(pc.equal(kinds, "X")).as_py() or 0
-            if (len(kinds) - n_x) <= cap and n_x <= x_cap:
-                # images resident but term store not (mid-size index): the
-                # payload collect above was the only Spark job; per-shard
-                # evaluation runs in-driver (same shard_fn, same results)
-                payload: dict[int, dict[str, list]] = {}
-                for kind in ("P", "X", "D"):
-                    sub = limited.filter(pc.equal(kinds, kind))
-                    rows = _payload_tuples(kind, lambda c: sub.column(
-                        "doc_count" if c == "df" else c).to_pylist())
-                    for shard, row in zip(sub.column("shard").to_pylist(),
-                                          rows):
-                        payload.setdefault(
-                            shard, {"P": [], "X": [], "D": []})[kind].append(row)
-                return _driver_eval(payload)
-
-        def run_co(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-            if not len(left):
-                return _empty()
-            payload = _payload_from_pdf(right)
-            outs = [
-                shard_fn(int(row.shard), payload,
-                         _worker_image(row.index_dir, int(row.shard),
-                                       row.token))
-                for row in left.itertuples(index=False)
-            ]
-            return pd.concat(outs, ignore_index=True) if outs else _empty()
-
-        return (
-            self.shard_images.groupBy("shard")
-            .cogroup(union_df.groupBy("shard"))
-            .applyInPandas(run_co, schema)
-            .collect()
-        )
+        return self.shard_images.mapInPandas(run_direct, schema).collect()
 
     # --- query API ---
 
@@ -961,10 +719,10 @@ class SearchEngine:
     def top_k_many(
         self, queries: list[str], with_positions: bool = False
     ) -> list[list[tuple]]:
-        """Answer a batch of queries in the same two jobs as one query.
+        """Answer a batch of queries on the same tier as one query.
 
         The union of every query's terms is fetched once, and one pass over
-        the cached shard images evaluates all queries per shard — the Spark
+        each shard's image evaluates all queries on that shard — the Spark
         analog of the reference coordinator multiplexing concurrent queries
         over resident shards (QueryCoordinator.cpp). A term payload that is
         a superset of one query's terms cannot change its result: absent
@@ -1092,17 +850,11 @@ class SearchEngine:
             st = stats.get(shard_id)
             wstats: dict = {}
             if st is not None and pl and pl["P"]:
-                docmap = docmap_img
                 base = shard_id * shard_size
-                if isinstance(docmap, dict) and docmap.get("v") == 2:
-                    body_lens = dict(zip(
-                        docmap["local_ids"].tolist(),
-                        docmap["body_lens"].tolist(),
-                    ))
-                else:
-                    body_lens = {
-                        doc_id - base: meta[2] for doc_id, meta in docmap.items()
-                    }
+                body_lens = dict(zip(
+                    docmap_img["local_ids"].tolist(),
+                    docmap_img["body_lens"].tolist(),
+                ))
                 term_blocks = _payload_blocks(pl["P"])
                 scale = tfn_scales.get(shard_id)
                 if scale:
@@ -1166,41 +918,44 @@ class SearchEngine:
     ) -> dict[int, dict[str, list[int]]]:
         """Per-hit-docid {term: body positions} via ONE pruned positions
         fetch for the query's terms (VERDICT r04 #6): the resident term
-        store when available, else the LIMIT-capped pruned union scan,
-        collected as Arrow (a one-job plan: local limits on every
-        partition, then a single-partition merge).
-        Returns {} when the payload would be oversized (head terms) — the
-        caller degrades to the substring stage, exactly the positions-less
-        behavior. k hit docs means the decode work is one bounded pass
-        over the query terms' blocks; dead locals cannot collide with
-        hits (tombstoned ids are never reused — docid_watermark).
+        store when available, else ``_read_shard_payload`` for the hit
+        shards only, after a ``term``-column row count across all shards.
+        Returns {} when the terms' position rows exceed
+        ``POSITION_ROW_CAP`` (head terms) — the caller degrades to the
+        substring stage, exactly the positions-less behavior. k hit docs
+        means the decode work is one bounded pass over the query terms'
+        blocks; dead locals cannot collide with hits (tombstoned ids are
+        never reused — docid_watermark).
 
         Snippet assembly is a DRIVER-side serving API by design (the doc
         text fetch already collects the top-k rows), so unlike the match
-        path this fetch stays a capped collect even under
-        ``max_payload_rows=0`` — the hard row cap bounds driver bytes at
+        path this fetch runs in the driver on both tiers; the row count
+        comes before any payload read, so the cap bounds driver bytes at
         X-row granularity (one row per (term, shard, salt) group of up to
-        SALT_RANGE docs' position lists — the posting-calibrated 512
-        floor under-guarded by ~256x, code-review r5), and the resident
-        store is used whenever it is loaded."""
+        SALT_RANGE docs' position lists)."""
         if not terms or not hit_ids:
             return {}
         from .codec import decode_position_block
 
         shard_size = self.meta["shard_size"]
-        cap = max(self.max_payload_rows // 8192, 64)
-        if self._driver_store is not None:
-            shards, rows = self._driver_store.rows("X", terms)
-        else:
-            tbl = self._blocks_df(set(), terms).limit(cap + 1).toArrow()
-            shards = tbl.column("shard").to_pylist()
-            rows = _payload_tuples("X", lambda c: tbl.column(c).to_pylist())
-        if len(rows) > cap:
-            return {}
         want_by_shard: dict[int, dict[int, int]] = {}
         for gid in hit_ids:
             s = gid // shard_size
             want_by_shard.setdefault(s, {})[gid - s * shard_size] = gid
+        nb = self.meta["num_buckets"]
+        if self._driver_store is not None:
+            shards, rows = self._driver_store.rows("X", terms)
+            if len(rows) > POSITION_ROW_CAP:
+                return {}
+        elif _count_rows(self.index_dir, "X", terms, nb) > POSITION_ROW_CAP:
+            return {}
+        else:
+            shards, rows = [], []
+            for s in sorted(want_by_shard):
+                xs = _read_shard_payload(
+                    self.index_dir, s, (), terms, (), nb)["X"]
+                shards += [s] * len(xs)
+                rows += xs
         by_key: dict[tuple, list] = {}
         for s, (t, salt, fd, de, fe, ce, pe) in zip(shards, rows):
             if s in want_by_shard:
@@ -1544,23 +1299,8 @@ def _build_shard(
                 plists,
             )
 
-    if isinstance(docmap, dict) and docmap.get("v") == 2:
-        shard.doc_cols = _docmap_cols(docmap)
-        lids = docmap["local_ids"]
-        # == doc_count on a clean index; > it when tombstoned holes exist
-        shard.docid_space = int(lids[-1]) + 1 if len(lids) else 0
-        return shard
-    # legacy (pre-r3) dict-of-tuples image keyed by GLOBAL doc id
-    base = shard.base_doc_id
-    for doc_id, ent in docmap.items():
-        url, title, body_len, title_len, url_len, desc_len, pagerank = ent[:7]
-        local = doc_id - base
-        shard.doc_map[local] = DocMeta(
-            doc_id=local, url=url, title=title, body_len=body_len,
-            title_len=title_len, url_len=url_len, desc_len=desc_len,
-            pagerank=pagerank,
-            static_rank=ent[7] if len(ent) > 7 else None,
-        )
-    if shard.doc_map:
-        shard.docid_space = max(shard.doc_map) + 1
+    shard.doc_cols = _docmap_cols(docmap)
+    lids = docmap["local_ids"]
+    # == doc_count on a clean index; > it when tombstoned holes exist
+    shard.docid_space = int(lids[-1]) + 1 if len(lids) else 0
     return shard

@@ -8,8 +8,8 @@ QueryEngine.h:46-73 (drive loop).
 
 This module is deliberately *not* Spark code: it is the sequential per-shard
 evaluation the reference runs one-thread-per-shard. The Spark engine runs it
-inside ``applyInPandas`` with partitions-as-shards; the oracle runs it
-directly. Faithfully reproduced quirks:
+in the driver or inside ``mapInPandas`` with partitions-as-shards; the
+oracle runs it directly. Faithfully reproduced quirks:
 
 * ``TermQuote``/``TermPhrase`` pump their inner ``TermAND`` with ``moveNext``
   *before* inspecting positions, so the first AND doc is never checked; and

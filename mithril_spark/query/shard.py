@@ -6,8 +6,9 @@ empty), QueryManager.cpp:44-114 (top-k + sorted-list merge), :249-358
 (position pointers + HandleRanking incl. early-exit heuristics),
 ISRFactory.cpp:19-30 (term -> ISR normalization).
 
-This is the sequential per-shard core: the Spark engine executes it inside
-``applyInPandas`` (one group per shard) and the oracle executes it directly.
+This is the sequential per-shard core: the Spark engine executes it in the
+driver (RESIDENT tier) or inside ``mapInPandas`` (DIRECT tier, one task row
+per shard), and the oracle executes it directly.
 The soft-timeout stop flag of the reference is intentionally not modelled
 (it is wall-clock-dependent and therefore non-deterministic); everything
 else — including the 30k/25k/100k short-circuit heuristics — is transcribed.

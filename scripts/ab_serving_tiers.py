@@ -1,20 +1,38 @@
 """A/B: serving tier x shard count at a fixed corpus size (dev tool).
 
 The resident tier evaluates shards serially in the driver (a measured
-thread-pool variant was 0.4-0.7x — GIL-bound); the distributed tiers rank
+thread-pool variant was 0.4-0.7x — GIL-bound); the DIRECT tier ranks
 shards in parallel worker PROCESSES. This script measures where the
 crossover sits and whether shard counts that grow with the corpus keep
 per-query latency bounded on the distributed path.
 
+Engines per shard count:
+- ``resident``: the default budget (the whole index in the driver);
+- ``distributed``: ``driver_serve_bytes=0`` (every query DIRECT);
+- ``docmap_budget``: ``driver_serve_bytes`` = the index's on-disk doc_map
+  bytes — the budget that fits the doc map but not the term tables;
+- any ``--tier NAME=JSON`` given: extra ``SearchEngine`` kwargs, so the
+  same script can time engine variants of other revisions of the code.
+
+Per engine and rep (engines alternate within a rep), it times sequential
+``top_k`` over QUERIES, one batched ``top_k_many(QUERIES)``,
+``bm25_topk(k=10)`` over WAND_QUERIES and ``top_k`` of HEAD_QUERY, and
+checks every answer against the first engine's at that shard count.
+
+The Spark session gets every core of the host, up to 32.
+
 Usage: python scripts/ab_serving_tiers.py [n_pages] [reps] [shard_counts]
-e.g.   python scripts/ab_serving_tiers.py 100000 3 4,20
+           [--tier NAME=JSON ...]
+e.g.   python scripts/ab_serving_tiers.py 4000 5 8
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import shutil
+import statistics
 import sys
 import time
 
@@ -23,87 +41,113 @@ sys.path.insert(0, ROOT)
 
 QUERIES = ["search engine", "title:engine", "spark shuffle partition",
            "granite OR marble", "NOT quartz"]
+WAND_QUERIES = ["search engine", "granite quartz marble", "the and of"]
+# the generated corpus's highest-df terms (stopwords are not indexed)
+HEAD_QUERY = "engine OR text OR anchor"
+
+MODES = ("seq", "batch", "wand", "head")
+
+
+def _timed(fn):
+    t0 = time.perf_counter()
+    out = fn()
+    return out, time.perf_counter() - t0
+
+
+def _run(e, mode):
+    """(answer, seconds per query) of one timed step."""
+    if mode == "seq":
+        res, dt = _timed(lambda: [e.top_k(q) for q in QUERIES])
+        return res, dt / len(QUERIES)
+    if mode == "batch":
+        res, dt = _timed(lambda: e.top_k_many(QUERIES))
+        return res, dt / len(QUERIES)
+    if mode == "wand":
+        res, dt = _timed(lambda: [e.bm25_topk(q, k=10) for q in WAND_QUERIES])
+        return res, dt / len(WAND_QUERIES)
+    return _timed(lambda: e.top_k(HEAD_QUERY))
 
 
 def main() -> None:
-    n_pages = int(sys.argv[1]) if len(sys.argv) > 1 else 100_000
-    reps = int(sys.argv[2]) if len(sys.argv) > 2 else 3
-    shard_counts = [int(x) for x in (
-        sys.argv[3] if len(sys.argv) > 3 else "4,20").split(",")]
+    ap = argparse.ArgumentParser()
+    ap.add_argument("n_pages", nargs="?", type=int, default=100_000)
+    ap.add_argument("reps", nargs="?", type=int, default=3)
+    ap.add_argument("shard_counts", nargs="?", default="4,20")
+    ap.add_argument("--tier", action="append", default=[],
+                    metavar="NAME=JSON", help="extra engine: SearchEngine "
+                    "kwargs as a JSON object")
+    args = ap.parse_args()
+    shard_counts = [int(x) for x in args.shard_counts.split(",")]
+    extra = {}
+    for spec in args.tier:
+        name, _, kw = spec.partition("=")
+        extra[name] = json.loads(kw)
 
-    from mithril_spark.engine import SearchEngine
+    from mithril_spark.engine import SearchEngine, _dir_parquet_bytes
     from mithril_spark.fixtures import generate_pages_df
     from mithril_spark.indexer import build_index
     from mithril_spark.session import get_spark
 
-    spark = get_spark(cores=32, app_name="mithril-ab-tiers")
+    cores = min(32, os.cpu_count() or 1)
+    spark = get_spark(cores=cores, app_name="mithril-ab-tiers")
     spark.sparkContext.setLogLevel("ERROR")
 
     engines: dict[tuple, SearchEngine] = {}
     for ns in shard_counts:
-        idx = f"/tmp/mithril_ab_idx_{n_pages}_{ns}"
+        idx = f"/tmp/mithril_ab_idx_{args.n_pages}_{ns}"
         if not os.path.exists(os.path.join(idx, "index_meta.json")):
             shutil.rmtree(idx, ignore_errors=True)
             df = generate_pages_df(
-                spark, n_pages, seed=42).repartition(16).cache()
+                spark, args.n_pages, seed=42).repartition(16).cache()
             df.count()
             build_index(df, idx, num_shards=ns, force=True)
-        engines[(ns, "resident")] = SearchEngine(spark, idx)
-        engines[(ns, "distributed")] = SearchEngine(
-            spark, idx, driver_serve_bytes=0)
-        # cogroup: blocks never transit the driver (ONE job per query,
-        # payload shuffled to the shard images executor-side)
-        engines[(ns, "cogroup")] = SearchEngine(
-            spark, idx, driver_serve_bytes=0, max_payload_rows=0)
+        dm_bytes = _dir_parquet_bytes(os.path.join(idx, "doc_map"))
+        tiers = {"resident": {}, "distributed": {"driver_serve_bytes": 0},
+                 "docmap_budget": {"driver_serve_bytes": dm_bytes}, **extra}
+        for tier, kw in tiers.items():
+            engines[(ns, tier)] = SearchEngine(spark, idx, **kw)
 
-    for (ns, tier), e in engines.items():
-        if tier != "resident":
-            # warm to STEADY STATE: with W workers and S shards there are
-            # W*S (worker, shard) first-hit image loads (each paying the
-            # doc-only ranking precompute); loop until a full sweep stops
-            # loading (same protocol as bench.py's churn step)
-            prev = e.image_load_stats()["loads"]
-            for _ in range(40):
-                for q in QUERIES:
-                    e.top_k(q)
-                cur = e.image_load_stats()["loads"]
-                if cur - prev <= 1:
-                    break
-                prev = cur
-        else:
-            e.top_k(QUERIES[0])  # warm driver images
+    for e in engines.values():
+        # warm to STEADY STATE: with W workers and S shards there are W*S
+        # (worker, shard) first-hit image loads (each paying the doc-only
+        # ranking precompute); loop until a full sweep stops loading (same
+        # protocol as bench.py's churn step). A resident engine loads none.
+        prev = e.image_load_stats()["loads"]
+        for _ in range(40):
+            for q in QUERIES + [HEAD_QUERY]:
+                e.top_k(q)
+            cur = e.image_load_stats()["loads"]
+            if cur - prev <= 1:
+                break
+            prev = cur
 
     # identity only WITHIN a shard count: per-shard BM25 stats (and global
     # docids) legitimately differ across shard layouts, reference semantics
-    base: dict[int, list] = {}
-    times: dict[tuple, list[float]] = {k: [] for k in engines}
-    for _ in range(reps):
-        for key, e in engines.items():  # alternating (tenancy protocol)
-            t0 = time.time()
-            res = [e.top_k(q) for q in QUERIES]
-            times[key].append((time.time() - t0) / len(QUERIES))
-            if key[0] not in base:
-                base[key[0]] = res
-            else:
-                assert res == base[key[0]], f"rank mismatch on {key}"
-    # batched serving (top_k_many: N queries in the same 2 jobs) — the
-    # distributed tier's throughput story; results equal sequential
-    batch: dict[tuple, list[float]] = {k: [] for k in engines}
-    for _ in range(reps):
-        for key, e in engines.items():
-            t0 = time.time()
-            res = e.top_k_many(QUERIES)
-            batch[key].append((time.time() - t0) / len(QUERIES))
-            assert res == base[key[0]], f"batch mismatch on {key}"
+    base: dict[tuple, object] = {}
+    times: dict[tuple, dict[str, list[float]]] = {
+        k: {m: [] for m in MODES} for k in engines}
+    for _ in range(args.reps):
+        for mode in MODES:
+            for key, e in engines.items():  # alternating (tenancy protocol)
+                res, dt = _run(e, mode)
+                times[key][mode].append(dt)
+                # a batch answers the same queries as the sequential run
+                ref = (key[0], "seq" if mode == "batch" else mode)
+                assert res == base.setdefault(ref, res), \
+                    f"{mode} mismatch on {key}"
     out = {}
-    for key, ts in times.items():
-        ts = [round(t, 4) for t in ts]
-        bs = [round(t, 4) for t in batch[key]]
+    for key, per_mode in times.items():
         label = f"{key[0]}sh/{key[1]}"
-        out[label] = {"min_s_per_q": min(ts), "raw": ts,
-                      "batch_min_s_per_q": min(bs), "batch_raw": bs}
-        print(f"{label:18s} s/query min={min(ts)}  batch={min(bs)}  raw={ts}")
-    print(json.dumps({"n_pages": n_pages, "tiers": out}))
+        out[label] = {
+            f"{m}_ms": {"median": round(1e3 * statistics.median(ts), 1),
+                        "min": round(1e3 * min(ts), 1),
+                        "raw": [round(1e3 * t, 1) for t in ts]}
+            for m, ts in per_mode.items()
+        }
+        print(f"{label:24s} " + "  ".join(
+            f"{m}={out[label][f'{m}_ms']['median']}ms" for m in MODES))
+    print(json.dumps({"n_pages": args.n_pages, "cores": cores,
+                      "reps": args.reps, "tiers": out}))
 
 
 if __name__ == "__main__":

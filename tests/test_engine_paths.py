@@ -1,9 +1,11 @@
-"""Executor-side (cogroup) query payload path == driver-collect path.
+"""The two serving tiers agree: DIRECT (one mapInPandas job, per-task
+pyarrow payload reads) == RESIDENT (driver term store + images) == oracle.
 
-VERDICT r01 #1: with ``max_payload_rows=0`` every query is forced onto the
-cogroup path where posting/position blocks never transit the driver; rank
-identity with the oracle must hold on the full fixture query set at 1/2/3
-shards, and the WAND + matches APIs must agree with the driver path.
+``driver_serve_bytes=0`` forces every query onto the DIRECT tier, where
+posting/position blocks never transit the driver; rank identity with the
+oracle must hold on the full fixture query set at 1/2/3 shards, and the
+WAND, matches, positions and snippet APIs must agree with the resident
+tier. A resident query whose payload is over the row cap is served DIRECT.
 """
 
 import shutil
@@ -36,10 +38,13 @@ def _index(spark, corpus, tmp_path_factory, shards):
 @pytest.mark.parametrize("shards", [1, 2, 3])
 def test_cogroup_path_rank_identity(spark, corpus, oracle_pages,
                                     tmp_path_factory, shards):
+    """The executor-side payload path (formerly the cogroup tier, now
+    DIRECT: posting/position blocks never transit the driver) stays
+    rank-identical to the oracle on the full fixture query set."""
     from mithril_spark.engine import SearchEngine
 
     path = _index(spark, corpus, tmp_path_factory, shards)
-    engine = SearchEngine(spark, path, max_payload_rows=0)  # force cogroup
+    engine = SearchEngine(spark, path, driver_serve_bytes=0)
     oracle = OracleIndex.build(oracle_pages, num_shards=shards)
     for q in QUERY_SET:
         assert engine.top_k(q) == oracle.top_k(q), (shards, q)
@@ -48,10 +53,10 @@ def test_cogroup_path_rank_identity(spark, corpus, oracle_pages,
 @pytest.mark.parametrize("shards", [1, 3])
 def test_distributed_collect_path_rank_identity(spark, corpus, oracle_pages,
                                                 tmp_path_factory, shards):
-    """driver_serve_bytes=0 disables the resident fast path: the DIRECT
-    worker-image tier (r06: one mapInPandas job, per-task pyarrow payload
-    reads — the at-scale default) must stay rank-identical to the oracle,
-    and its WAND/snippets APIs must agree with the resident path."""
+    """driver_serve_bytes=0 disables the resident tier: the DIRECT tier
+    (one mapInPandas job, per-task pyarrow payload reads — the at-scale
+    default) must stay rank-identical to the oracle, and its
+    WAND/snippets APIs must agree with the resident tier."""
     from mithril_spark.engine import SearchEngine
 
     path = _index(spark, corpus, tmp_path_factory, shards)
@@ -65,29 +70,6 @@ def test_distributed_collect_path_rank_identity(spark, corpus, oracle_pages,
         assert engine.bm25_topk(q, k=5) == resident.bm25_topk(q, k=5), q
         assert engine.top_k_with_snippets(q) == \
             resident.top_k_with_snippets(q), q
-
-
-def test_collect_tier_rank_identity(spark, corpus, oracle_pages,
-                                    tmp_path_factory):
-    """A budget that fits the doc map but not the term tables keeps the
-    images driver-resident without the term store: each query's payload
-    comes from one LIMIT-capped union collect, evaluated in-driver, and
-    must stay rank-identical to the oracle and WAND-identical to the
-    resident engine."""
-    import os
-
-    from mithril_spark.engine import SearchEngine, _dir_parquet_bytes
-
-    path = _index(spark, corpus, tmp_path_factory, 2)
-    budget = _dir_parquet_bytes(os.path.join(path, "doc_map"))
-    engine = SearchEngine(spark, path, driver_serve_bytes=budget)
-    assert engine._driver_images is not None and engine._driver_store is None
-    oracle = OracleIndex.build(oracle_pages, num_shards=2)
-    resident = SearchEngine(spark, path)
-    for q in QUERY_SET:
-        assert engine.top_k(q) == oracle.top_k(q), q
-    for q in ["search engine", "granite OR marble", "the and of"]:
-        assert engine.bm25_topk(q, k=5) == resident.bm25_topk(q, k=5), q
 
 
 def test_worker_image_cache_is_lru(tmp_path, monkeypatch):
@@ -131,16 +113,46 @@ def test_worker_image_cache_is_lru(tmp_path, monkeypatch):
     assert engine._IMAGE_LOADS == 3
 
 
+def _spark_payload(spark, path, pt, xt, dt) -> dict[int, dict[str, set]]:
+    """Independent reference reader: plain Spark scans of the three term
+    tables filtered by ``term.isin``, as payload tuple sets per shard."""
+    from pyspark.sql import functions as F
+
+    out: dict[int, dict[str, set]] = {}
+
+    def scan(table, terms):
+        return spark.read.parquet(f"{path}/{table}").filter(
+            F.col("term").isin(sorted(terms))).collect()
+
+    def add(r, kind, row):
+        out.setdefault(int(r["shard"]), {"P": set(), "X": set(), "D": set()}
+                       )[kind].add(row)
+
+    for r in scan("postings", pt):
+        add(r, "P", (r["term"], int(r["salt"]), int(r["block_id"]),
+                     int(r["doc_count"]), int(r["first_doc_id"]),
+                     int(r["last_doc_id"]), int(r["max_freq"]),
+                     None if r["max_tfn"] is None else float(r["max_tfn"]),
+                     bytes(r["doc_ids_enc"]), bytes(r["freqs_enc"])))
+    for r in scan("positions", xt):
+        add(r, "X", (r["term"], int(r["salt"]), int(r["first_doc_id"]),
+                     bytes(r["doc_ids_enc"]), bytes(r["flags_enc"]),
+                     bytes(r["pos_counts_enc"]), bytes(r["positions_enc"])))
+    for r in scan("term_dict", dt):
+        add(r, "D", (r["term"], int(r["df"])))
+    return out
+
+
 def test_direct_payload_read_equals_union_scan(spark, corpus,
                                                tmp_path_factory):
-    """The three payload readers agree: the Spark pruned-union scan, the
-    direct tier's per-task pyarrow read (_read_shard_payload) and the
+    """The two payload readers agree with an independent Spark read: the
+    DIRECT tier's per-task pyarrow read (_read_shard_payload) and the
     resident Arrow term store (_payload_from_store) must yield EXACTLY the
-    same payload tuples per shard for the same terms, including a term
-    absent from the index (the e2e rank-identity tests would also catch a
-    divergence, but only if it flips a top-50). _hit_positions must also
-    return the same positions from the resident store as from the capped
-    union collect."""
+    same payload tuples per shard as plain ``term.isin`` scans of the
+    parquet tables, including for a term absent from the index (the e2e
+    rank-identity tests would also catch a divergence, but only if it
+    flips a top-50). _hit_positions must also return the same positions
+    from the resident store as from the DIRECT reads."""
     from mithril_spark.engine import SearchEngine, _read_shard_payload
 
     path = _index(spark, corpus, tmp_path_factory, 3)
@@ -152,24 +164,7 @@ def test_direct_payload_read_equals_union_scan(spark, corpus,
     pt = frozenset({"search", "engine", "granite", "thermite", absent})
     xt = frozenset({"search", "engine", absent})
     dt = frozenset({"search", "engine", "granite", absent})
-    rows = e._blocks_df(pt, xt, dt).collect()
-    by_shard: dict[int, dict[str, set]] = {}
-    for r in rows:
-        pl = by_shard.setdefault(int(r["shard"]),
-                                 {"P": set(), "X": set(), "D": set()})
-        if r["kind"] == "P":
-            pl["P"].add((r["term"], int(r["salt"]), int(r["block_id"]),
-                         int(r["doc_count"]), int(r["first_doc_id"]),
-                         int(r["last_doc_id"]), int(r["max_freq"]),
-                         None if r["max_tfn"] is None else float(r["max_tfn"]),
-                         bytes(r["doc_ids_enc"]), bytes(r["freqs_enc"])))
-        elif r["kind"] == "X":
-            pl["X"].add((r["term"], int(r["salt"]), int(r["first_doc_id"]),
-                         bytes(r["doc_ids_enc"]), bytes(r["flags_enc"]),
-                         bytes(r["pos_counts_enc"]),
-                         bytes(r["positions_enc"])))
-        else:
-            pl["D"].add((r["term"], int(r["doc_count"])))
+    by_shard = _spark_payload(spark, path, pt, xt, dt)
     assert by_shard, "fixture terms matched nothing"
     stored, n_rows = resident._payload_from_store(pt, xt, dt)
     assert n_rows == sum(len(pl["P"]) + len(pl["X"])
@@ -221,31 +216,71 @@ def test_image_load_stats_plumbing(spark, corpus, tmp_path_factory):
     assert delta <= 3, (st2, st3)  # <= n_shards (one replaced worker)
 
 
-def test_cogroup_matches_and_wand_agree_with_driver_path(
+def test_direct_matches_and_wand_agree_with_resident_path(
     spark, corpus, oracle_pages, tmp_path_factory
 ):
     from mithril_spark.engine import SearchEngine
 
     path = _index(spark, corpus, tmp_path_factory, 2)
-    co = SearchEngine(spark, path, max_payload_rows=0)
-    drv = SearchEngine(spark, path)  # default cap -> driver collect
+    direct = SearchEngine(spark, path, driver_serve_bytes=0)
+    drv = SearchEngine(spark, path)  # resident term store + images
     for q in ["search engine", "granite OR marble", "index NOT (spark OR engine)",
               '"search engine"', "thermite"]:
-        assert co.matches(q) == drv.matches(q), q
+        assert direct.matches(q) == drv.matches(q), q
     for q, k in [("search engine", 10), ("granite quartz marble", 5),
                  ("the and of", 5)]:
-        assert co.bm25_topk(q, k=k) == drv.bm25_topk(q, k=k), q
+        assert direct.bm25_topk(q, k=k) == drv.bm25_topk(q, k=k), q
     # per-hit positions + snippets must be payload-path-independent too
     for q in ["search engine", "granite OR marble"]:
-        assert co.top_k_many([q], with_positions=True) == \
+        assert direct.top_k_many([q], with_positions=True) == \
             drv.top_k_many([q], with_positions=True), q
-        assert co.top_k_with_snippets(q) == drv.top_k_with_snippets(q), q
+        assert direct.top_k_with_snippets(q) == drv.top_k_with_snippets(q), q
         # WAND snippets (positions recovered via _hit_positions) must be
         # identical whether the positions payload comes from the resident
-        # store (drv) or the pruned collect (co, max_payload_rows=0 makes
-        # it degrade to substring only if oversized — not here)
-        assert co.bm25_topk_with_snippets(q, k=5) == \
+        # store (drv) or the DIRECT reads of the hit shards (direct)
+        assert direct.bm25_topk_with_snippets(q, k=5) == \
             drv.bm25_topk_with_snippets(q, k=5), q
+
+
+def test_oversized_resident_payload_serves_direct(
+    spark, corpus, oracle_pages, tmp_path_factory, monkeypatch
+):
+    """A resident engine whose query payload is over the row cap (head
+    terms) serves it on the DIRECT tier: exactly one Spark job per query,
+    rank-identical to the oracle and equal to the resident answers. With
+    the cap at 0 every query that fetches any row is over it."""
+    from mithril_spark import engine as engine_mod
+
+    path = _index(spark, corpus, tmp_path_factory, 2)
+    e = engine_mod.SearchEngine(spark, path)
+    assert e._driver_store is not None
+    oracle = OracleIndex.build(oracle_pages, num_shards=2)
+    ranked = ["search engine", "granite OR marble", "NOT quartz",
+              "title:engine"]
+    wand = ["search engine", "granite quartz marble", "marble"]
+    matched = ["search engine", "index NOT (spark OR engine)", "thermite"]
+    want_wand = {q: e.bm25_topk(q, k=5) for q in wand}
+    want_matches = {q: e.matches(q) for q in matched}
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def one_job(i, fn, *args, **kwargs):
+        group = f"oversized-direct-{i}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn(*args, **kwargs)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert len(tracker.getJobIdsForGroup(group)) == 1, (fn, args)
+        return out
+
+    monkeypatch.setattr(engine_mod, "PAYLOAD_ROW_CAP", 0)
+    calls = ([(e.top_k, (q,), {}, oracle.top_k(q)) for q in ranked]
+             + [(e.bm25_topk, (q,), {"k": 5}, want_wand[q]) for q in wand]
+             + [(e.matches, (q,), {}, want_matches[q]) for q in matched])
+    for i, (fn, args, kwargs, want) in enumerate(calls):
+        assert one_job(i, fn, *args, **kwargs) == want, (fn, args)
 
 
 def test_docmap_token_covers_success_markers(tmp_path):
@@ -269,42 +304,3 @@ def test_docmap_token_covers_success_markers(tmp_path):
     (d / "pagerank" / "_SUCCESS").write_bytes(b"")
     t3 = _docmap_token(str(d))
     assert t3 != t2  # ...and the marker versions it AGAIN
-
-
-def test_one_pass_limit_scope_is_refcounted(spark):
-    """The overlapping-queries interleaving (code-review r5 #2): T1 enters
-    the scope, T2 enters, T1 exits — the conf must STILL be set for T2's
-    in-flight collect — then T2 exits and the original (unset) state comes
-    back. The old independent set/restore pairs stripped the setting at
-    T1's exit and pinned T1's snapshot ('10000') on the session forever at
-    T2's."""
-    from mithril_spark.engine import _one_pass_limit_scope
-
-    key = "spark.sql.limit.initialNumPartitions"
-    prev = spark.conf.get(key, None)
-    if prev is not None:
-        spark.conf.unset(key)
-    try:
-        s1, s2 = _one_pass_limit_scope(spark), _one_pass_limit_scope(spark)
-        s1.__enter__()
-        s2.__enter__()
-        s1.__exit__(None, None, None)
-        assert spark.conf.get(key, None) == "10000", \
-            "first exit must not strip the conf from the still-open scope"
-        s2.__exit__(None, None, None)
-        assert spark.conf.get(key, None) is None, \
-            "last exit must restore the pre-scope state, not a snapshot " \
-            "taken inside another scope"
-        # nesting on one thread behaves the same way
-        with _one_pass_limit_scope(spark):
-            with _one_pass_limit_scope(spark):
-                assert spark.conf.get(key, None) == "10000"
-            assert spark.conf.get(key, None) == "10000"
-        assert spark.conf.get(key, None) is None
-    finally:
-        # restore EITHER way: an assertion mid-scope must not leave the
-        # conf pinned on the session-scoped SparkSession for later tests
-        if prev is not None:
-            spark.conf.set(key, prev)
-        else:
-            spark.conf.unset(key)

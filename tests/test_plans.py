@@ -48,21 +48,56 @@ def small_index(spark, tmp_path_factory):
     return path
 
 
-def test_engine_scan_prunes_bucket_partitions(spark, small_index):
-    """A query's posting scan must hit only its terms' bucket directories
-    (the Spark analog of the reference's dictionary seek)."""
-    from mithril_spark.engine import SearchEngine
+def test_engine_scan_prunes_bucket_partitions(small_index, tmp_path):
+    """A query's payload read (engine._read_shard_payload, the one disk
+    reader behind the DIRECT tier and _hit_positions) and its row count
+    (engine._count_rows) must open only the query terms' bucket
+    directories — the analog of the reference's dictionary seek. In a
+    copy of the index, every OTHER bucket directory of each term table
+    gets a poison file of valid rows for the query term: a reader that
+    opens any of them returns those rows too."""
+    import json
+    import os
+
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from mithril_spark.engine import (
+        PAYLOAD_TABLES,
+        _count_rows,
+        _read_shard_payload,
+    )
     from mithril_spark.indexer import term_bucket
 
-    engine = SearchEngine(spark, small_index, cache_doc_map=False)
-    union = engine._blocks_df({"granite"}, set(), {"granite"})
-    plan = _plan(union)
-    bucket = term_bucket("granite", engine.meta["num_buckets"])
-    # partition pruning on bucket + predicate pushdown on term
-    assert "PartitionFilters" in plan
-    seg = plan.split("PartitionFilters")[1][:160]
-    assert str(bucket) in seg, seg
-    assert "PushedFilters" in plan and "term" in plan.split("PushedFilters")[1][:200]
+    idx = str(tmp_path / "i")
+    shutil.copytree(small_index, idx)
+    with open(os.path.join(idx, "index_meta.json")) as f:
+        nb = json.load(f)["num_buckets"]
+    term = {"granite"}
+    own = f"bucket={term_bucket('granite', nb)}"
+
+    def read_all():
+        return [_read_shard_payload(idx, s, term, term, term, nb)
+                for s in (0, 1)]
+
+    want = read_all()
+    for kind in ("P", "X", "D"):
+        assert any(pl[kind] for pl in want), kind
+    n_x = sum(len(pl["X"]) for pl in want)
+    for table in PAYLOAD_TABLES.values():
+        root = os.path.join(idx, table)
+        rows = pq.read_table(os.path.join(root, own))
+        rows = rows.filter(pc.equal(rows["term"], "granite"))
+        others = [d for d in os.listdir(root)
+                  if d.startswith("bucket=") and d != own]
+        assert others and rows.num_rows
+        for d in others:
+            pq.write_table(rows, os.path.join(root, d, "poison.parquet"))
+        # the poison is visible to a reader without bucket pruning
+        unpruned = pq.read_table(root, filters=[("term", "=", "granite")])
+        assert unpruned.num_rows == rows.num_rows * (1 + len(others))
+    assert read_all() == want
+    assert _count_rows(idx, "X", term, nb) == n_x
 
 
 def test_dedup_candidates_evaluate_sketch_once(spark):
