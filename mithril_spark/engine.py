@@ -87,61 +87,29 @@ def plan_terms(
     return posting_terms, position_terms, tokens
 
 
-def _image_dict(pdf: pd.DataFrame) -> dict:
-    """One shard's doc_map rows -> columnar image.
-
-    The payload is the column set of query/isr.py::DocMapCols — numpy
-    arrays for every numeric column (``to_numpy``, no per-row Python) and
-    flat lists for urls/titles. Replaces the r2 dict-of-tuples image built
-    via ``itertuples`` (VERDICT r02 #4): at 10M docs/shard the dict pickle
-    took minutes of Python and GBs; the columnar image builds in Arrow/numpy
-    time and serves ranking lookups with one ``searchsorted`` per batch.
+def _docmap_image(pdf: pd.DataFrame) -> DocMapCols:
+    """One shard's doc_map rows -> its columnar image (query/isr.py::
+    DocMapCols): numpy arrays for every numeric column (``to_numpy``, no
+    per-row Python), flat lists for urls/titles, and the doc-only ranking
+    precomputes DocMapCols derives from them. Replaces the r2
+    dict-of-tuples image built via ``itertuples`` (VERDICT r02 #4): at 10M
+    docs/shard the dict pickle took minutes of Python and GBs; the columnar
+    image builds in Arrow/numpy time and serves ranking lookups with one
+    ``searchsorted`` per batch.
     """
-    from .ranking import (
-        _ASCII_LOWER_STR,
-        ascii_lower,
-        contains_porn_keywords,
-        contains_porn_keywords_any,
-    )
-
     order = np.argsort(pdf["local_id"].to_numpy(), kind="stable")
     pdf = pdf.iloc[order]
-    n = len(pdf)
-    has_srank = "static_rank" in pdf.columns  # absent in pre-r2 indexes
-    titles = [[bytes(t) for t in tw] for tw in pdf["title"]]
-    urls = [bytes(u) for u in pdf["url"]]
-    # Doc-only ranking precomputes (pure functions of url/title), paid
-    # ONCE per cached image instead of per match per query: decoded +
-    # ascii-lowered urls, lowered title words/concat, porn-filter mask.
-    # handle_ranking consumes them through DocMapCols; the oracle path
-    # computes the same values inline — rank-identity gates both forms.
-    urls_dec = [u.decode("latin-1") for u in urls]
-    titles_low = [
-        [t.decode("latin-1").translate(_ASCII_LOWER_STR) for t in tw]
-        for tw in titles
-    ]
-    return {
-        "local_ids": pdf["local_id"].to_numpy(dtype=np.int64),
-        "urls": urls,
-        "titles": titles,
-        "title_counts": np.fromiter((len(tw) for tw in titles), np.int64, n),
-        "body_lens": pdf["body_len"].to_numpy(dtype=np.int64),
-        "title_lens": pdf["title_len"].to_numpy(dtype=np.int64),
-        "url_lens": pdf["url_len"].to_numpy(dtype=np.int64),
-        "desc_lens": pdf["desc_len"].to_numpy(dtype=np.int64),
-        "pageranks": pdf["pagerank"].to_numpy(dtype=np.float64),
-        "static_ranks": (
-            pdf["static_rank"].to_numpy(dtype=np.float64) if has_srank else None
-        ),
-        "urls_dec": urls_dec,
-        "url_str_lens": np.fromiter((len(u) for u in urls_dec), np.int64, n),
-        "urls_low": [ascii_lower(u) for u in urls_dec],
-        "titles_low": titles_low,
-        "title_concat_low": ["".join(tl) for tl in titles_low],
-        "porn_mask": np.fromiter(
-            (contains_porn_keywords_any(tw) or contains_porn_keywords(u)
-             for tw, u in zip(titles, urls)), bool, n),
-    }
+    return DocMapCols(
+        pdf["local_id"].to_numpy(dtype=np.int64),
+        [bytes(u) for u in pdf["url"]],
+        [[bytes(t) for t in tw] for tw in pdf["title"]],
+        pdf["body_len"].to_numpy(dtype=np.int64),
+        pdf["title_len"].to_numpy(dtype=np.int64),
+        pdf["url_len"].to_numpy(dtype=np.int64),
+        pdf["desc_len"].to_numpy(dtype=np.int64),
+        pdf["pagerank"].to_numpy(dtype=np.float64),
+        pdf["static_rank"].to_numpy(dtype=np.float64),
+    )
 
 
 def _docmap_token(index_dir: str) -> str:
@@ -176,15 +144,14 @@ def _docmap_token(index_dir: str) -> str:
 # not entry count: with shards ≫ workers many small images must coexist
 # per worker or every query reloads its shard's parquet (image churn).
 _IMAGE_CACHE: "collections.OrderedDict" = collections.OrderedDict()
-_IMAGE_CACHE_BUDGET = int(
-    os.environ.get("MITHRIL_IMAGE_CACHE_BYTES", str(512 << 20)))
+_IMAGE_CACHE_BUDGET = 512 << 20
 _IMAGE_LOADS = 0  # parquet loads in this worker (churn diagnostic)
 
-def _image_nbytes(img: dict) -> int:
+def _image_nbytes(img: DocMapCols) -> int:
     """Estimated resident bytes of one image (numpy + payload + overhead),
     including the doc-only ranking precompute lists."""
     n = 0
-    for v in img.values():
+    for v in (getattr(img, name) for name in DocMapCols.__slots__):
         if isinstance(v, np.ndarray):
             n += v.nbytes
         elif isinstance(v, list):
@@ -218,7 +185,7 @@ def _apply_pagerank_sidecar(pdf: pd.DataFrame, index_dir: str,
     return pdf.drop(columns=["_pr_side"])
 
 
-def _worker_image(index_dir: str, shard: int, token: str) -> dict:
+def _worker_image(index_dir: str, shard: int, token: str) -> DocMapCols:
     """Load (or fetch cached) one shard's doc-map image, keyed by the
     ENGINE's epoch token.
 
@@ -250,7 +217,7 @@ def _worker_image(index_dir: str, shard: int, token: str) -> dict:
     pdf = pq.read_table(path).to_pandas()
     if _docmap_token(index_dir) == token:
         pdf = _apply_pagerank_sidecar(pdf, index_dir, shard)
-    img = _image_dict(pdf)
+    img = _docmap_image(pdf)
     _IMAGE_LOADS += 1
     _IMAGE_CACHE[key] = (img, _image_nbytes(img))
     total = sum(b for _i, b in _IMAGE_CACHE.values())
@@ -258,20 +225,6 @@ def _worker_image(index_dir: str, shard: int, token: str) -> dict:
         _evicted, (_img, b) = _IMAGE_CACHE.popitem(last=False)
         total -= b
     return img
-
-
-def _docmap_cols(img: dict) -> DocMapCols:
-    return DocMapCols(
-        img["local_ids"], img["urls"], img["titles"], img["body_lens"],
-        img["title_lens"], img["url_lens"], img["desc_lens"],
-        img["pageranks"], img["static_ranks"],
-        title_counts=img.get("title_counts"),
-        urls_dec=img.get("urls_dec"), urls_low=img.get("urls_low"),
-        titles_low=img.get("titles_low"),
-        title_concat_low=img.get("title_concat_low"),
-        porn_mask=img.get("porn_mask"),
-        url_str_lens=img.get("url_str_lens"),
-    )
 
 
 # Estimated posting entries a resident query may gather in the driver. ~1M
@@ -296,35 +249,6 @@ POSITION_ROW_CAP = DEFAULT_MAX_PAYLOAD_ROWS // 8192
 # 7.86 MB for 4.22 MB at 20k (1.7-1.9x), so the budget sits well inside the
 # default 20g driver (session.py). 0 disables.
 DRIVER_IMAGE_BYTES = 128 << 20
-
-
-def _doc_text_dirs(index_dir: str) -> list[str]:
-    """doc_text sidecar generations in age order (base, then append-merge
-    deltas) — read them all, latest entry per url wins. Marker-less delta
-    dirs are aborted writes (merge crashed before the job commit):
-    invisible here, like indexer._doc_text_generations."""
-    out = []
-    base = os.path.join(index_dir, "doc_text")
-    if os.path.exists(os.path.join(base, "_SUCCESS")):
-        out.append(base)
-        out.extend(
-            os.path.join(index_dir, d)
-            for d in sorted(
-                e.name for e in os.scandir(index_dir)
-                if e.is_dir() and e.name.startswith("doc_text_delta_")
-                and os.path.exists(
-                    os.path.join(index_dir, e.name, "_SUCCESS"))
-            )
-        )
-    return out
-
-
-def _dir_parquet_bytes(path: str) -> int:
-    total = 0
-    for r, _dirs, files in os.walk(path):
-        total += sum(os.path.getsize(os.path.join(r, f))
-                     for f in files if f.endswith(".parquet"))
-    return total
 
 
 # Payload tuple layouts the shard_fns consume, per kind: P = posting
@@ -487,14 +411,19 @@ def _read_shard_payload(index_dir: str, shard: int, posting_terms,
 
 
 class SearchEngine:
-    def __init__(self, spark, index_dir: str, cache_doc_map: bool = True,
-                 pagerank_weight: float = 0.0,
+    def __init__(self, spark, index_dir: str, pagerank_weight: float = 0.0,
                  driver_serve_bytes: int | None = None):
+        from .indexer import (
+            TOMBSTONE_COMPACT_FRAC,
+            TOMBSTONE_COMPACT_MIN,
+            _dir_parquet_bytes,
+            read_index_meta,
+        )
+
         self.spark = spark
         self.index_dir = index_dir
         self.pagerank_weight = pagerank_weight
-        with open(os.path.join(index_dir, "index_meta.json")) as f:
-            self.meta = json.load(f)
+        self.meta = read_index_meta(index_dir)
         # plain scan handles on the term tables for callers that want them
         # as DataFrames; serving reads them with pyarrow (_TermStore,
         # _read_shard_payload), never through these
@@ -533,9 +462,8 @@ class SearchEngine:
                       "shard")
         if not shard_rows:
             self.shard_images = self.shard_images.filter("shard < 0")
-        if cache_doc_map:
-            self.shard_images = self.shard_images.persist()
-            self.shard_images.count()
+        self.shard_images = self.shard_images.persist()
+        self.shard_images.count()
         # Append-merge tombstones (indexer.py): sorted dead local docids
         # per shard, filtered out of every decoded posting/position stream
         # at shard build and out of every match list before ranking
@@ -558,11 +486,6 @@ class SearchEngine:
                 s: np.unique(np.asarray(v, dtype=np.int64))
                 for s, v in by_shard.items()
             }
-            from .indexer import (
-                TOMBSTONE_COMPACT_FRAC,
-                TOMBSTONE_COMPACT_MIN,
-            )
-
             n_tomb = sum(len(v) for v in self._tombstones.values())
             total = max(int(self.meta.get("total_docs", 0)), 1)
             if n_tomb >= max(TOMBSTONE_COMPACT_FRAC * total,
@@ -606,7 +529,7 @@ class SearchEngine:
                 if dead is not None and len(dead):
                     grp = grp[~grp["local_id"].isin(dead)]
                 grp = _apply_pagerank_sidecar(grp, index_dir, int(s))
-                self._driver_images[int(s)] = _image_dict(grp)
+                self._driver_images[int(s)] = _docmap_image(grp)
             self._driver_store = _TermStore(index_dir)
         # WAND soundness across append-mode segments (indexer.py): blocks
         # encoded before a shard's avg body length grew carry a too-small
@@ -852,8 +775,8 @@ class SearchEngine:
             if st is not None and pl and pl["P"]:
                 base = shard_id * shard_size
                 body_lens = dict(zip(
-                    docmap_img["local_ids"].tolist(),
-                    docmap_img["body_lens"].tolist(),
+                    docmap_img.local_ids.tolist(),
+                    docmap_img.body_lens.tolist(),
                 ))
                 term_blocks = _payload_blocks(pl["P"])
                 scale = tfn_scales.get(shard_id)
@@ -1056,8 +979,7 @@ class SearchEngine:
         url-sorted ``doc_text`` sidecar, so the hits are fetched with one
         pruned scan (url IN top-k reaches the parquet scan as pushed
         filters, and the url sort makes row-group min/max skipping
-        effective — tests/test_plans.py guards the plan shape). Indexes
-        built before the sidecar existed fall back to ``stage_raw``.
+        effective — tests/test_plans.py guards the plan shape).
 
         Snippet extraction follows generateSnippet's preference order: the
         hit's per-term body positions (carried on the result tuple exactly
@@ -1101,23 +1023,18 @@ class SearchEngine:
         both the base sidecar and a later ``doc_text_delta_*`` dir; each
         read is its own pruned IN-list scan, and later generations simply
         overwrite earlier entries in the tiny per-query dict — the LSM
-        read path, folded away by compact_index). Pre-sidecar indexes fall
-        back to stage_raw."""
+        read path, folded away by compact_index)."""
         from pyspark.sql import functions as F
 
-        dirs = _doc_text_dirs(self.index_dir)
-        if not dirs:
-            dirs = [os.path.join(self.index_dir, "stage_raw")]
+        from .indexer import _doc_text_generations
+
         by_url: dict[bytes, dict] = {}
-        for dpath in dirs:
-            df = self.spark.read.parquet(dpath)
-            cols = ["url", "title", "text"] + (
-                ["desc"] if "desc" in df.columns else [])
-            for r in df.filter(F.col("url").isin(urls)).select(*cols).collect():
+        for name in ["doc_text", *_doc_text_generations(self.index_dir)]:
+            df = self.spark.read.parquet(os.path.join(self.index_dir, name))
+            for r in (df.filter(F.col("url").isin(urls))
+                      .select("url", "title", "text", "desc").collect()):
                 by_url[bytes(r["url"])] = {
-                    "title": r["title"], "text": r["text"],
-                    "desc": r["desc"] if "desc" in cols else None,
-                }
+                    "title": r["title"], "text": r["text"], "desc": r["desc"]}
         return by_url
 
     def image_load_stats(self) -> dict:
@@ -1216,7 +1133,7 @@ def _build_shard(
     shard_size: int,
     st: dict,
     payload: dict | None,
-    docmap: dict,
+    docmap: DocMapCols,
     pagerank_weight: float = 0.0,
     tombstones: "np.ndarray | None" = None,
 ) -> ShardIndex:
@@ -1299,8 +1216,8 @@ def _build_shard(
                 plists,
             )
 
-    shard.doc_cols = _docmap_cols(docmap)
-    lids = docmap["local_ids"]
+    shard.doc_cols = docmap
+    lids = docmap.local_ids
     # == doc_count on a clean index; > it when tombstoned holes exist
     shard.docid_space = int(lids[-1]) + 1 if len(lids) else 0
     return shard

@@ -765,6 +765,39 @@ def _position_blocks(batches):
         yield _empty()
 
 
+class _PhaseRecorder:
+    """The ``build_metrics`` rows of one build, merge or compaction.
+    ``phase(name)`` opens a row stamped with its start offset; the caller
+    fills in ``ran``, its counters and ``finished`` (``elapsed()``), and
+    ``write`` persists the rows as the index's ``build_metrics`` table.
+    Rows may overlap: threaded phases stamp their own ``finished``."""
+
+    def __init__(self):
+        self.t_start = time.time()
+        self.phases: list[dict] = []
+
+    def elapsed(self) -> float:
+        return time.time() - self.t_start
+
+    def phase(self, name: str) -> dict:
+        self.phases.append({"phase": name, "started": self.elapsed()})
+        return self.phases[-1]
+
+    def write(self, spark: SparkSession, out_dir: str) -> None:
+        rows = spark.createDataFrame(
+            [(p["phase"], float(p["started"]), float(p.get("finished", 0.0)),
+              bool(p.get("ran", False)),
+              int(p.get("docs_tokenized", 0)),
+              int(p.get("postings_emitted", 0)),
+              int(p.get("posting_bytes_compressed", 0)))
+             for p in self.phases],
+            "phase string, started double, finished double, ran boolean, "
+            "docs_tokenized long, postings_emitted long, "
+            "bytes_compressed long",
+        )
+        _write_once(rows, os.path.join(out_dir, "build_metrics"), force=True)
+
+
 def build_index(
     pages: DataFrame,
     out_dir: str,
@@ -781,31 +814,26 @@ def build_index(
     ``_SUCCESS`` marker; re-running skips completed phases.
     """
     spark = pages.sparkSession
-    metrics: list[dict] = []
-    t_start = time.time()
-
-    def phase(name):
-        metrics.append({"phase": name, "started": time.time() - t_start})
-        return metrics[-1]
+    recorder = _PhaseRecorder()
 
     # --- Phase 1a: extraction (the expensive parse), checkpointed raw ---
     # Written BEFORE the range sort: repartitionByRange samples its child,
     # which would run the HTML parse twice if sorted directly.
     raw_path = os.path.join(out_dir, "stage_raw")
-    m = phase("extract")
+    m = recorder.phase("extract")
     if sort_partitions is None:
         sort_partitions = max(spark.sparkContext.defaultParallelism, 4)
     if dedupe and "html" in pages.columns:
         pages = dedupe_pages(pages)
     m["ran"] = _write_once(extract_docs(pages), raw_path, force=force)
-    m["finished"] = time.time() - t_start
+    m["finished"] = recorder.elapsed()
 
     stage = spark.read.parquet(raw_path)
     return _build_derived(
         spark, stage, out_dir, num_shards=num_shards,
         num_buckets=num_buckets, sort_partitions=sort_partitions,
         force=force, pagerank=pagerank,
-        metrics=metrics, phase=phase, t_start=t_start,
+        recorder=recorder,
         # this build derives from stage_raw ALONE: any older append-merge
         # generations are stale corpus now, not adopted state
         sweep_stage_deltas=True,
@@ -839,9 +867,7 @@ def _build_derived(
     sort_partitions: int,
     force: bool,
     pagerank: bool,
-    metrics: list,
-    phase,
-    t_start: float,
+    recorder: _PhaseRecorder,
     sweep_stage_deltas: bool = False,
 ) -> dict:
     """Phases 2+ of the build: everything derived from the parsed ``stage``
@@ -886,7 +912,7 @@ def _build_derived(
         # stage_raw is written in extraction order, where url min/max spans
         # everything and prunes nothing (VERDICT r02 #2). Depends only on
         # ``stage``, so it overlaps the whole id/doc_map/postings chain.
-        m_text = phase("doc_text")
+        m_text = recorder.phase("doc_text")
 
         def _run_doc_text():
             doc_text = stage.select("url", "title", "desc", "text")
@@ -896,7 +922,7 @@ def _build_derived(
                 os.path.join(out_dir, "doc_text"),
                 force=force,
             )
-            m_text["finished"] = time.time() - t_start
+            m_text["finished"] = recorder.elapsed()
 
         fut_text = pool.submit(_run_doc_text)
 
@@ -906,7 +932,7 @@ def _build_derived(
         # table. The heavy extracted rows never shuffle for id assignment; they
         # are joined against ids (broadcast when small, sort-merge/AQE at scale)
         # lazily in the downstream phases.
-        m = phase("assign_ids")
+        m = recorder.phase("assign_ids")
         ids_path = os.path.join(out_dir, "doc_ids")
         if force or not os.path.exists(os.path.join(ids_path, "_SUCCESS")):
             url_sorted = (
@@ -985,7 +1011,7 @@ def _build_derived(
         total_docs = meta_tmp["total_docs"]
         shard_size = meta_tmp["shard_size"]
         m["total_docs"] = total_docs
-        m["finished"] = time.time() - t_start
+        m["finished"] = recorder.elapsed()
 
         ids_df = spark.read.parquet(ids_path)
         # Broadcast the ids table while it comfortably fits executor memory —
@@ -1010,7 +1036,7 @@ def _build_derived(
         pagerank_col = F.lit(0.0).cast("float").alias("pagerank")
         docs_for_map = docs
         if pagerank and need_doc_map:
-            m = phase("pagerank")
+            m = recorder.phase("pagerank")
             pr = _stage_pagerank(stage)
             docs_for_map = docs.join(
                 pr.select(F.col("node").alias("url"),
@@ -1020,8 +1046,8 @@ def _build_derived(
             # doc_map stores float32, like the reference's pagerank binary
             pagerank_col = F.coalesce(F.col("_pr"), F.lit(0.0)).cast("float").alias("pagerank")
             m["ran"] = True
-            m["finished"] = time.time() - t_start
-        m = phase("doc_map")
+            m["finished"] = recorder.elapsed()
+        m = recorder.phase("doc_map")
         doc_map = docs_for_map.select(
             "shard", "doc_id", "local_id", "url", "title",
             "body_len", "title_len", "url_len", "desc_len", "static_rank",
@@ -1031,7 +1057,7 @@ def _build_derived(
         def _run_doc_map():
             m["ran"] = _write_once(doc_map, doc_map_path,
                                    partition_by=["shard"], force=force)
-            m["finished"] = time.time() - t_start
+            m["finished"] = recorder.elapsed()
 
         # doc_map is not read by the postings/positions chain — only
         # index_stats is (avg_body) — so its write overlaps the stats write
@@ -1071,8 +1097,8 @@ def _build_derived(
         # ``docs`` with <= sort_partitions tasks per stage, so neither alone
         # fills the executor; overlapping them hides the smaller (positions)
         # under the larger (postings) with identical per-table plans/bytes.
-        m_post = phase("postings")
-        m_pos = phase("positions")
+        m_post = recorder.phase("postings")
+        m_pos = recorder.phase("positions")
         # per-shard average body length for the tight per-block max-score bound
         avg_body = {
             int(r["shard"]): (int(r["total_body"]) / int(r["doc_count"])
@@ -1104,7 +1130,7 @@ def _build_derived(
             arrow_batch = int(spark.conf.get(
                 "spark.sql.execution.arrow.maxRecordsPerBatch", "10000"))
             m_post["emit_peak_rows_bound"] = arrow_batch + SALT_RANGE
-            m_post["finished"] = time.time() - t_start
+            m_post["finished"] = recorder.elapsed()
 
         def _run_positions():
             position_blocks = (
@@ -1123,7 +1149,7 @@ def _build_derived(
                 partition_by=["bucket"],
                 force=force,
             )
-            m_pos["finished"] = time.time() - t_start
+            m_pos["finished"] = recorder.elapsed()
 
         fut_post = pool.submit(_run_postings)
         fut_pos = pool.submit(_run_positions)
@@ -1132,8 +1158,8 @@ def _build_derived(
         # --- Phase 5: term dictionary (df / cf per shard) + lineage counters,
         # submitted concurrently as soon as the postings table lands — both are
         # small aggregations over it and need not wait for positions.
-        m_td = phase("term_dict")
-        m_cnt = phase("counters")
+        m_td = recorder.phase("term_dict")
+        m_cnt = recorder.phase("counters")
 
         def _run_term_dict():
             term_dict = (
@@ -1148,7 +1174,7 @@ def _build_derived(
                 term_dict, os.path.join(out_dir, "term_dict"),
                 partition_by=["bucket"], force=force,
             )
-            m_td["finished"] = time.time() - t_start
+            m_td["finished"] = recorder.elapsed()
 
         # per-partition lineage counters (north_rule: docs tokenized, postings
         # emitted, bytes compressed, logged to a metrics table)
@@ -1175,7 +1201,7 @@ def _build_derived(
             else:
                 m_cnt["ran"] = False
             m_cnt.update(counters)
-            m_cnt["finished"] = time.time() - t_start
+            m_cnt["finished"] = recorder.elapsed()
             return counters
 
         fut_td = pool.submit(_run_term_dict)
@@ -1257,19 +1283,33 @@ def _build_derived(
     os.makedirs(out_dir, exist_ok=True)
     with open(os.path.join(out_dir, "index_meta.json"), "w") as f:
         json.dump(meta, f, indent=2)
-    result = {"meta": meta, "phases": metrics, "wall_s": time.time() - t_start}
-    metrics_df = spark.createDataFrame(
-        [(mm["phase"], float(mm["started"]), float(mm.get("finished", 0.0)),
-          bool(mm.get("ran", False)),
-          int(mm.get("docs_tokenized", 0)), int(mm.get("postings_emitted", 0)),
-          int(mm.get("posting_bytes_compressed", 0)))
-         for mm in metrics],
-        "phase string, started double, finished double, ran boolean, "
-        "docs_tokenized long, postings_emitted long, bytes_compressed long",
-    )
-    _write_once(metrics_df, os.path.join(out_dir, "build_metrics"), force=True)
+    result = {"meta": meta, "phases": recorder.phases,
+              "wall_s": recorder.elapsed()}
+    recorder.write(spark, out_dir)
     _refresh_index_caches(spark, out_dir)
     return result
+
+
+# keys every index written by _build_derived carries; an index written
+# before them (pre-r5, and pre-r2 without doc_map.static_rank) lacks them
+INDEX_META_KEYS = ("stage_generations", "built_with_pagerank",
+                   "num_shards_base")
+
+
+def read_index_meta(index_dir: str) -> dict:
+    """``index_meta.json`` of an index, checked once at open: every reader
+    (SearchEngine, merge_index_delta, compact_index, compact_stage) takes
+    the format from here and assumes the current one, so an older index
+    fails with one clear error instead of per-field fallbacks."""
+    with open(os.path.join(index_dir, "index_meta.json")) as f:
+        meta = json.load(f)
+    missing = [k for k in INDEX_META_KEYS if k not in meta]
+    if missing:
+        raise ValueError(
+            f"index at {index_dir} predates the current index format "
+            f"(index_meta.json lacks {', '.join(missing)}): rebuild with "
+            "build_index")
+    return meta
 
 
 # --- incremental index maintenance (VERDICT r02 "what's missing" #3) ---
@@ -1342,28 +1382,13 @@ def read_stage(spark: SparkSession, index_dir: str) -> DataFrame:
     return survivors.unionByName(delta_resolved)
 
 
-def _index_has_pagerank(spark: SparkSession, index_dir: str,
-                        meta: dict) -> bool:
-    """Whether this index's doc_map carries real pagerank values.
-
-    ``built_with_pagerank`` records the last full build's choice; indexes
-    built before that flag existed (pre-r5) fall back to a LIMIT-1 probe
-    of the doc_map's pagerank column — cheap (pruned scan, first nonzero
-    row short-circuits) and exact (a pagerank-less build writes 0.0
-    everywhere). A refresh_pagerank sidecar overrides everything: it IS
-    real pagerank, regardless of what the last full build computed."""
+def _index_has_pagerank(index_dir: str, meta: dict) -> bool:
+    """Whether this index serves real pagerank values: the last full
+    build's ``built_with_pagerank`` choice, or a refresh_pagerank sidecar,
+    which IS real pagerank regardless of what that build computed."""
     if os.path.exists(os.path.join(index_dir, "pagerank", "_SUCCESS")):
         return True
-    flag = meta.get("built_with_pagerank")
-    if flag is not None:
-        return bool(flag)
-    dm = os.path.join(index_dir, "doc_map")
-    if not os.path.exists(os.path.join(dm, "_SUCCESS")):
-        return False
-    df = spark.read.parquet(dm)
-    if "pagerank" not in df.columns:
-        return False
-    return df.filter(F.col("pagerank") != 0.0).limit(1).count() > 0
+    return bool(meta["built_with_pagerank"])
 
 
 def _tombstones_df(spark: SparkSession, index_dir: str) -> DataFrame | None:
@@ -1566,57 +1591,50 @@ def merge_index_delta(
     if mode not in ("auto", "append", "recompact"):
         raise ValueError(f"unknown mode {mode!r}")
     spark = (new_pages if new_pages is not None else extracted).sparkSession
-    with open(os.path.join(index_dir, "index_meta.json")) as f:
-        meta = json.load(f)
+    meta = read_index_meta(index_dir)
     # Crash-consistency guard (code-review r5): a committed stage
     # generation the derived tables never adopted means a previous merge
     # died mid-append. Appending on top would permanently drop that
     # generation's docs from the served index (the new merge's docids/
     # tombstones/stats derive from tables that never saw it) — the CRASH
-    # CONTRACT's "do not re-run the merge" rule, made mechanical. Absent
-    # ledger (pre-r5 index) skips the check.
-    adopted = meta.get("stage_generations")
-    if adopted is not None:
-        gens = _stage_generations(index_dir)
-        committed = len(gens) - 1
-        # An unadopted COMMITTED generation with zero rows is debris, not
-        # a crash casualty: empty generations contribute nothing to the
-        # derived tables (which are a pure function of the resolved row
-        # set), so sweeping them is always safe. They arise from the
-        # no-op-merge crash window (an empty delta commits its stage dir
-        # before the zero-row early return can remove it) — without this
-        # sweep that window would brick every later merge behind a false
-        # crash-inconsistency error (code-review r5 #2). TAIL-ONLY by
-        # design: removing a MIDDLE generation would shrink
-        # len(_stage_generations) and make the next merge's
-        # stage_delta_{n_existing} name collide with a later committed
-        # generation, force-overwriting live corpus. An empty generation
-        # buried under a non-empty unadopted one stays put; compact_index
-        # (the prescribed redo for that state) folds it harmlessly.
-        while committed > int(adopted) and _dir_parquet_rows(gens[-1]) == 0:
-            import shutil
+    # CONTRACT's "do not re-run the merge" rule, made mechanical.
+    adopted = int(meta["stage_generations"])
+    gens = _stage_generations(index_dir)
+    committed = len(gens) - 1
+    # An unadopted COMMITTED generation with zero rows is debris, not
+    # a crash casualty: empty generations contribute nothing to the
+    # derived tables (which are a pure function of the resolved row
+    # set), so sweeping them is always safe. They arise from the
+    # no-op-merge crash window (an empty delta commits its stage dir
+    # before the zero-row early return can remove it) — without this
+    # sweep that window would brick every later merge behind a false
+    # crash-inconsistency error (code-review r5 #2). TAIL-ONLY by
+    # design: removing a MIDDLE generation would shrink
+    # len(_stage_generations) and make the next merge's
+    # stage_delta_{n_existing} name collide with a later committed
+    # generation, force-overwriting live corpus. An empty generation
+    # buried under a non-empty unadopted one stays put; compact_index
+    # (the prescribed redo for that state) folds it harmlessly.
+    while committed > adopted and _dir_parquet_rows(gens[-1]) == 0:
+        import shutil
 
-            shutil.rmtree(gens.pop(), ignore_errors=True)
-            committed -= 1
-        if committed != int(adopted):
-            raise RuntimeError(
-                f"index at {index_dir} is crash-inconsistent: {committed} "
-                f"committed stage generations but the derived tables "
-                f"adopted {adopted} — a previous merge crashed mid-append. "
-                "Run indexer.compact_index (the stage is the WAL; "
-                "compaction is the redo) before merging further deltas."
-            )
-    metrics: list[dict] = []
-    t_start = time.time()
+        shutil.rmtree(gens.pop(), ignore_errors=True)
+        committed -= 1
+    if committed != adopted:
+        raise RuntimeError(
+            f"index at {index_dir} is crash-inconsistent: {committed} "
+            f"committed stage generations but the derived tables "
+            f"adopted {adopted} — a previous merge crashed mid-append. "
+            "Run indexer.compact_index (the stage is the WAL; "
+            "compaction is the redo) before merging further deltas."
+        )
 
-    def phase(name):
-        metrics.append({"phase": name, "started": time.time() - t_start})
-        return metrics[-1]
+    recorder = _PhaseRecorder()
 
     if sort_partitions is None:
         sort_partitions = max(spark.sparkContext.defaultParallelism, 4)
 
-    m = phase("extract_delta")
+    m = recorder.phase("extract_delta")
     if extracted is not None:
         delta_rows = extracted
     else:
@@ -1635,15 +1653,15 @@ def merge_index_delta(
     _write_once(delta_rows, delta_path, force=True)
     delta_rows = spark.read.parquet(delta_path)
     m["ran"] = True
-    m["finished"] = time.time() - t_start
+    m["finished"] = recorder.elapsed()
 
     if mode == "append":
-        idx_pagerank = _index_has_pagerank(spark, index_dir, meta)
+        idx_pagerank = _index_has_pagerank(index_dir, meta)
         result = _append_delta_derived(
             spark, delta_rows, index_dir, meta,
             old_stage=old_stage,
             sort_partitions=sort_partitions,
-            metrics=metrics, phase=phase, t_start=t_start,
+            recorder=recorder,
             # the staleness warning is moot when this merge refreshes
             # the sidecar itself right after
             index_has_pagerank=idx_pagerank and not pagerank,
@@ -1684,13 +1702,13 @@ def merge_index_delta(
         # pagerank-bearing index must never silently zero the corpus's
         # scores (code-review r5 finding — only compact_index and the
         # auto-compaction guard enforced this before)
-        pagerank = _index_has_pagerank(spark, index_dir, meta)
+        pagerank = _index_has_pagerank(index_dir, meta)
     result = _build_derived(
         spark, stage, index_dir,
-        num_shards=int(meta.get("num_shards_base", meta["num_shards"])),
+        num_shards=int(meta["num_shards_base"]),
         num_buckets=meta["num_buckets"],
         sort_partitions=sort_partitions, force=True, pagerank=pagerank,
-        metrics=metrics, phase=phase, t_start=t_start,
+        recorder=recorder,
     )
     result["mode"] = "recompact"
     return result
@@ -1766,9 +1784,7 @@ def _append_delta_derived(
     *,
     old_stage: DataFrame,
     sort_partitions: int,
-    metrics: list,
-    phase,
-    t_start: float,
+    recorder: _PhaseRecorder,
     index_has_pagerank: bool = False,
 ) -> dict:
     """Append-mode incremental merge: O(delta) posting/position work.
@@ -1812,8 +1828,6 @@ def _append_delta_derived(
     if index_has_pagerank:
         # ADVICE r04: delta docs get pagerank=0.0 and re-crawled docs lose
         # their old score until a recompaction recomputes the global graph
-        # (pre-r5 indexes without the built_with_pagerank flag are probed
-        # from doc_map — _index_has_pagerank)
         import warnings
 
         warnings.warn(
@@ -1865,7 +1879,7 @@ def _append_delta_derived(
 
         delta_gen_path = _stage_generations(out_dir)[-1]
 
-        m_text = phase("doc_text")
+        m_text = recorder.phase("doc_text")
         n_gen = len(_doc_text_generations(out_dir))
         text_gen = os.path.join(out_dir, f"doc_text_delta_{n_gen:05d}")
 
@@ -1877,7 +1891,7 @@ def _append_delta_derived(
                 .write.mode("overwrite").parquet(text_gen)
             )
             m_text["ran"] = True
-            m_text["finished"] = time.time() - t_start
+            m_text["finished"] = recorder.elapsed()
 
         fut_text = pool.submit(_run_doc_text)
 
@@ -1892,7 +1906,7 @@ def _append_delta_derived(
         # round-trips through the driver beyond a count. Reads only pre-merge
         # tables (doc_ids adoption happens at the very end), so it overlaps
         # the docid-assignment chain.
-        m_tomb = phase("tombstones")
+        m_tomb = recorder.phase("tombstones")
         ids_path = os.path.join(out_dir, "doc_ids")
         tomb_path = os.path.join(out_dir, "tombstones")
         tomb_tmp = os.path.join(out_dir, "_tombstones_delta")
@@ -1919,13 +1933,13 @@ def _append_delta_derived(
                     .coalesce(max(1, n_replaced // 5_000_000 + 1))
                     .write.mode("append").parquet(tomb_path)
                 )
-            m_tomb["finished"] = time.time() - t_start
+            m_tomb["finished"] = recorder.elapsed()
             return replaced_df, n_replaced
 
         fut_tomb = pool.submit(_run_tombstones)
 
         # --- delta docid assignment: url-ranked after the existing corpus ---
-        m = phase("assign_ids_delta")
+        m = recorder.phase("assign_ids_delta")
         ids_stage = os.path.join(out_dir, "_ids_delta_stage")
         (
             delta.select("url")
@@ -1963,9 +1977,9 @@ def _append_delta_derived(
             gens = _stage_generations(out_dir)
             if len(gens) > 1 and _dir_parquet_rows(gens[-1]) == 0:
                 shutil.rmtree(gens[-1], ignore_errors=True)
-            m["finished"] = time.time() - t_start
-            return {"meta": meta, "phases": metrics,
-                    "wall_s": time.time() - t_start, "mode": "append"}
+            m["finished"] = recorder.elapsed()
+            return {"meta": meta, "phases": recorder.phases,
+                    "wall_s": recorder.elapsed(), "mode": "append"}
         offsets = {}
         acc = watermark
         for pid in sorted(counts):
@@ -2003,14 +2017,14 @@ def _append_delta_derived(
         # downstream phases read the delta ids from the tmp dir; the files are
         # adopted into doc_ids only after the last consumer ran (end of merge)
         ids_delta = spark.read.parquet(ids_tmp)
-        m["finished"] = time.time() - t_start
+        m["finished"] = recorder.elapsed()
 
         docs = delta.join(_bcast_small(ids_delta, ids_tmp), "url")
         exploded = _explode_postings(docs)
 
         # --- positions: encode the delta alone, adopt files — needs only the
         # delta ids, so it overlaps tombstone resolution, stats and postings
-        m_pos = phase("positions")
+        m_pos = recorder.phase("positions")
         positions_path = os.path.join(out_dir, "positions")
         pos_tmp = os.path.join(out_dir, "_positions_delta")
 
@@ -2031,7 +2045,7 @@ def _append_delta_derived(
             )
             m_pos["appended_bytes"] = _adopt_parquet_files(pos_tmp, positions_path)
             m_pos["ran"] = True
-            m_pos["finished"] = time.time() - t_start
+            m_pos["finished"] = recorder.elapsed()
 
         fut_pos = pool.submit(_run_positions)
 
@@ -2048,7 +2062,7 @@ def _append_delta_derived(
         # The dead-row stats subtraction scans doc_map BEFORE the append write
         # is submitted (replaced rows are all pre-merge rows, so the result is
         # identical — and the scan never races the concurrent append commit).
-        m = phase("doc_map_delta")
+        m = recorder.phase("doc_map_delta")
         doc_map_path = os.path.join(out_dir, "doc_map")
         m["table_bytes_before"] = _dir_parquet_bytes(doc_map_path)
         stats_cols = ["shard", "doc_count", "total_body", "total_title",
@@ -2118,7 +2132,7 @@ def _append_delta_derived(
             m_map["appended_bytes"] = (
                 _dir_parquet_bytes(doc_map_path) - m_map["table_bytes_before"])
             m_map["ran"] = True
-            m_map["finished"] = time.time() - t_start
+            m_map["finished"] = recorder.elapsed()
 
         # the append write lands beside the postings encode; submitted only
         # after the stats job (whose dead-row subtraction scans the pre-append
@@ -2126,7 +2140,7 @@ def _append_delta_derived(
         fut_map = pool.submit(_run_doc_map_append)
 
         # --- postings: encode the delta alone, adopt files, merge term_dict ---
-        m = phase("postings")
+        m = recorder.phase("postings")
         postings_path = os.path.join(out_dir, "postings")
         m["table_bytes_before"] = _dir_parquet_bytes(postings_path)
         post_tmp = os.path.join(out_dir, "_postings_delta")
@@ -2192,7 +2206,7 @@ def _append_delta_derived(
         # ~num_buckets parquet footers (bounded, reclaimed by compact_index)
         m["encoded_bytes"] = int(crow["bytes"] or 0)
         m["ran"] = True
-        m["finished"] = time.time() - t_start
+        m["finished"] = recorder.elapsed()
 
         # join the overlapped writes before the final metadata fold
         fut_pos.result()
@@ -2206,7 +2220,7 @@ def _append_delta_derived(
         pool.shutdown(wait=True)
 
     # --- counters + metadata ---
-    m = phase("counters")
+    m = recorder.phase("counters")
     counters = dict(meta.get("counters") or {})
     counters["docs_tokenized"] = counters.get("docs_tokenized", 0) + n_delta
     counters["posting_blocks"] = (
@@ -2216,7 +2230,7 @@ def _append_delta_derived(
     counters["posting_bytes_compressed"] = (
         counters.get("posting_bytes_compressed", 0) + int(crow["bytes"] or 0))
     m.update(counters)
-    m["finished"] = time.time() - t_start
+    m["finished"] = recorder.elapsed()
 
     touched_shards = {
         int(r["shard"])
@@ -2228,11 +2242,11 @@ def _append_delta_derived(
     # set (read_doc_ids_live) like doc_map, reclaimed by compact_index.
     import shutil
 
-    m = phase("doc_ids")
+    m = recorder.phase("doc_ids")
     m["table_bytes_before"] = _dir_parquet_bytes(ids_path)
     m["appended_bytes"] = _adopt_parquet_files(ids_tmp, ids_path)
     m["ran"] = True
-    m["finished"] = time.time() - t_start
+    m["finished"] = recorder.elapsed()
     shutil.rmtree(ids_stage, ignore_errors=True)
     shutil.rmtree(tomb_tmp, ignore_errors=True)
     new_total = total_docs + n_delta - n_replaced
@@ -2262,18 +2276,9 @@ def _append_delta_derived(
     )
     with open(os.path.join(out_dir, "index_meta.json"), "w") as f:
         json.dump(meta, f, indent=2)
-    result = {"meta": meta, "phases": metrics,
-              "wall_s": time.time() - t_start, "mode": "append"}
-    metrics_df = spark.createDataFrame(
-        [(mm["phase"], float(mm["started"]), float(mm.get("finished", 0.0)),
-          bool(mm.get("ran", False)),
-          int(mm.get("docs_tokenized", 0)), int(mm.get("postings_emitted", 0)),
-          int(mm.get("posting_bytes_compressed", 0)))
-         for mm in metrics],
-        "phase string, started double, finished double, ran boolean, "
-        "docs_tokenized long, postings_emitted long, bytes_compressed long",
-    )
-    _write_once(metrics_df, os.path.join(out_dir, "build_metrics"), force=True)
+    result = {"meta": meta, "phases": recorder.phases,
+              "wall_s": recorder.elapsed(), "mode": "append"}
+    recorder.write(spark, out_dir)
     _refresh_index_caches(spark, out_dir)
     return result
 
@@ -2293,28 +2298,22 @@ def compact_index(spark: SparkSession, index_dir: str,
     recomputes pagerank into the fresh doc_map, a plain index stays plain
     — compacting must never silently zero the corpus's scores. Pass an
     explicit bool to override."""
-    with open(os.path.join(index_dir, "index_meta.json")) as f:
-        meta = json.load(f)
+    meta = read_index_meta(index_dir)
     if pagerank is None:
-        pagerank = _index_has_pagerank(spark, index_dir, meta)
+        pagerank = _index_has_pagerank(index_dir, meta)
     if num_shards is None:
-        num_shards = int(meta.get("num_shards_base", meta["num_shards"]))
+        num_shards = int(meta["num_shards_base"])
     if sort_partitions is None:
         sort_partitions = max(spark.sparkContext.defaultParallelism, 4)
     compact_stage(spark, index_dir)
-    metrics: list[dict] = []
-    t_start = time.time()
-
-    def phase(name):
-        metrics.append({"phase": name, "started": time.time() - t_start})
-        return metrics[-1]
+    recorder = _PhaseRecorder()
 
     stage = spark.read.parquet(os.path.join(index_dir, "stage_raw"))
     result = _build_derived(
         spark, stage, index_dir,
         num_shards=num_shards, num_buckets=int(meta["num_buckets"]),
         sort_partitions=sort_partitions, force=True, pagerank=pagerank,
-        metrics=metrics, phase=phase, t_start=t_start,
+        recorder=recorder,
     )
     result["mode"] = "compact"
     return result
@@ -2328,6 +2327,7 @@ def compact_stage(spark: SparkSession, index_dir: str) -> int:
     (aborted writes, invisible to readers) are swept as debris."""
     import shutil
 
+    meta = read_index_meta(index_dir)
     gens = _stage_generations(index_dir)
     committed = set(gens)
     debris = [
@@ -2356,13 +2356,8 @@ def compact_stage(spark: SparkSession, index_dir: str) -> int:
         shutil.rmtree(g, ignore_errors=True)
     # keep the crash-consistency ledger in sync: all generations are now
     # folded into stage_raw, none outstanding
-    meta_path = os.path.join(index_dir, "index_meta.json")
-    if os.path.exists(meta_path):
-        with open(meta_path) as f:
-            meta = json.load(f)
-        if meta.get("stage_generations") is not None:
-            meta["stage_generations"] = 0
-            with open(meta_path, "w") as f:
-                json.dump(meta, f, indent=2)
+    meta["stage_generations"] = 0
+    with open(os.path.join(index_dir, "index_meta.json"), "w") as f:
+        json.dump(meta, f, indent=2)
     _refresh_index_caches(spark, index_dir)
     return len(gens)

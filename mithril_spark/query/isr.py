@@ -34,6 +34,12 @@ from dataclasses import dataclass, field
 
 import numpy as np
 
+from ..ranking import (
+    _ASCII_LOWER_STR,
+    ascii_lower,
+    contains_porn_keywords,
+    contains_porn_keywords_any,
+)
 from ..text.normalize import (
     ALL,
     ANCHOR,
@@ -60,7 +66,7 @@ class DocMeta:
     pagerank: float = 0.0
     # precomputed ranking.static_rank(url) — pure function of the url,
     # computed once at index build instead of per match in the hot loop;
-    # None (old indexes) falls back to computing it at ranking time.
+    # None falls back to computing it at ranking time.
     static_rank: float | None = None
 
 
@@ -70,9 +76,10 @@ class DocMapCols:
     The Spark analog of the reference's mmap'd document map
     (index/src/DocumentMapReader.cpp:15-100): one ``searchsorted`` resolves
     a docid to a row, and ranking gathers whole column slices per match
-    batch instead of probing a dict-of-DocMeta per match. Built by
-    ``engine._pack_docmap`` in Arrow/numpy time; the dict ``doc_map`` stays
-    as the oracle-side representation (both must rank identically —
+    batch instead of probing a dict-of-DocMeta per match. The engine builds
+    one per shard from the doc_map parquet (``engine._docmap_image``) and
+    caches it; the dict ``doc_map`` stays as the oracle-side representation
+    (both must rank identically —
     tests/test_vec_match.py::test_columnar_docmap_rank_identity).
     """
 
@@ -82,48 +89,37 @@ class DocMapCols:
                  "title_concat_low", "porn_mask", "url_str_lens")
 
     def __init__(self, local_ids, urls, titles, body_lens, title_lens,
-                 url_lens, desc_lens, pageranks, static_ranks,
-                 title_counts=None, urls_dec=None, urls_low=None,
-                 titles_low=None, title_concat_low=None, porn_mask=None,
-                 url_str_lens=None):
+                 url_lens, desc_lens, pageranks, static_ranks):
+        n = len(urls)
         self.local_ids = np.asarray(local_ids, dtype=np.int64)  # sorted asc
         self.urls = urls          # list[bytes], aligned
         self.titles = titles      # list[list[bytes]], aligned
         # number of title WORDS per doc (ranking's title_size), distinct
         # from title_lens (the reference's char-length field)
-        self.title_counts = (
-            np.asarray(title_counts, dtype=np.int64)
-            if title_counts is not None
-            else np.fromiter((len(t) for t in titles), np.int64, len(titles))
-        )
+        self.title_counts = np.fromiter((len(t) for t in titles), np.int64, n)
         self.body_lens = np.asarray(body_lens, dtype=np.int64)
         self.title_lens = np.asarray(title_lens, dtype=np.int64)
         self.url_lens = np.asarray(url_lens, dtype=np.int64)
         self.desc_lens = np.asarray(desc_lens, dtype=np.int64)
         self.pageranks = np.asarray(pageranks, dtype=np.float64)
-        # None for pre-r2 indexes without the static_rank column
-        self.static_ranks = (
-            None if static_ranks is None
-            else np.asarray(static_ranks, dtype=np.float64)
-        )
-        # Optional doc-only ranking precomputes, cached per shard image by
-        # the engine (engine._image_dict) so per-query ranking skips the
-        # per-match decode / ascii-lower / porn-regex work — pure
-        # functions of the doc, so results are identical with or without
-        # them (tests/test_vec_match.py rank-identity gates both forms).
-        # All None on oracle-built shards (inline compute fallback).
-        self.urls_dec = urls_dec              # list[str] latin-1 decoded
-        self.urls_low = urls_low              # list[str] ascii-lowered
-        self.titles_low = titles_low          # list[list[str]] lowered words
-        self.title_concat_low = title_concat_low  # list[str] lowered concat
-        self.porn_mask = (
-            None if porn_mask is None
-            else np.asarray(porn_mask, dtype=bool)
-        )
-        self.url_str_lens = (
-            None if url_str_lens is None
-            else np.asarray(url_str_lens, dtype=np.int64)
-        )
+        self.static_ranks = np.asarray(static_ranks, dtype=np.float64)
+        # Doc-only ranking precomputes (pure functions of url/title), paid
+        # ONCE per image instead of per match per query, so per-query
+        # ranking skips the decode / ascii-lower / porn-regex work. The
+        # dict doc_map path computes the same values inline in
+        # handle_ranking — rank identity gates both forms.
+        self.urls_dec = [u.decode("latin-1") for u in urls]
+        self.url_str_lens = np.fromiter(
+            (len(u) for u in self.urls_dec), np.int64, n)
+        self.urls_low = [ascii_lower(u) for u in self.urls_dec]
+        self.titles_low = [
+            [t.decode("latin-1").translate(_ASCII_LOWER_STR) for t in tw]
+            for tw in titles
+        ]
+        self.title_concat_low = ["".join(tl) for tl in self.titles_low]
+        self.porn_mask = np.fromiter(
+            (contains_porn_keywords_any(tw) or contains_porn_keywords(u)
+             for tw, u in zip(titles, urls)), bool, n)
 
     def __len__(self) -> int:
         return len(self.local_ids)
@@ -149,8 +145,7 @@ class DocMapCols:
             body_len=int(self.body_lens[i]), title_len=int(self.title_lens[i]),
             url_len=int(self.url_lens[i]), desc_len=int(self.desc_lens[i]),
             pagerank=float(self.pageranks[i]),
-            static_rank=(None if self.static_ranks is None
-                         else float(self.static_ranks[i])),
+            static_rank=float(self.static_ranks[i]),
         )
 
 

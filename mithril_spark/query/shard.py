@@ -410,9 +410,9 @@ def handle_ranking(
         if cols is not None:
             # columnar image: one searchsorted resolves the whole chunk,
             # numeric columns gather by row index (no per-match dict
-            # probes); images carrying doc-only precomputes (porn mask,
-            # decoded/lowered strings — engine._image_dict) skip the
-            # per-match regex/decode/lower work entirely
+            # probes), and the image's doc-only precomputes (porn mask,
+            # decoded/lowered strings — DocMapCols) skip the per-match
+            # regex/decode/lower work entirely
             c_arr = np.asarray(chunk, dtype=np.int64)
             ridx, found = cols.gather(c_arr)
             pmask = cols.porn_mask
@@ -422,9 +422,7 @@ def handle_ranking(
                 if not ok:
                     entries.append((m, None))
                     continue
-                if (pmask[i] if pmask is not None else
-                        (contains_porn_keywords_any(cols.titles[i])
-                         or contains_porn_keywords(cols.urls[i]))):
+                if pmask[i]:
                     continue
                 entries.append((m, (cols.urls[i], cols.titles[i])))
                 sel_rows.append(i)
@@ -434,37 +432,18 @@ def handle_ranking(
             if scored:
                 rows = np.asarray(sel_rows, dtype=np.int64)
                 m_arr = np.asarray(m_list, dtype=np.int64)
-                if cols.urls_dec is not None:
-                    urls = [cols.urls_dec[i] for i in sel_rows]
-                    urls_low = [cols.urls_low[i] for i in sel_rows]
-                    # pre-lowered words: ordered_match_score's lowering is
-                    # idempotent, and the concat equals ascii_lower(concat)
-                    title_words_list = [cols.titles_low[i] for i in sel_rows]
-                    title_concats = [
-                        cols.title_concat_low[i] for i in sel_rows]
-                    titles_pre_lowered = True
-                    url_str_lens = (
-                        cols.url_str_lens[rows]
-                        if cols.url_str_lens is not None else None)
-                else:
-                    urls = [cols.urls[i].decode("latin-1") for i in sel_rows]
-                    urls_low = None
-                    title_words_list = [
-                        [t.decode("latin-1") for t in cols.titles[i]]
-                        for i in sel_rows
-                    ]
-                    title_concats = [
-                        ascii_lower("".join(tw)) for tw in title_words_list]
-                    titles_pre_lowered = False
-                    url_str_lens = None
+                urls = [cols.urls_dec[i] for i in sel_rows]
+                urls_low = [cols.urls_low[i] for i in sel_rows]
+                # pre-lowered words: ordered_match_score's lowering is
+                # idempotent, and the concat equals ascii_lower(concat)
+                title_words_list = [cols.titles_low[i] for i in sel_rows]
+                title_concats = [cols.title_concat_low[i] for i in sel_rows]
+                titles_pre_lowered = True
+                url_str_lens = cols.url_str_lens[rows]
                 title_sizes = cols.title_counts[rows]
                 body_lens = cols.body_lens[rows]
                 pageranks = cols.pageranks[rows]
-                static_ranks = (
-                    cols.static_ranks[rows]
-                    if cols.static_ranks is not None
-                    else np.asarray([static_rank(u) for u in urls], np.float64)
-                )
+                static_ranks = cols.static_ranks[rows]
         else:
             scored_metas: list[tuple[int, object]] = []
             for m in (chunk.tolist() if isinstance(chunk, np.ndarray) else chunk):

@@ -83,9 +83,9 @@ def main() -> None:
         name, _, kw = spec.partition("=")
         extra[name] = json.loads(kw)
 
-    from mithril_spark.engine import SearchEngine, _dir_parquet_bytes
+    from mithril_spark.engine import SearchEngine
     from mithril_spark.fixtures import generate_pages_df
-    from mithril_spark.indexer import build_index
+    from mithril_spark.indexer import _dir_parquet_bytes, build_index
     from mithril_spark.session import get_spark
 
     cores = min(32, os.cpu_count() or 1)

@@ -28,6 +28,7 @@ from mithril_spark.indexer import (
 )
 from mithril_spark.oracle import OracleIndex
 from tests.test_incremental import _assert_same_index
+from tests.test_spark_engine import _metrics_rows, _phase_rows
 
 QUERIES = [
     "search engine",
@@ -112,8 +113,8 @@ def test_append_aligned_is_byte_identical(spark, tmp_path_factory):
 
     _assert_same_index(spark, full_dir, inc_dir)
 
-    ef = SearchEngine(spark, full_dir, cache_doc_map=False)
-    ei = SearchEngine(spark, inc_dir, cache_doc_map=False)
+    ef = SearchEngine(spark, full_dir)
+    ei = SearchEngine(spark, inc_dir)
     for q in QUERIES:
         assert ef.top_k(q) == ei.top_k(q), q
         assert ef.bm25_topk(q) == ei.bm25_topk(q), q
@@ -143,8 +144,8 @@ def test_append_tail_fill_same_content(spark, tmp_path_factory):
                        ("index_stats", SCOLS)]:
         assert _tbl(spark, full_dir, name, cols) == _tbl(spark, inc_dir, name, cols)
 
-    ef = SearchEngine(spark, full_dir, cache_doc_map=False)
-    ei = SearchEngine(spark, inc_dir, cache_doc_map=False)
+    ef = SearchEngine(spark, full_dir)
+    ei = SearchEngine(spark, inc_dir)
     for q in QUERIES:
         assert ef.top_k(q) == ei.top_k(q), q
         assert ef.bm25_topk(q) == ei.bm25_topk(q), q
@@ -165,8 +166,8 @@ def test_append_interleaved_semantics(spark, tmp_path_factory):
     res = merge_index_delta(inc_dir, pages_to_df(spark, delta))
     assert res["mode"] == "append"
 
-    ef = SearchEngine(spark, full_dir, cache_doc_map=False)
-    ei = SearchEngine(spark, inc_dir, cache_doc_map=False)
+    ef = SearchEngine(spark, full_dir)
+    ei = SearchEngine(spark, inc_dir)
     uf, ui = _doc_urls(spark, full_dir), _doc_urls(spark, inc_dir)
     assert sorted(uf.values()) == sorted(ui.values())
     # cross-layout comparison is only valid for shard-layout-INDEPENDENT
@@ -243,7 +244,7 @@ def test_append_writes_o_delta_bytes(spark, tmp_path_factory):
     assert 0 < enc < 0.1 * total_enc, (enc, total_enc)
 
     # the appended index still serves without any rebuild
-    ei = SearchEngine(spark, inc_dir, cache_doc_map=False)
+    ei = SearchEngine(spark, inc_dir)
     urls = _doc_urls(spark, inc_dir)
     hits = {urls[d] for d, *_ in ei.top_k("search")} | \
            {urls[d] for d, *_ in ei.top_k("granite OR data")}
@@ -265,13 +266,15 @@ def test_append_writes_o_delta_bytes(spark, tmp_path_factory):
     assert res2["mode"] == "append"
     by_phase2 = {p["phase"]: p for p in res2["phases"]}
     assert by_phase2["tombstones"]["replaced_docs"] >= 1
+    # the merge's build_metrics table holds exactly its returned phases
+    assert _metrics_rows(spark, inc_dir) == _phase_rows(res2["phases"])
     for tbl in ("doc_map_delta", "doc_ids"):
         appended = by_phase2[tbl]["appended_bytes"]
         before = by_phase2[tbl]["table_bytes_before"]
         assert 0 < appended < 0.5 * before, (tbl, appended, before)
 
     # and the served view reflects the replacement
-    ei2 = SearchEngine(spark, inc_dir, cache_doc_map=False)
+    ei2 = SearchEngine(spark, inc_dir)
     urls2 = _doc_urls(spark, inc_dir)
     # live url set = old live set plus every admitted re-crawl url (a url
     # whose OLD html failed admission joins as an add, not a replacement)
@@ -327,18 +330,18 @@ def test_auto_compaction_guard(spark, tmp_path_factory):
     build_index(pages_to_df(spark, list(current.values())), full_dir,
                 num_shards=2)
     _assert_same_index(spark, full_dir, inc_dir)
-    ef = SearchEngine(spark, full_dir, cache_doc_map=False)
-    ei = SearchEngine(spark, inc_dir, cache_doc_map=False)
+    ef = SearchEngine(spark, full_dir)
+    ei = SearchEngine(spark, inc_dir)
     for q in QUERIES:
         assert ef.top_k(q) == ei.top_k(q), q
 
 
 def test_cached_engine_plans_dont_leak_across_merges(spark, tmp_path_factory):
     """Spark's CacheManager matches cached plans by path+schema, NOT the
-    file list — an engine built BEFORE a merge (default cache_doc_map=True
-    caches coalesced postings/positions) must not poison a fresh engine's
-    reads of the same paths AFTER the merge. merge_index_delta refreshes
-    the index path at the end (code-review r5 / stale-cache regression)."""
+    file list — an engine built BEFORE a merge (which persists its
+    shard-image rows) must not poison a fresh engine's reads of the same
+    paths AFTER the merge. merge_index_delta refreshes the index path at
+    the end (code-review r5 / stale-cache regression)."""
     pages = generate_pages(60, seed=37)
     inc_dir = str(tmp_path_factory.mktemp("ccl_inc") / "i")
     build_index(pages_to_df(spark, pages[:50]), inc_dir, num_shards=2)
@@ -563,8 +566,8 @@ def test_many_appends_lsm_stability(spark, tmp_path_factory):
     assert url_stats(full_dir) == url_stats(inc_dir)
     assert global_df(full_dir) == global_df(inc_dir)
 
-    ef = SearchEngine(spark, full_dir, cache_doc_map=False)
-    ei = SearchEngine(spark, inc_dir, cache_doc_map=False)
+    ef = SearchEngine(spark, full_dir)
+    ei = SearchEngine(spark, inc_dir)
     uf, ui = _doc_urls(spark, full_dir), _doc_urls(spark, inc_dir)
     for q in ["search engine", "granite OR marble", "data AND systems"]:
         assert {uf[d] for d in ef.matches(q)} == \
@@ -602,7 +605,7 @@ def test_not_complement_never_surfaces_tombstones(spark, tmp_path_factory):
         int(r["shard"]) * shard_size + int(r["local_id"])
         for r in spark.read.parquet(f"{inc_dir}/tombstones").collect()
     }
-    ei = SearchEngine(spark, inc_dir, cache_doc_map=False)
+    ei = SearchEngine(spark, inc_dir)
     for q in ["NOT quartz", "NOT granite", "NOT zzzneverseen",
               "search OR NOT engine"]:
         hits = ei.top_k(q)
@@ -646,8 +649,8 @@ def test_append_recrawl_tombstone_semantics(spark, tmp_path_factory):
     # html must pass the admission filter to count as a replacement)
     assert n_dead >= 2
 
-    ef = SearchEngine(spark, full_dir, cache_doc_map=False)
-    ei = SearchEngine(spark, inc_dir, cache_doc_map=False)
+    ef = SearchEngine(spark, full_dir)
+    ei = SearchEngine(spark, inc_dir)
 
     # live corpus identical: same url set, same per-url body/title stats
     def url_stats(path):
@@ -701,8 +704,7 @@ def test_append_recrawl_tombstone_semantics(spark, tmp_path_factory):
 
     # serving-path equality over the tombstoned index: resident (default)
     # and DIRECT must agree on everything
-    e_dist = SearchEngine(spark, inc_dir, cache_doc_map=False,
-                          driver_serve_bytes=0)
+    e_dist = SearchEngine(spark, inc_dir, driver_serve_bytes=0)
     for q in QUERIES + ["index NOT granite"]:
         assert e_dist.top_k(q) == ei.top_k(q), q
         assert sorted(ei.matches(q)) == sorted(e_dist.matches(q)), q
@@ -804,7 +806,7 @@ def test_refresh_pagerank_sidecar(spark, tmp_path_factory):
     assert eng._driver_images
     img_pr = {}
     for img in eng._driver_images.values():
-        for u, v in zip(img["urls"], img["pageranks"]):
+        for u, v in zip(img.urls, img.pageranks):
             img_pr[u] = float(v)
     assert img_pr == want
 
@@ -851,7 +853,7 @@ def test_merge_append_pagerank_refresh_rank_identity(spark,
     )
     e_res = SearchEngine(spark, inc_dir, pagerank_weight=80.0)
     e_dist = SearchEngine(spark, inc_dir, pagerank_weight=80.0,
-                          driver_serve_bytes=0, cache_doc_map=False)
+                          driver_serve_bytes=0)
     for q in QUERIES:
         want = oracle.top_k(q)
         assert e_res.top_k(q) == want, q
@@ -1024,13 +1026,12 @@ def test_worker_image_epoch_stability(spark, tmp_path_factory):
     assert dead
     for r in dead:
         img = _worker_image(inc_dir, int(r["shard"]), old_token)
-        assert int(r["local_id"]) in img["local_ids"], \
+        assert int(r["local_id"]) in img.local_ids, \
             "pre-merge docid vanished from the epoch-stable image"
 
     # and a POST-merge engine over the same (unmasked) images never
     # surfaces those dead docids — _drop_tombstoned is the filter now
-    eng = SearchEngine(spark, inc_dir, driver_serve_bytes=0,
-                       cache_doc_map=False)
+    eng = SearchEngine(spark, inc_dir, driver_serve_bytes=0)
     dead_global = {
         int(r["shard"]) * eng.meta["shard_size"] + int(r["local_id"])
         for r in dead
@@ -1044,9 +1045,9 @@ def test_worker_image_epoch_stability(spark, tmp_path_factory):
     # requested under the OLD token must NOT bake the new sidecar in
     refresh_pagerank(spark, inc_dir)
     img_stale = _worker_image(inc_dir, 0, old_token + "_stale_probe")
-    assert not np.any(img_stale["pageranks"])  # doc_map's own 0.0 values
+    assert not np.any(img_stale.pageranks)  # doc_map's own 0.0 values
     img_live = _worker_image(inc_dir, 0, _docmap_token(inc_dir))
-    assert np.any(img_live["pageranks"])  # sidecar applied at match
+    assert np.any(img_live.pageranks)  # sidecar applied at match
 
 
 def test_empty_delta_merge_is_a_true_noop(spark, tmp_path_factory):
@@ -1142,7 +1143,7 @@ def test_force_rebuild_sweeps_stale_stage_deltas(spark, tmp_path_factory):
     assert meta["stage_generations"] == 0
 
     # the rebuilt index serves the NEW corpus, not a stale-delta blend
-    eng = SearchEngine(spark, d, cache_doc_map=False)
+    eng = SearchEngine(spark, d)
     oracle = OracleIndex.build(
         [(p["url"].encode(), p["html"]) for p in new_corpus], num_shards=2)
     for q in QUERIES[:3]:
@@ -1261,7 +1262,7 @@ def test_merge_op_sequence_fuzz(spark, tmp_path_factory):
             bytes(r["url"]) for r in
             read_stage(spark, d).select("url").collect()
         } == admitted, ops_run
-        eng = SearchEngine(spark, d, cache_doc_map=False)
+        eng = SearchEngine(spark, d)
         for _did, _s, url, _t in eng.top_k("search engine"):
             assert url != b"", ops_run
 

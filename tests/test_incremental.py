@@ -67,8 +67,8 @@ def test_two_increments_equal_full_rebuild(spark, tmp_path_factory, shards):
     # the served results agree too (query layer over the merged index)
     from mithril_spark.engine import SearchEngine
 
-    ef = SearchEngine(spark, full_dir, cache_doc_map=False)
-    ei = SearchEngine(spark, inc_dir, cache_doc_map=False)
+    ef = SearchEngine(spark, full_dir)
+    ei = SearchEngine(spark, inc_dir)
     for q in ["search engine", "granite OR marble", "NOT quartz"]:
         assert ef.top_k(q) == ei.top_k(q), q
 
@@ -179,8 +179,8 @@ def test_resume_after_midbuild_crash(spark, tmp_path_factory):
     # the resumed index serves rank-identically to the untouched twin
     from mithril_spark.engine import SearchEngine
 
-    ea = SearchEngine(spark, a_dir, cache_doc_map=False)
-    eb = SearchEngine(spark, b_dir, cache_doc_map=False)
+    ea = SearchEngine(spark, a_dir)
+    eb = SearchEngine(spark, b_dir)
     for q in ["search engine", "granite OR marble", "NOT quartz"]:
         assert ea.top_k(q) == eb.top_k(q), q
 
@@ -226,3 +226,44 @@ def test_assign_meta_commits_before_ids(spark, tmp_path_factory,
 
     build_index(df, b_dir, num_shards=2)
     _assert_same_index(spark, a_dir, b_dir)
+
+
+def test_old_index_format_rejected_at_open(spark, tmp_path_factory):
+    """The index format is checked once, at open: an index whose
+    index_meta.json lacks a key every current build writes (an index from
+    before the stage ledger, the pagerank flag and the base shard count)
+    is refused by the engine, the merge and the compaction alike, with a
+    ValueError naming the key, before anything is read or written."""
+    import json
+    import os
+
+    from mithril_spark.engine import SearchEngine
+    from mithril_spark.indexer import INDEX_META_KEYS, compact_index
+
+    pages = generate_pages(40, seed=23)
+    built = str(tmp_path_factory.mktemp("fmt_built") / "i")
+    build_index(pages_to_df(spark, pages), built, num_shards=2)
+    delta = pages_to_df(spark, generate_pages(5, seed=24))
+
+    for key in INDEX_META_KEYS:
+        d = str(tmp_path_factory.mktemp(f"fmt_no_{key}") / "i")
+        shutil.copytree(built, d)
+        mpath = os.path.join(d, "index_meta.json")
+        with open(mpath) as f:
+            meta = json.load(f)
+        del meta[key]
+        with open(mpath, "w") as f:
+            json.dump(meta, f)
+        before = sorted(os.listdir(d))
+
+        with pytest.raises(ValueError, match=key):
+            SearchEngine(spark, d)
+        with pytest.raises(ValueError, match=key):
+            merge_index_delta(d, delta)
+        with pytest.raises(ValueError, match=key):
+            compact_index(spark, d)
+        with pytest.raises(ValueError, match=key):
+            compact_stage(spark, d)
+        assert sorted(os.listdir(d)) == before, key
+        with open(mpath) as f:
+            assert json.load(f) == meta, key

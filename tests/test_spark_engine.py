@@ -23,12 +23,16 @@ def pages_df(spark, corpus):
     return pages_to_df(spark, corpus)
 
 
+# the latest build_index result per built index path
+_BUILDS: dict[str, dict] = {}
+
+
 def _build(spark, pages_df, tmp, num_shards, **kw):
     from mithril_spark.indexer import build_index
 
     path = str(tmp)
     shutil.rmtree(path, ignore_errors=True)
-    build_index(pages_df, path, num_shards=num_shards, **kw)
+    _BUILDS[path] = build_index(pages_df, path, num_shards=num_shards, **kw)
     return path
 
 
@@ -184,11 +188,33 @@ def test_resume_skips_completed_phases(spark, pages_df, index_1):
     from mithril_spark.indexer import build_index
 
     res = build_index(pages_df, index_1, num_shards=1)
+    _BUILDS[index_1] = res  # the resume rewrote build_metrics
     ran = {m["phase"]: m.get("ran") for m in res["phases"]}
     assert not any(ran.values()), ran
+
+
+def _metrics_rows(spark, index_dir) -> list[tuple]:
+    """(phase, ran, docs_tokenized, postings_emitted, bytes_compressed) of
+    an index's build_metrics table, sorted."""
+    return sorted(
+        tuple(r) for r in spark.read.parquet(index_dir + "/build_metrics")
+        .select("phase", "ran", "docs_tokenized", "postings_emitted",
+                "bytes_compressed").collect())
+
+
+def _phase_rows(phases) -> list[tuple]:
+    """The same tuples from a build/merge result's ``phases`` list."""
+    return sorted(
+        (p["phase"], bool(p.get("ran", False)),
+         int(p.get("docs_tokenized", 0)), int(p.get("postings_emitted", 0)),
+         int(p.get("posting_bytes_compressed", 0)))
+        for p in phases)
 
 
 def test_metrics_table_written(spark, index_1):
     m = spark.read.parquet(index_1 + "/build_metrics")
     assert {"phase", "started", "finished", "ran"} <= set(m.columns)
     assert m.count() >= 5
+    # the persisted rows are the returned phases, one for one
+    assert _metrics_rows(spark, index_1) == \
+        _phase_rows(_BUILDS[index_1]["phases"])

@@ -236,10 +236,13 @@ def test_kernels_against_python_sets():
         assert complement_sorted(b, dc).tolist() == want
 
 
-def _to_cols(shard: ShardIndex, precompute: bool = False) -> ShardIndex:
-    """Clone a dict-doc_map shard into a columnar-image shard; with
-    ``precompute`` the image carries the engine's doc-only ranking caches
-    (porn mask, decoded/lowered strings — engine._image_dict shape)."""
+def _to_cols(shard: ShardIndex) -> ShardIndex:
+    """Clone a dict-doc_map shard into a columnar-image shard (the engine's
+    image form: DocMapCols with its doc-only ranking precomputes). A
+    DocMeta without a static rank gets it computed from the url, as the
+    index build writes it into doc_map."""
+    from mithril_spark.ranking import static_rank
+
     ids = sorted(shard.doc_map)
     metas = [shard.doc_map[i] for i in ids]
     clone = ShardIndex(
@@ -252,32 +255,6 @@ def _to_cols(shard: ShardIndex, precompute: bool = False) -> ShardIndex:
         extra_doc_freqs=shard.extra_doc_freqs,
         pagerank_weight=shard.pagerank_weight,
     )
-    extra = {}
-    if precompute:
-        from mithril_spark.ranking import (
-            _ASCII_LOWER_STR,
-            ascii_lower,
-            contains_porn_keywords,
-            contains_porn_keywords_any,
-        )
-
-        urls_dec = [m.url.decode("latin-1") for m in metas]
-        titles_low = [
-            [t.decode("latin-1").translate(_ASCII_LOWER_STR)
-             for t in m.title]
-            for m in metas
-        ]
-        extra = dict(
-            urls_dec=urls_dec,
-            url_str_lens=np.fromiter(
-                (len(u) for u in urls_dec), np.int64, len(urls_dec)),
-            urls_low=[ascii_lower(u) for u in urls_dec],
-            titles_low=titles_low,
-            title_concat_low=["".join(tl) for tl in titles_low],
-            porn_mask=np.array(
-                [contains_porn_keywords_any(m.title)
-                 or contains_porn_keywords(m.url) for m in metas], bool),
-        )
     clone.doc_cols = DocMapCols(
         np.array(ids, dtype=np.int64),
         [m.url for m in metas],
@@ -287,9 +264,8 @@ def _to_cols(shard: ShardIndex, precompute: bool = False) -> ShardIndex:
         [m.url_len for m in metas],
         [m.desc_len for m in metas],
         [m.pagerank for m in metas],
-        (None if any(m.static_rank is None for m in metas)
-         else [m.static_rank for m in metas]),
-        **extra,
+        [m.static_rank if m.static_rank is not None
+         else static_rank(m.url.decode("latin-1")) for m in metas],
     )
     return clone
 
@@ -305,14 +281,10 @@ def test_columnar_docmap_rank_identity(oracle):
     ]
     for shard in oracle.shards:
         cshard = _to_cols(shard)
-        cshard_pre = _to_cols(shard, precompute=True)
         for q in queries:
             matches = evaluate_query(q, shard)
-            want = handle_ranking(q, shard, matches)
-            assert handle_ranking(q, cshard, matches) == want, q
-            # the engine's precomputed-image form must rank identically
-            # (porn mask / lowered strings are doc-only pure functions)
-            assert handle_ranking(q, cshard_pre, matches) == want, q
+            assert handle_ranking(q, cshard, matches) == \
+                handle_ranking(q, shard, matches), q
 
 
 def test_columnar_docmap_scalar_path(oracle):

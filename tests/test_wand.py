@@ -228,21 +228,21 @@ def test_tfn_scale_zero_avg_encode(spark, tmp_path_factory):
     mpath = os.path.join(d, "index_meta.json")
     meta = json.load(open(mpath))
     enc = meta["min_avg_body_enc"]
-    avg0 = SearchEngine(spark, d, cache_doc_map=False).stats[0]
+    avg0 = SearchEngine(spark, d).stats[0]
     avg_now0 = avg0["total_body"] / avg0["doc_count"]
     assert avg_now0 > 0
     # shard 0 "encoded at avg 0", shard 1 encoded at half its live avg
-    s1 = SearchEngine(spark, d, cache_doc_map=False).stats[1]
+    s1 = SearchEngine(spark, d).stats[1]
     enc["0"] = 0.0
     enc["1"] = (s1["total_body"] / s1["doc_count"]) / 2.0
     json.dump(meta, open(mpath, "w"))
-    eng = SearchEngine(spark, d, cache_doc_map=False)
+    eng = SearchEngine(spark, d)
     assert eng._tfn_scale[0] == 1.0 / (1.0 - BM25_B)  # the 4x cover
     assert abs(eng._tfn_scale[1] - 2.0) < 1e-12        # ratio path intact
     # absent entry -> no scale
     del meta["min_avg_body_enc"]["0"]
     json.dump(meta, open(mpath, "w"))
-    eng2 = SearchEngine(spark, d, cache_doc_map=False)
+    eng2 = SearchEngine(spark, d)
     assert 0 not in eng2._tfn_scale
     # WAND with the loosened bounds still matches the unscaled twin
     assert eng.bm25_topk("search engine", k=10) == \
