@@ -31,6 +31,7 @@ import json
 import os
 import time
 import zlib
+from concurrent.futures import ThreadPoolExecutor
 
 import numpy as np
 import pandas as pd
@@ -218,12 +219,24 @@ def _refresh_index_caches(spark: SparkSession, index_dir: str) -> None:
 
 
 # broadcast-join byte budget (on-disk bytes x4 decompression headroom must
-# fit): shared by every size-guarded broadcast decision in this module
+# fit): read by _bcast_small, the one size-guarded broadcast decision
 BROADCAST_BYTES_CAP = 512 * 1024 * 1024
 
 
+def _bcast_small(df: DataFrame, *paths: str) -> DataFrame:
+    """``F.broadcast(df)`` while the parquet under ``paths`` (what ``df``
+    is read from) fits ``BROADCAST_BYTES_CAP`` with x4 decompression
+    headroom, else ``df`` itself, which AQE joins by sort-merge. Decided
+    by on-disk bytes, not row count: a 20M-row url table is multi-GB in
+    memory, and a huge backfill delta must degrade, never OOM executors
+    on a forced broadcast."""
+    if sum(_dir_parquet_bytes(p) for p in paths) * 4 <= BROADCAST_BYTES_CAP:
+        return F.broadcast(df)
+    return df
+
+
 def _pid_counts_from_footers(path: str) -> dict[int, int] | None:
-    """Per-pid row counts of the ``_ids_stage`` write, read driver-side
+    """Per-pid row counts of a ``_stage_urls`` write, read driver-side
     from parquet footers instead of a counting Spark job.
 
     Each committed part-file holds exactly one ``pid`` value (one file per
@@ -765,6 +778,205 @@ def _position_blocks(batches):
         yield _empty()
 
 
+# --- The derived-table pipeline, called by both the full build
+# (_build_derived) and the append merge (_append_delta_derived): an append
+# is more files of the same table format, so layout changes go here.
+
+IDS_SCHEMA = "url binary, doc_id long, shard int, local_id long"
+
+
+def _bucket_col(num_buckets: int):
+    """The ``bucket`` partition column of every term-keyed table — the
+    Spark twin of ``term_bucket``."""
+    return F.crc32(F.encode(F.col("term"), "ISO-8859-1")) % F.lit(num_buckets)
+
+
+def _stage_urls(rows: DataFrame, path: str, sort_partitions: int):
+    """Docid staging, a url-only shuffle: range-sort the urls of ``rows``,
+    tag each with its range partition (``pid``) and write them to
+    ``path``. The heavy extracted rows never shuffle for id assignment.
+    Returns the staged table and its row count per pid."""
+    (
+        rows.select("url")
+        .repartitionByRange(sort_partitions, "url")
+        .sortWithinPartitions("url")
+        .withColumn("pid", F.spark_partition_id())
+        .write.mode("overwrite").parquet(path)
+    )
+    staged = rows.sparkSession.read.parquet(path)
+    counts = _pid_counts_from_footers(path)
+    if counts is None:  # footer stats unavailable — the one-job fallback
+        counts = {
+            int(r["pid"]): int(r["cnt"])
+            for r in staged.groupBy("pid").agg(F.count("*").alias("cnt")).collect()
+        }
+    return staged, counts
+
+
+def _docid_assigner(counts: dict[int, int], base: int, shard_size: int):
+    """The docid rule, as the ``applyInArrow`` worker over one pid group
+    of ``_stage_urls``' output: ids are dense in url order from ``base``
+    (0 for a full build, ``docid_watermark`` for an append), each range
+    partition starting where the lower ones end, and ``doc_id = shard *
+    shard_size + local_id``."""
+    offsets = {}
+    acc = base
+    for pid in sorted(counts):
+        offsets[pid] = acc
+        acc += counts[pid]
+
+    def _assign_docids(table):
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        if table.num_rows == 0:
+            return table.drop_columns(["pid"])
+        order = pc.sort_indices(table, sort_keys=[("url", "ascending")])
+        table = table.take(order)
+        # docids are 1:1 with urls by contract (dedupe_pages upstream);
+        # a violation here would silently corrupt df/stats, so fail loud.
+        # Range partitioning puts equal urls in one partition, so the
+        # adjacent check within the sorted partition is complete.
+        u = table.column("url").combine_chunks()
+        if table.num_rows > 1:
+            dup = pc.any(pc.equal(u.slice(1), u.slice(0, len(u) - 1)))
+            if dup.as_py():
+                raise ValueError(
+                    "duplicate url reached docid assignment; pass a "
+                    "url-unique pages table or build with dedupe=True"
+                )
+        doc_id = offsets[table.column("pid")[0].as_py()] + np.arange(
+            table.num_rows, dtype=np.int64)
+        shard = (doc_id // shard_size).astype(np.int32)
+        local = doc_id - shard.astype(np.int64) * shard_size
+        table = table.drop_columns(["pid"])
+        return (
+            table.append_column("doc_id", pa.array(doc_id, pa.int64()))
+            .append_column("shard", pa.array(shard, pa.int32()))
+            .append_column("local_id", pa.array(local, pa.int64()))
+        )
+
+    return _assign_docids
+
+
+def _write_doc_text(rows: DataFrame, path: str, sort_partitions: int,
+                    force: bool) -> bool:
+    """Write the url-sorted doc-text sidecar for snippet serving. The
+    reference web tier re-reads gzipped crawl chunks via an LRU
+    (web/src/Snippets.h:28-143 DocumentAccessor); the analog here is a
+    slim (url, title, desc, text) table range-partitioned AND sorted by
+    url, so a top-k snippet fetch (url IN <=50) prunes to a handful of
+    row groups via parquet min/max. The stage is in extraction order,
+    where url min/max spans everything and prunes nothing."""
+    return _write_once(
+        rows.select("url", "title", "desc", "text")
+        .repartitionByRange(sort_partitions, "url")
+        .sortWithinPartitions("url"),
+        path, force=force,
+    )
+
+
+def _doc_map_rows(docs: DataFrame, pagerank=None) -> DataFrame:
+    """The doc_map row of each doc; ``pagerank`` defaults to 0.0 and is
+    stored as float32, like the reference's pagerank binary."""
+    if pagerank is None:
+        pagerank = F.lit(0.0)
+    return docs.select(
+        "shard", "doc_id", "local_id", "url", "title",
+        "body_len", "title_len", "url_len", "desc_len", "static_rank",
+        pagerank.cast("float").alias("pagerank"),
+    )
+
+
+# index_stats length sums and the doc_map column each one sums
+STATS_SUMS = {"total_body": "body_len", "total_title": "title_len",
+              "total_url": "url_len", "total_desc": "desc_len"}
+
+
+def _shard_stats(docs: DataFrame, negate: bool = False) -> DataFrame:
+    """Per-shard ``index_stats`` rows over ``docs``; ``negate`` gives the
+    rows an append subtracts for the docs it tombstones."""
+    sign = (lambda c: -c) if negate else (lambda c: c)
+    return docs.groupBy("shard").agg(
+        sign(F.count("*")).alias("doc_count"),
+        *[sign(F.sum(col)).alias(name) for name, col in STATS_SUMS.items()],
+    )
+
+
+def _collect_stats(stats: DataFrame):
+    """The rows of a per-shard stats aggregate, sorted by shard (the
+    byte-identity gates cover index_stats; collect order is not stable),
+    and a ``write(path)`` persisting them as one parquet file."""
+    schema = stats.schema
+    rows = sorted(stats.collect(), key=lambda r: r["shard"])
+
+    def write(path):
+        stats.sparkSession.createDataFrame(rows, schema=schema) \
+            .coalesce(1).write.mode("overwrite").parquet(path)
+
+    return rows, write
+
+
+def _avg_body(stats_rows) -> dict[int, float]:
+    """Per-shard average body length: the length norm each posting block
+    bakes into its max-normalized-tf bound."""
+    return {
+        int(r["shard"]): (int(r["total_body"]) / int(r["doc_count"])
+                          if int(r["doc_count"]) else 0.0)
+        for r in stats_rows
+    }
+
+
+def _posting_blocks_df(exploded: DataFrame, avg_body: dict,
+                       sort_partitions: int, num_buckets: int) -> DataFrame:
+    """Posting-block rows of ``_explode_postings`` output: salted
+    (term, shard, salt) groups made contiguous by the shuffle sort,
+    encoded by the streaming worker, one shuffle partition per bucket."""
+    return (
+        exploded.drop("flags", "positions")
+        .repartition(sort_partitions, "term", "shard", "salt")
+        .sortWithinPartitions("term", "shard", "salt")
+        .mapInPandas(_make_posting_blocks(avg_body), schema=POSTING_BLOCK_SCHEMA)
+        .withColumn("bucket", _bucket_col(num_buckets))
+        .repartition("bucket")
+    )
+
+
+def _position_blocks_df(exploded: DataFrame, sort_partitions: int,
+                        num_buckets: int) -> DataFrame:
+    """Position-block rows of ``_explode_postings`` output (docs with
+    positions only), laid out like ``_posting_blocks_df``."""
+    return (
+        exploded.drop("body_len").filter(F.size("positions") > 0)
+        .repartition(sort_partitions, "term", "shard", "salt")
+        .sortWithinPartitions("term", "shard", "salt")
+        .mapInArrow(_position_blocks, schema=POSITION_BLOCK_SCHEMA)
+        .withColumn("bucket", _bucket_col(num_buckets))
+        .repartition("bucket")
+    )
+
+
+def _term_dict_rows(postings: DataFrame) -> DataFrame:
+    """Per-(term, shard) df and cf of a posting-block table."""
+    return postings.groupBy("term", "shard", "bucket").agg(
+        F.sum("doc_count").alias("df"), F.sum("freq_sum").alias("cf"))
+
+
+def _posting_counters(postings: DataFrame) -> dict:
+    """Lineage counters of a posting-block table (north_rule: postings
+    emitted, bytes compressed, logged to the metrics table)."""
+    row = postings.agg(
+        F.count("*").alias("blocks"),
+        F.sum("doc_count").alias("postings"),
+        F.sum(F.length("doc_ids_enc") + F.length("freqs_enc")).alias("bytes"),
+    ).collect()[0]
+    return {
+        "posting_blocks": int(row["blocks"] or 0),
+        "postings_emitted": int(row["postings"] or 0),
+        "posting_bytes_compressed": int(row["bytes"] or 0),
+    }
+
+
 class _PhaseRecorder:
     """The ``build_metrics`` rows of one build, merge or compaction.
     ``phase(name)`` opens a row stamped with its start offset; the caller
@@ -886,8 +1098,6 @@ def _build_derived(
     only wall-clock scheduling overlaps, so every byte-identity gate
     (incremental ≡ full, compaction ≡ fresh) is untouched. Phase metric
     rows carry truthful started/finished stamps and may overlap."""
-    from concurrent.futures import ThreadPoolExecutor
-
     if force:
         # The refresh_pagerank sidecar is keyed by (shard, local_id) of
         # the CURRENT layout; a full rebuild re-densifies ids, so a stale
@@ -900,98 +1110,37 @@ def _build_derived(
 
         shutil.rmtree(os.path.join(out_dir, "pagerank"), ignore_errors=True)
 
-    pool = ThreadPoolExecutor(max_workers=4)
-    try:
+    # leaving the block joins every in-flight write, also on an exception,
+    # so no stray job races a caller's cleanup/retry of this index dir
+    with ThreadPoolExecutor(max_workers=4) as pool:
 
         # --- Phase 4b (launched first, joined last): url-sorted doc-text
-        # sidecar for snippet serving. The reference web tier re-reads gzipped
-        # crawl chunks via an LRU (web/src/Snippets.h:28-143 DocumentAccessor).
-        # Our serving analog is a slim (url, title, desc, text) table
-        # range-partitioned AND sorted by url so a top-k snippet fetch
-        # (url IN <=50) prunes to a handful of row groups via parquet min/max —
-        # stage_raw is written in extraction order, where url min/max spans
-        # everything and prunes nothing (VERDICT r02 #2). Depends only on
+        # sidecar for snippet serving (_write_doc_text). Depends only on
         # ``stage``, so it overlaps the whole id/doc_map/postings chain.
         m_text = recorder.phase("doc_text")
 
         def _run_doc_text():
-            doc_text = stage.select("url", "title", "desc", "text")
-            m_text["ran"] = _write_once(
-                doc_text.repartitionByRange(sort_partitions, "url")
-                .sortWithinPartitions("url"),
-                os.path.join(out_dir, "doc_text"),
-                force=force,
-            )
+            m_text["ran"] = _write_doc_text(
+                stage, os.path.join(out_dir, "doc_text"), sort_partitions,
+                force=force)
             m_text["finished"] = recorder.elapsed()
 
         fut_text = pool.submit(_run_doc_text)
 
         # --- Phase 2: deterministic dense docids — url-only shuffle ---
-        # Only the url column moves: range-sort it, count per partition, assign
-        # rank offsets, and persist the tiny ids(url, doc_id, shard, local_id)
-        # table. The heavy extracted rows never shuffle for id assignment; they
-        # are joined against ids (broadcast when small, sort-merge/AQE at scale)
+        # Only the url column moves (_stage_urls); the tiny ids(url, doc_id,
+        # shard, local_id) table is persisted and joined against the heavy
+        # extracted rows (broadcast when small, sort-merge/AQE at scale)
         # lazily in the downstream phases.
         m = recorder.phase("assign_ids")
         ids_path = os.path.join(out_dir, "doc_ids")
         if force or not os.path.exists(os.path.join(ids_path, "_SUCCESS")):
-            url_sorted = (
-                stage.select("url")
-                .repartitionByRange(sort_partitions, "url")
-                .sortWithinPartitions("url")
-                .withColumn("pid", F.spark_partition_id())
-            )
-            ids_stage = os.path.join(out_dir, "_ids_stage")
-            url_sorted.write.mode("overwrite").parquet(ids_stage)
-            staged = spark.read.parquet(ids_stage)
-            counts = _pid_counts_from_footers(ids_stage)
-            if counts is None:  # footer stats unavailable — the one-job fallback
-                counts = {
-                    int(r["pid"]): int(r["cnt"])
-                    for r in staged.groupBy("pid").agg(F.count("*").alias("cnt")).collect()
-                }
+            staged, counts = _stage_urls(
+                stage, os.path.join(out_dir, "_ids_stage"), sort_partitions)
             total_docs = sum(counts.values())
-            offsets = {}
-            acc = 0
-            for pid in sorted(counts):
-                offsets[pid] = acc
-                acc += counts[pid]
             shard_size = -(-total_docs // num_shards) if total_docs else 1
-
-            def _assign(table):
-                import pyarrow as pa
-                import pyarrow.compute as pc
-
-                if table.num_rows == 0:
-                    return table.drop_columns(["pid"])
-                order = pc.sort_indices(table, sort_keys=[("url", "ascending")])
-                table = table.take(order)
-                # docids are 1:1 with urls by contract (dedupe_pages upstream);
-                # a violation here would silently corrupt df/stats, so fail loud.
-                # Range partitioning puts equal urls in one partition, so the
-                # adjacent check within the sorted partition is complete.
-                u = table.column("url").combine_chunks()
-                if table.num_rows > 1:
-                    dup = pc.any(pc.equal(u.slice(1), u.slice(0, len(u) - 1)))
-                    if dup.as_py():
-                        raise ValueError(
-                            "duplicate url reached docid assignment; pass a "
-                            "url-unique pages table or build with dedupe=True"
-                        )
-                base = offsets[table.column("pid")[0].as_py()]
-                doc_id = base + np.arange(table.num_rows, dtype=np.int64)
-                shard = (doc_id // shard_size).astype(np.int32)
-                local = doc_id - shard.astype(np.int64) * shard_size
-                table = table.drop_columns(["pid"])
-                return (
-                    table.append_column("doc_id", pa.array(doc_id, pa.int64()))
-                    .append_column("shard", pa.array(shard, pa.int32()))
-                    .append_column("local_id", pa.array(local, pa.int64()))
-                )
-
             ids = staged.groupBy("pid").applyInArrow(
-                _assign, schema="url binary, doc_id long, shard int, local_id long"
-            )
+                _docid_assigner(counts, 0, shard_size), schema=IDS_SCHEMA)
             # meta BEFORE the ids _SUCCESS commit (code-review r5): the
             # resume gate is the ids marker, so a crash between the two
             # writes in the old order left a committed ids table with a
@@ -1013,46 +1162,31 @@ def _build_derived(
         m["total_docs"] = total_docs
         m["finished"] = recorder.elapsed()
 
-        ids_df = spark.read.parquet(ids_path)
-        # Broadcast the ids table while it comfortably fits executor memory —
-        # decided by on-disk bytes (x4 decompression headroom), not row count:
-        # a 20M-row url table is multi-GB in memory. Beyond the cap the join
-        # degrades gracefully to AQE sort-merge.
-        ids_bytes = sum(
-            e.stat().st_size for e in os.scandir(ids_path)
-            if e.is_file() and e.name.endswith(".parquet")
-        )
-        ids_broadcast = ids_bytes * 4 <= 512 * 1024 * 1024
-        if ids_broadcast:
-            ids_df = F.broadcast(ids_df)
-        m["ids_parquet_bytes"] = ids_bytes
-        m["ids_broadcast"] = ids_broadcast
+        ids_raw = spark.read.parquet(ids_path)
+        ids_df = _bcast_small(ids_raw, ids_path)
+        m["ids_parquet_bytes"] = _dir_parquet_bytes(ids_path)
+        m["ids_broadcast"] = ids_df is not ids_raw
         docs = stage.join(ids_df, "url")
 
         # --- Phase 3: doc_map + index_stats (+ optional pagerank) ---
         doc_map_path = os.path.join(out_dir, "doc_map")
         need_doc_map = force or not os.path.exists(
             os.path.join(doc_map_path, "_SUCCESS"))
-        pagerank_col = F.lit(0.0).cast("float").alias("pagerank")
-        docs_for_map = docs
+        doc_map = _doc_map_rows(docs)
         if pagerank and need_doc_map:
             m = recorder.phase("pagerank")
             pr = _stage_pagerank(stage)
-            docs_for_map = docs.join(
-                pr.select(F.col("node").alias("url"),
-                          F.col("pagerank").alias("_pr")),
-                "url", "left",
+            doc_map = _doc_map_rows(
+                docs.join(
+                    pr.select(F.col("node").alias("url"),
+                              F.col("pagerank").alias("_pr")),
+                    "url", "left",
+                ),
+                F.coalesce(F.col("_pr"), F.lit(0.0)),
             )
-            # doc_map stores float32, like the reference's pagerank binary
-            pagerank_col = F.coalesce(F.col("_pr"), F.lit(0.0)).cast("float").alias("pagerank")
             m["ran"] = True
             m["finished"] = recorder.elapsed()
         m = recorder.phase("doc_map")
-        doc_map = docs_for_map.select(
-            "shard", "doc_id", "local_id", "url", "title",
-            "body_len", "title_len", "url_len", "desc_len", "static_rank",
-            pagerank_col,
-        )
 
         def _run_doc_map():
             m["ran"] = _write_once(doc_map, doc_map_path,
@@ -1063,13 +1197,6 @@ def _build_derived(
         # index_stats is (avg_body) — so its write overlaps the stats write
         # and is joined with the other deferred phases at the end.
         fut_doc_map = pool.submit(_run_doc_map)
-        stats = docs.groupBy("shard").agg(
-            F.count("*").alias("doc_count"),
-            F.sum("body_len").alias("total_body"),
-            F.sum("title_len").alias("total_title"),
-            F.sum("url_len").alias("total_url"),
-            F.sum("desc_len").alias("total_desc"),
-        )
         # The stats table is num_shards rows, but the postings phase needs its
         # avg_body values before it can start — so collect it once (driver-side,
         # tiny) and push the parquet materialization off the spine into the
@@ -1080,16 +1207,8 @@ def _build_derived(
             stats_rows = spark.read.parquet(stats_path).collect()
             m["ran_stats"] = False
         else:
-            stats_schema = stats.schema
-            # sorted: collect order is shuffle-nondeterministic, but the
-            # byte-identity gates (recompact == fresh build) cover this table
-            stats_rows = sorted(stats.collect(), key=lambda r: r["shard"])
-
-            def _run_stats_write():
-                spark.createDataFrame(stats_rows, schema=stats_schema) \
-                    .coalesce(1).write.mode("overwrite").parquet(stats_path)
-
-            fut_stats = pool.submit(_run_stats_write)
+            stats_rows, write_stats = _collect_stats(_shard_stats(docs))
+            fut_stats = pool.submit(write_stats, stats_path)
             m["ran_stats"] = True
 
         # --- Phase 4: postings + positions blocks (salted against head-term
@@ -1100,26 +1219,13 @@ def _build_derived(
         m_post = recorder.phase("postings")
         m_pos = recorder.phase("positions")
         # per-shard average body length for the tight per-block max-score bound
-        avg_body = {
-            int(r["shard"]): (int(r["total_body"]) / int(r["doc_count"])
-                              if int(r["doc_count"]) else 0.0)
-            for r in stats_rows
-        }
+        avg_body = _avg_body(stats_rows)
         exploded = _explode_postings(docs)
 
         def _run_postings():
-            posting_blocks = (
-                exploded.drop("flags", "positions")
-                .repartition(sort_partitions, "term", "shard", "salt")
-                .sortWithinPartitions("term", "shard", "salt")
-                .mapInPandas(_make_posting_blocks(avg_body), schema=POSTING_BLOCK_SCHEMA)
-                .withColumn(
-                    "bucket",
-                    F.crc32(F.encode(F.col("term"), "ISO-8859-1")) % F.lit(num_buckets),
-                )
-            )
             m_post["ran"] = _write_once(
-                posting_blocks.repartition("bucket"),
+                _posting_blocks_df(exploded, avg_body, sort_partitions,
+                                   num_buckets),
                 os.path.join(out_dir, "postings"),
                 partition_by=["bucket"],
                 force=force,
@@ -1133,18 +1239,8 @@ def _build_derived(
             m_post["finished"] = recorder.elapsed()
 
         def _run_positions():
-            position_blocks = (
-                exploded.drop("body_len").filter(F.size("positions") > 0)
-                .repartition(sort_partitions, "term", "shard", "salt")
-                .sortWithinPartitions("term", "shard", "salt")
-                .mapInArrow(_position_blocks, schema=POSITION_BLOCK_SCHEMA)
-                .withColumn(
-                    "bucket",
-                    F.crc32(F.encode(F.col("term"), "ISO-8859-1")) % F.lit(num_buckets),
-                )
-            )
             m_pos["ran"] = _write_once(
-                position_blocks.repartition("bucket"),
+                _position_blocks_df(exploded, sort_partitions, num_buckets),
                 os.path.join(out_dir, "positions"),
                 partition_by=["bucket"],
                 force=force,
@@ -1162,16 +1258,10 @@ def _build_derived(
         m_cnt = recorder.phase("counters")
 
         def _run_term_dict():
-            term_dict = (
-                spark.read.parquet(os.path.join(out_dir, "postings"))
-                .groupBy("term", "shard", "bucket")
-                .agg(
-                    F.sum("doc_count").alias("df"),
-                    F.sum("freq_sum").alias("cf"),
-                )
-            )
             m_td["ran"] = _write_once(
-                term_dict, os.path.join(out_dir, "term_dict"),
+                _term_dict_rows(
+                    spark.read.parquet(os.path.join(out_dir, "postings"))),
+                os.path.join(out_dir, "term_dict"),
                 partition_by=["bucket"], force=force,
             )
             m_td["finished"] = recorder.elapsed()
@@ -1185,17 +1275,10 @@ def _build_derived(
                 with open(meta_path) as f:
                     counters = json.load(f).get("counters")  # resume: reuse
             if counters is None:
-                post = spark.read.parquet(os.path.join(out_dir, "postings"))
-                crow = post.agg(
-                    F.count("*").alias("blocks"),
-                    F.sum("doc_count").alias("postings"),
-                    F.sum(F.length("doc_ids_enc") + F.length("freqs_enc")).alias("bytes"),
-                ).collect()[0]
                 counters = {
                     "docs_tokenized": int(total_docs),
-                    "posting_blocks": int(crow["blocks"] or 0),
-                    "postings_emitted": int(crow["postings"] or 0),
-                    "posting_bytes_compressed": int(crow["bytes"] or 0),
+                    **_posting_counters(
+                        spark.read.parquet(os.path.join(out_dir, "postings"))),
                 }
                 m_cnt["ran"] = True
             else:
@@ -1213,11 +1296,6 @@ def _build_derived(
         if fut_stats is not None:
             fut_stats.result()
         fut_text.result()
-    finally:
-        # on success a no-op join; on an exception it blocks until
-        # every in-flight threaded write drains, so no stray job
-        # races a caller's cleanup/retry of this index dir
-        pool.shutdown(wait=True)
 
     if force:
         # a full (re)build folds away the append-merge LSM state: every
@@ -1366,18 +1444,9 @@ def read_stage(spark: SparkSession, index_dir: str) -> DataFrame:
         ).alias("_r"))
         .select("url", *[F.col("_r." + c).alias(c) for c in payload])
     )
-    delta_urls = delta_all.select("url").distinct()
     # broadcast the anti-join url probe only while the deltas are small
-    # on disk (same byte-estimate rule as the ids join in _build_derived);
-    # a compaction-overdue index degrades to AQE sort-merge, never OOM
-    delta_bytes = sum(
-        e.stat().st_size
-        for p in gens[1:]
-        for e in os.scandir(p)
-        if e.is_file() and e.name.endswith(".parquet")
-    )
-    if delta_bytes * 4 <= 512 * 1024 * 1024:
-        delta_urls = F.broadcast(delta_urls)
+    # on disk; a compaction-overdue index degrades to AQE sort-merge
+    delta_urls = _bcast_small(delta_all.select("url").distinct(), *gens[1:])
     survivors = base.join(delta_urls, "url", "left_anti")
     return survivors.unionByName(delta_resolved)
 
@@ -1858,25 +1927,14 @@ def _append_delta_derived(
     # docid-assignment chain; positions runs beside postings; the doc_map
     # append write runs under postings. Every table's plan and bytes are
     # unchanged — only wall-clock scheduling overlaps.
-    from concurrent.futures import ThreadPoolExecutor
-
-    pool = ThreadPoolExecutor(max_workers=4)
-    try:
+    # leaving the block joins every in-flight write, also on an exception,
+    # so no stray job races a caller's cleanup/retry of this index dir
+    with ThreadPoolExecutor(max_workers=4) as pool:
 
         # --- doc_text: url-sorted GENERATION dir (snippet fetch reads all
         # generations latest-wins, so a re-crawled url's new text shadows the
         # base sidecar row; each file carries its own url min/max for IN-list
         # pruning; compact_index folds the generations away) ---
-        # Broadcast guard for this merge's delta-bounded joins: same
-        # byte-estimate rule as _build_derived's ids join (x4 decompression
-        # headroom vs 512 MB), decided from bytes already on disk. A huge
-        # backfill delta then degrades to AQE sort-merge instead of
-        # OOMing the executors on a forced broadcast (code-review r5).
-        def _bcast_small(df, src_path):
-            if _dir_parquet_bytes(src_path) * 4 <= BROADCAST_BYTES_CAP:
-                return F.broadcast(df)
-            return df
-
         delta_gen_path = _stage_generations(out_dir)[-1]
 
         m_text = recorder.phase("doc_text")
@@ -1884,13 +1942,8 @@ def _append_delta_derived(
         text_gen = os.path.join(out_dir, f"doc_text_delta_{n_gen:05d}")
 
         def _run_doc_text():
-            (
-                delta.select("url", "title", "desc", "text")
-                .repartitionByRange(sort_partitions, "url")
-                .sortWithinPartitions("url")
-                .write.mode("overwrite").parquet(text_gen)
-            )
-            m_text["ran"] = True
+            m_text["ran"] = _write_doc_text(delta, text_gen, sort_partitions,
+                                            force=True)
             m_text["finished"] = recorder.elapsed()
 
         fut_text = pool.submit(_run_doc_text)
@@ -1918,11 +1971,10 @@ def _append_delta_derived(
                       "url")
                 .select("url", "doc_id", "shard", "local_id")
             )
-            if os.path.isdir(tomb_path) and _dir_parquet_bytes(tomb_path):
-                replaced = replaced.join(
-                    spark.read.parquet(tomb_path).select("shard", "local_id"),
-                    ["shard", "local_id"], "left_anti",
-                )
+            tomb = _tombstones_df(spark, out_dir)
+            if tomb is not None:
+                replaced = replaced.join(tomb, ["shard", "local_id"],
+                                         "left_anti")
             replaced.write.mode("overwrite").parquet(tomb_tmp)
             replaced_df = spark.read.parquet(tomb_tmp)
             n_replaced = replaced_df.count()
@@ -1941,20 +1993,7 @@ def _append_delta_derived(
         # --- delta docid assignment: url-ranked after the existing corpus ---
         m = recorder.phase("assign_ids_delta")
         ids_stage = os.path.join(out_dir, "_ids_delta_stage")
-        (
-            delta.select("url")
-            .repartitionByRange(sort_partitions, "url")
-            .sortWithinPartitions("url")
-            .withColumn("pid", F.spark_partition_id())
-            .write.mode("overwrite").parquet(ids_stage)
-        )
-        staged = spark.read.parquet(ids_stage)
-        counts = _pid_counts_from_footers(ids_stage)
-        if counts is None:  # footer stats unavailable — the one-job fallback
-            counts = {
-                int(r["pid"]): int(r["cnt"])
-                for r in staged.groupBy("pid").agg(F.count("*").alias("cnt")).collect()
-            }
+        staged, counts = _stage_urls(delta, ids_stage, sort_partitions)
         n_delta = sum(counts.values())
         m["delta_docs"] = n_delta
         if n_delta == 0:
@@ -1964,7 +2003,6 @@ def _append_delta_derived(
             # so a no-op merge leaves the index exactly as it found it
             fut_text.result()
             fut_tomb.result()
-            pool.shutdown()
             shutil.rmtree(text_gen, ignore_errors=True)
             shutil.rmtree(tomb_tmp, ignore_errors=True)
             shutil.rmtree(ids_stage, ignore_errors=True)
@@ -1980,39 +2018,9 @@ def _append_delta_derived(
             m["finished"] = recorder.elapsed()
             return {"meta": meta, "phases": recorder.phases,
                     "wall_s": recorder.elapsed(), "mode": "append"}
-        offsets = {}
-        acc = watermark
-        for pid in sorted(counts):
-            offsets[pid] = acc
-            acc += counts[pid]
-
-        def _assign(table):
-            import pyarrow as pa
-            import pyarrow.compute as pc
-
-            if table.num_rows == 0:
-                return table.drop_columns(["pid"])
-            order = pc.sort_indices(table, sort_keys=[("url", "ascending")])
-            table = table.take(order)
-            u = table.column("url").combine_chunks()
-            if table.num_rows > 1:
-                dup = pc.any(pc.equal(u.slice(1), u.slice(0, len(u) - 1)))
-                if dup.as_py():
-                    raise ValueError("duplicate url in append delta")
-            base = offsets[table.column("pid")[0].as_py()]
-            doc_id = base + np.arange(table.num_rows, dtype=np.int64)
-            shard = (doc_id // shard_size).astype(np.int32)
-            local = doc_id - shard.astype(np.int64) * shard_size
-            table = table.drop_columns(["pid"])
-            return (
-                table.append_column("doc_id", pa.array(doc_id, pa.int64()))
-                .append_column("shard", pa.array(shard, pa.int32()))
-                .append_column("local_id", pa.array(local, pa.int64()))
-            )
-
         ids_tmp = os.path.join(out_dir, "_ids_delta")
         staged.groupBy("pid").applyInArrow(
-            _assign, schema="url binary, doc_id long, shard int, local_id long"
+            _docid_assigner(counts, watermark, shard_size), schema=IDS_SCHEMA
         ).write.mode("overwrite").parquet(ids_tmp)
         # downstream phases read the delta ids from the tmp dir; the files are
         # adopted into doc_ids only after the last consumer ran (end of merge)
@@ -2030,18 +2038,9 @@ def _append_delta_derived(
 
         def _run_positions():
             m_pos["table_bytes_before"] = _dir_parquet_bytes(positions_path)
-            (
-                exploded.drop("body_len").filter(F.size("positions") > 0)
-                .repartition(sort_partitions, "term", "shard", "salt")
-                .sortWithinPartitions("term", "shard", "salt")
-                .mapInArrow(_position_blocks, schema=POSITION_BLOCK_SCHEMA)
-                .withColumn(
-                    "bucket",
-                    F.crc32(F.encode(F.col("term"), "ISO-8859-1"))
-                    % F.lit(num_buckets),
-                )
-                .repartition("bucket")
-                .write.mode("overwrite").partitionBy("bucket").parquet(pos_tmp)
+            _write_once(
+                _position_blocks_df(exploded, sort_partitions, num_buckets),
+                pos_tmp, partition_by=["bucket"], force=True,
             )
             m_pos["appended_bytes"] = _adopt_parquet_files(pos_tmp, positions_path)
             m_pos["ran"] = True
@@ -2065,37 +2064,21 @@ def _append_delta_derived(
         m = recorder.phase("doc_map_delta")
         doc_map_path = os.path.join(out_dir, "doc_map")
         m["table_bytes_before"] = _dir_parquet_bytes(doc_map_path)
-        stats_cols = ["shard", "doc_count", "total_body", "total_title",
-                      "total_url", "total_desc"]
+        stats_cols = ["shard", "doc_count", *STATS_SUMS]
         stats_parts = (
             spark.read.parquet(os.path.join(out_dir, "index_stats"))
             .select(*stats_cols)
-            .unionByName(
-                docs.groupBy("shard").agg(
-                    F.count("*").alias("doc_count"),
-                    F.sum("body_len").alias("total_body"),
-                    F.sum("title_len").alias("total_title"),
-                    F.sum("url_len").alias("total_url"),
-                    F.sum("desc_len").alias("total_desc"),
-                )
-            )
+            .unionByName(_shard_stats(docs))
         )
         if n_replaced:
             # subtract the dead docs' contributions, read from their (still
             # on-disk) doc_map rows — a broadcast semi-join, O(delta) rows
-            stats_parts = stats_parts.unionByName(
+            stats_parts = stats_parts.unionByName(_shard_stats(
                 spark.read.parquet(doc_map_path)
                 .join(_bcast_small(replaced_df.select("doc_id"),
-                                   tomb_tmp), "doc_id")
-                .groupBy("shard")
-                .agg(
-                    (-F.count("*")).alias("doc_count"),
-                    (-F.sum("body_len")).alias("total_body"),
-                    (-F.sum("title_len")).alias("total_title"),
-                    (-F.sum("url_len")).alias("total_url"),
-                    (-F.sum("desc_len")).alias("total_desc"),
-                )
-            )
+                                   tomb_tmp), "doc_id"),
+                negate=True,
+            ))
         stats_tmp = os.path.join(out_dir, "_index_stats_new")
         stats_agg = stats_parts.groupBy("shard").agg(
             *[F.sum(c).alias(c) for c in stats_cols if c != "shard"])
@@ -2105,29 +2088,18 @@ def _append_delta_derived(
         # still cannot race it. Crash mid-write leaves the old stats table
         # (swap is last) — and the redo for any mid-merge crash is
         # compact_index per the stage-generation ledger either way.
-        stats_schema = stats_agg.schema
-        stats_rows = sorted(stats_agg.collect(), key=lambda r: r["shard"])
+        stats_rows, write_stats = _collect_stats(stats_agg)
 
         def _run_stats_write():
-            spark.createDataFrame(stats_rows, schema=stats_schema) \
-                .coalesce(1).write.mode("overwrite").parquet(stats_tmp)
+            write_stats(stats_tmp)
             _swap_dir(stats_tmp, os.path.join(out_dir, "index_stats"))
 
         fut_stats = pool.submit(_run_stats_write)
-        avg_body = {
-            int(r["shard"]): (int(r["total_body"]) / int(r["doc_count"])
-                              if int(r["doc_count"]) else 0.0)
-            for r in stats_rows
-        }
+        avg_body = _avg_body(stats_rows)
         m_map = m
 
         def _run_doc_map_append():
-            doc_map_delta = docs.select(
-                "shard", "doc_id", "local_id", "url", "title",
-                "body_len", "title_len", "url_len", "desc_len", "static_rank",
-                F.lit(0.0).cast("float").alias("pagerank"),
-            )
-            doc_map_delta.write.mode("append").partitionBy("shard").parquet(
+            _doc_map_rows(docs).write.mode("append").partitionBy("shard").parquet(
                 doc_map_path)
             m_map["appended_bytes"] = (
                 _dir_parquet_bytes(doc_map_path) - m_map["table_bytes_before"])
@@ -2144,33 +2116,20 @@ def _append_delta_derived(
         postings_path = os.path.join(out_dir, "postings")
         m["table_bytes_before"] = _dir_parquet_bytes(postings_path)
         post_tmp = os.path.join(out_dir, "_postings_delta")
-        (
-            exploded.drop("flags", "positions")
-            .repartition(sort_partitions, "term", "shard", "salt")
-            .sortWithinPartitions("term", "shard", "salt")
-            .mapInPandas(_make_posting_blocks(avg_body), schema=POSTING_BLOCK_SCHEMA)
-            .withColumn(
-                "bucket",
-                F.crc32(F.encode(F.col("term"), "ISO-8859-1")) % F.lit(num_buckets),
-            )
-            .repartition("bucket")
-            .write.mode("overwrite").partitionBy("bucket").parquet(post_tmp)
+        _write_once(
+            _posting_blocks_df(exploded, avg_body, sort_partitions,
+                               num_buckets),
+            post_tmp, partition_by=["bucket"], force=True,
         )
         delta_post = spark.read.parquet(post_tmp)
-        crow = delta_post.agg(
-            F.count("*").alias("blocks"),
-            F.sum("doc_count").alias("postings"),
-            F.sum(F.length("doc_ids_enc") + F.length("freqs_enc")).alias("bytes"),
-        ).collect()[0]
+        delta_counters = _posting_counters(delta_post)
         # dictionary-sized rewrite: union old rows with the delta's df/cf and
         # re-aggregate — O(|dictionary| + |delta terms|), no posting decode.
         # Tombstoned docs SUBTRACT their per-(term, shard) df/cf, computed
         # from their old stage rows (the only place their term lists live) —
         # rows netting to df 0 drop out, exactly as a fresh build would
         term_tmp = os.path.join(out_dir, "_term_dict_new")
-        delta_term = delta_post.groupBy("term", "shard", "bucket").agg(
-            F.sum("doc_count").alias("df"), F.sum("freq_sum").alias("cf")
-        )
+        delta_term = _term_dict_rows(delta_post)
         if n_replaced:
             dead_term = (
                 old_stage.join(
@@ -2182,11 +2141,7 @@ def _append_delta_derived(
                 .groupBy("term", "shard")
                 .agg((-F.count("*")).alias("df"),
                      (-F.sum("freq")).alias("cf"))
-                .withColumn(
-                    "bucket",
-                    F.crc32(F.encode(F.col("term"), "ISO-8859-1"))
-                    % F.lit(num_buckets),
-                )
+                .withColumn("bucket", _bucket_col(num_buckets))
                 .select("term", "shard", "bucket", "df", "cf")
             )
             delta_term = delta_term.unionByName(dead_term)
@@ -2204,7 +2159,7 @@ def _append_delta_derived(
         # encoded posting payload alone — the scale-true marginal cost; the
         # file-level appended_bytes additionally carries a per-append floor of
         # ~num_buckets parquet footers (bounded, reclaimed by compact_index)
-        m["encoded_bytes"] = int(crow["bytes"] or 0)
+        m["encoded_bytes"] = delta_counters["posting_bytes_compressed"]
         m["ran"] = True
         m["finished"] = recorder.elapsed()
 
@@ -2213,22 +2168,12 @@ def _append_delta_derived(
         fut_map.result()
         fut_stats.result()
         fut_text.result()
-    finally:
-        # on success a no-op join; on an exception it blocks until
-        # every in-flight threaded write drains, so no stray job
-        # races a caller's cleanup/retry of this index dir
-        pool.shutdown(wait=True)
 
     # --- counters + metadata ---
     m = recorder.phase("counters")
     counters = dict(meta.get("counters") or {})
-    counters["docs_tokenized"] = counters.get("docs_tokenized", 0) + n_delta
-    counters["posting_blocks"] = (
-        counters.get("posting_blocks", 0) + int(crow["blocks"] or 0))
-    counters["postings_emitted"] = (
-        counters.get("postings_emitted", 0) + int(crow["postings"] or 0))
-    counters["posting_bytes_compressed"] = (
-        counters.get("posting_bytes_compressed", 0) + int(crow["bytes"] or 0))
+    for k, v in {"docs_tokenized": n_delta, **delta_counters}.items():
+        counters[k] = counters.get(k, 0) + v
     m.update(counters)
     m["finished"] = recorder.elapsed()
 

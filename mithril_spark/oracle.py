@@ -17,7 +17,7 @@ url sort is the deterministic, cluster-size-independent equivalent.
 from __future__ import annotations
 
 from .query.isr import DocMeta, ShardIndex
-from .query.shard import answer_query_on_shards, evaluate_query, handle_ranking
+from .query.shard import answer_query_on_shards, evaluate_query
 from .ranking import static_rank
 from .text.docproc import DocTerms, process_page
 
@@ -153,11 +153,6 @@ class OracleIndex:
     def top_k(self, query: str) -> list[tuple[int, int, bytes, list[bytes]]]:
         """Merged top-50 of (global_doc_id, score, url, title_words)."""
         return answer_query_on_shards(query, self.shards)
-
-    def shard_top_k(self, query: str, shard_idx: int):
-        shard = self.shards[shard_idx]
-        matches = evaluate_query(query, shard)
-        return handle_ranking(query, shard, matches)
 
     def top_k_with_snippets(
         self, query: str

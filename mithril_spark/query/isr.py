@@ -355,11 +355,6 @@ class TermReaderISR(ISR):
             raise IsrError("No current posting")
         return self.docs[self.idx]
 
-    def current_frequency(self) -> int:
-        if not self.has_next():
-            raise IsrError("No current posting")
-        return self.freqs[self.idx]
-
     def seek_to_doc_id(self, target: int) -> None:
         if not self.found or self.at_end:
             return

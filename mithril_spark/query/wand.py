@@ -116,9 +116,6 @@ class _Cursor:
     def current_block_ub(self) -> float:
         return self._block_ub(self.blocks[self.block_idx])
 
-    def current_block_last(self) -> int:
-        return self.blocks[self.block_idx]["last_doc_id"]
-
     def seek(self, target: int) -> None:
         """Advance to the first doc >= target, skipping blocks undecoded."""
         if self.exhausted:

@@ -35,12 +35,16 @@ _SCAN_OPEN_COST = 4 << 20
 def _t_wide(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Scan + round-robin repartition to the session's parallelism.
 
+    For the heavy per-row scans only: ``_shingles``, ``_simhash_sketches``
+    and ``_quantized(wide=True)``. The token-count doc queries read with
+    ``_t``; an interleaved sf0.1 A/B showed the repartition won them nothing.
+
     The documents/embeddings parquet files are a few MB compressed, so the
-    default 128 MB split size gives 1-2 scan tasks — but the queries over
-    them explode each row 50-100x (tokens, shingles, band rows) and run
-    heavy per-row work (md5, 120 vote sums, numpy matmuls) INSIDE that
-    scan stage, pinning the whole pipeline to 2 of 32 cores (guide §2.5
-    input skew / §6 input split size). A keyless repartition of the tiny
+    default 128 MB split size gives 1-2 scan tasks — but these scans
+    explode each row 50-100x (shingles, band rows) and run heavy per-row
+    work (md5, 120 vote sums, numpy matmuls) INSIDE that scan stage,
+    pinning the whole pipeline to 2 of 32 cores (guide §2.5 input skew /
+    §6 input split size). A keyless repartition of the tiny
     base table (a few MB shuffled once) unlocks full-core parallelism for
     the explode stage; every downstream aggregation here is
     order-independent, so results are unchanged on any partitioning.
@@ -385,7 +389,7 @@ def _tokens(col):
 
 def q_doc_term_df(spark, sf):
     """Document frequency of the 50 most frequent terms (the term_dict op)."""
-    d = _t_wide(spark, sf, "documents")
+    d = _t(spark, sf, "documents")
     return (
         d.select("doc_id", F.explode(F.array_distinct(_tokens(F.col("text")))).alias("term"))
         .filter(F.col("term") != "")
@@ -407,7 +411,7 @@ GROUP BY term ORDER BY df DESC, term ASC LIMIT 50
 
 def q_doc_search_tf(spark, sf):
     """Multi-term search scored by total term frequency (integer-exact)."""
-    d = _t_wide(spark, sf, "documents")
+    d = _t(spark, sf, "documents")
     terms = ["spark", "query", "join"]
     tok = d.select(
         "doc_id", F.explode(_tokens(F.col("text"))).alias("term")
@@ -458,7 +462,7 @@ FROM documents GROUP BY source
 
 def q_text_quality(spark, sf):
     """Quality scoring: length + stopword-ratio filters (integer-ratio exact)."""
-    d = _t_wide(spark, sf, "documents")
+    d = _t(spark, sf, "documents")
     toks = d.select(
         "doc_id", "lang",
         F.explode(_tokens(F.col("text"))).alias("term"),
@@ -493,7 +497,7 @@ WHERE n_tokens >= 20 AND FLOOR((n_stop * 100) / n_tokens) <= 60
 
 def q_lang_id(spark, sf):
     """Heuristic language ID by stopword hits; compare against labeled lang."""
-    d = _t_wide(spark, sf, "documents")
+    d = _t(spark, sf, "documents")
     toks = d.select("doc_id", "lang", F.explode(_tokens(F.col("text"))).alias("t"))
     scored = toks.groupBy("doc_id", "lang").agg(
         F.sum(F.col("t").isin(_EN_STOP_LIST).cast("int")).alias("en_hits"),
@@ -533,7 +537,7 @@ def q_doc_bm25_topk(spark, sf):
     """
     import math
 
-    d = _t_wide(spark, sf, "documents")
+    d = _t(spark, sf, "documents")
     toks = d.select("doc_id", F.explode(_tokens(F.col("text"))).alias("t"))
     per = toks.groupBy("doc_id").agg(
         F.count("*").alias("dl"),

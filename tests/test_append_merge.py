@@ -40,7 +40,8 @@ QUERIES = [
 
 
 def _sorted_pages(n, seed=42):
-    # binary url order — the docid-assignment sort key (indexer._assign)
+    # binary url order — the docid-assignment sort key
+    # (indexer._docid_assigner)
     pages = generate_pages(n, seed=seed)
     return sorted(pages, key=lambda p: p["url"].encode())
 
@@ -1155,23 +1156,47 @@ def test_force_rebuild_sweeps_stale_stage_deltas(spark, tmp_path_factory):
 
 def test_merge_joins_degrade_without_broadcast(spark, tmp_path_factory,
                                                monkeypatch):
-    """The append merge's delta-bounded joins are byte-guarded broadcasts
-    (code-review r5): with the budget forced to 0 every join takes the
-    AQE sort-merge path, and the merged index must be IDENTICAL to the
-    broadcast twin — the guard changes physical strategy only."""
+    """Every size-guarded broadcast — the build's ids join, the append
+    merge's delta-bounded joins and read_stage's anti-join — reads the one
+    BROADCAST_BYTES_CAP (indexer._bcast_small): with the budget forced to
+    0 every join takes the AQE sort-merge path, and the index must be
+    IDENTICAL to the broadcast twin — the guard changes physical strategy
+    only."""
     from mithril_spark import indexer as ix
 
     pages = _sorted_pages(50, seed=37)
     base, delta = pages[:40], pages[32:]  # 8 re-crawls + 10 new urls
 
-    a = str(tmp_path_factory.mktemp("bcast_on") / "i")
-    build_index(pages_to_df(spark, base), a, num_shards=2)
-    merge_index_delta(a, pages_to_df(spark, delta))
+    def ids_broadcast(res):
+        (row,) = [p for p in res["phases"] if p["phase"] == "assign_ids"]
+        return row["ids_broadcast"]
 
-    b = str(tmp_path_factory.mktemp("bcast_off") / "i")
-    build_index(pages_to_df(spark, base), b, num_shards=2)
-    monkeypatch.setattr(ix, "BROADCAST_BYTES_CAP", 0)
-    merge_index_delta(b, pages_to_df(spark, delta))
+    def stage_broadcasts(index_dir):
+        plan = ix.read_stage(spark, index_dir)._jdf.queryExecution() \
+            .executedPlan().toString()
+        return "BroadcastExchange" in plan
+
+    # Spark's size-estimate broadcast (autoBroadcastJoinThreshold, 10 MB by
+    # default) would broadcast these test-sized joins whatever the cap:
+    # off for both twins, only the guard's explicit hints can broadcast
+    conf = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "-1")
+    try:
+        a = str(tmp_path_factory.mktemp("bcast_on") / "i")
+        assert ids_broadcast(build_index(pages_to_df(spark, base), a,
+                                         num_shards=2))
+        merge_index_delta(a, pages_to_df(spark, delta))
+        assert stage_broadcasts(a)
+
+        b = str(tmp_path_factory.mktemp("bcast_off") / "i")
+        monkeypatch.setattr(ix, "BROADCAST_BYTES_CAP", 0)
+        assert not ids_broadcast(build_index(pages_to_df(spark, base), b,
+                                             num_shards=2))
+        merge_index_delta(b, pages_to_df(spark, delta))
+        assert not stage_broadcasts(b)
+    finally:
+        spark.conf.set(conf, old)
 
     _assert_same_index(spark, a, b)
 
