@@ -45,7 +45,12 @@ import pandas as pd
 
 from .query import grammar as g
 from .query.isr import DocMapCols, ShardIndex
-from .query.shard import evaluate_query, handle_ranking, merge_shard_topk
+from .query.shard import (
+    _drop_tombstoned,
+    evaluate_query,
+    handle_ranking,
+    merge_shard_topk,
+)
 from .ranking import tokenify_query
 
 RESULT_SCHEMA = "shard int, doc_id long, score long, url binary, title_packed binary"
@@ -274,13 +279,11 @@ def _payload_tuples(kind: str, column) -> list[tuple]:
 
 def _resident_column(col):
     """Arrow column -> what the resident store gathers rows from: a
-    zero-copy numpy array for numbers (an object array keeps a null
-    max_tfn ``None``), or (int64 offsets, data bytes) for binary."""
+    zero-copy numpy array for numbers, or (int64 offsets, data bytes) for
+    binary."""
     import pyarrow as pa
 
     col = col.combine_chunks()
-    if col.null_count:
-        return np.array(col.to_pylist(), dtype=object)
     if not pa.types.is_binary(col.type):
         return col.to_numpy()
     _validity, offsets, data = col.cast(pa.large_binary()).buffers()
@@ -783,8 +786,7 @@ class SearchEngine:
                 if scale:
                     for blocks in term_blocks.values():
                         for b in blocks:
-                            if b["max_tfn"] is not None:
-                                b["max_tfn"] *= scale
+                            b["max_tfn"] *= scale
                 avg = (
                     st["total_body"] / st["doc_count"]
                     if st["doc_count"] else 0.0
@@ -1095,14 +1097,9 @@ class SearchEngine:
                     payload, docmap_img,
                     tombstones=tombs.get(shard_id),
                 )
-                ms = evaluate_query(qstr, shard)
-                if shard.tombstones is not None and len(ms):
-                    # a NOT complement over the holey docid space yields
-                    # dead locals; top_k drops them at the doc-map lookup,
-                    # matches() must drop them here
-                    marr = np.asarray(ms, dtype=np.int64)
-                    ms = marr[~np.isin(marr, shard.tombstones,
-                                       assume_unique=True)]
+                # a NOT complement over the holey docid space yields
+                # dead locals; ranking drops them, so matches() must too
+                ms = _drop_tombstoned(shard, evaluate_query(qstr, shard))
                 out.extend(m + shard.base_doc_id for m in ms)
             return pd.DataFrame({"doc_id": out})
 
@@ -1113,18 +1110,14 @@ class SearchEngine:
 
 
 def _payload_blocks(p_rows) -> dict[str, list[dict]]:
-    """Payload posting tuples -> per-term block dicts for the WAND cursors."""
+    """Payload posting tuples -> per-term block dicts for the WAND cursors
+    (unordered: ``_Cursor`` sorts a term's blocks by ``first_doc_id``)."""
     out: dict[str, list[dict]] = {}
-    for term, salt, block_id, dc, fd, ld, mf, mt, de, fe in p_rows:
+    for term, _salt, _block_id, dc, fd, ld, mf, mt, de, fe in p_rows:
         out.setdefault(term, []).append({
             "doc_count": dc, "first_doc_id": fd, "last_doc_id": ld,
             "max_freq": mf, "max_tfn": mt, "doc_ids_enc": de, "freqs_enc": fe,
-            # first_doc_id, not block_id: append-mode segments restart
-            # block numbering, but docid ranges never overlap
-            "_order": (salt, fd),
         })
-    for blocks in out.values():
-        blocks.sort(key=lambda b: b["_order"])
     return out
 
 

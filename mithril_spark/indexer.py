@@ -190,16 +190,41 @@ def dedupe_pages(pages: DataFrame) -> DataFrame:
     )
     if not has_dups:
         return pages
-    payload = [c for c in pages.columns if c != "url"]
     order = []
     if "warc_ts" in pages.columns:
         order.append(F.col("warc_ts"))
     order.append(F.md5(F.col("html")))  # deterministic tie-break on content
+    return _latest_per_url(pages, order,
+                           [c for c in pages.columns if c != "url"])
+
+
+def _latest_per_url(rows: DataFrame, order: list, payload: list[str]
+                    ) -> DataFrame:
+    """One row per url: the ``payload`` columns of the row with the
+    greatest ``struct(*order)``. The one latest-wins rule of the crawl
+    dedupe (``dedupe_pages``) and of stage delta resolution
+    (``_resolve_deltas``)."""
     return (
-        pages.groupBy("url")
+        rows.groupBy("url")
         .agg(F.max_by(F.struct(*payload), F.struct(*order)).alias("_r"))
         .select("url", *[F.col("_r." + c).alias(c) for c in payload])
     )
+
+
+def _resolve_deltas(deltas: list[DataFrame]) -> DataFrame:
+    """Latest-wins over stage delta generations, oldest first: the
+    newest generation's row of a url wins, and within one generation
+    (streamed re-crawls of one url land in one delta) the content md5
+    breaks the tie deterministically — max_by alone would pick an
+    arbitrary row. ``read_stage`` resolves its deltas here and the append
+    merge resolves its one delta here, so a later recompaction keeps the
+    rows the append kept."""
+    payload = [c for c in deltas[0].columns if c != "url"]
+    tagged = deltas[0].withColumn("_gen", F.lit(0))
+    for i, d in enumerate(deltas[1:], start=1):
+        tagged = tagged.unionByName(d.withColumn("_gen", F.lit(i)))
+    return _latest_per_url(
+        tagged, [F.col("_gen"), F.md5(F.col("text")).alias("_h")], payload)
 
 
 def _refresh_index_caches(spark: SparkSession, index_dir: str) -> None:
@@ -1418,35 +1443,18 @@ def read_stage(spark: SparkSession, index_dir: str) -> DataFrame:
 
     Resolution shape at scale: older generations drop urls re-crawled in
     later ones via an anti-join (broadcastable — the delta url set is the
-    small side), and within the deltas a ``max_by`` on generation picks the
+    small side), and within the deltas ``_resolve_deltas`` picks the
     newest row. No full-corpus shuffle when there are no deltas.
     """
     gens = _stage_generations(index_dir)
     base = spark.read.parquet(gens[0])
     if len(gens) == 1:
         return base
-    deltas = [
-        spark.read.parquet(p).withColumn("_gen", F.lit(i))
-        for i, p in enumerate(gens[1:], start=1)
-    ]
-    delta_all = deltas[0]
-    for d in deltas[1:]:
-        delta_all = delta_all.unionByName(d)
-    payload = [c for c in base.columns if c != "url"]
-    # latest generation wins; within one generation (streamed re-crawls of
-    # the same url land in one delta) the content md5 breaks the tie
-    # deterministically — max_by alone would pick an arbitrary row
-    delta_resolved = (
-        delta_all.groupBy("url")
-        .agg(F.max_by(
-            F.struct(*payload),
-            F.struct(F.col("_gen"), F.md5(F.col("text")).alias("_h")),
-        ).alias("_r"))
-        .select("url", *[F.col("_r." + c).alias(c) for c in payload])
-    )
+    delta_resolved = _resolve_deltas(
+        [spark.read.parquet(p) for p in gens[1:]])
     # broadcast the anti-join url probe only while the deltas are small
     # on disk; a compaction-overdue index degrades to AQE sort-merge
-    delta_urls = _bcast_small(delta_all.select("url").distinct(), *gens[1:])
+    delta_urls = _bcast_small(delta_resolved.select("url"), *gens[1:])
     survivors = base.join(delta_urls, "url", "left_anti")
     return survivors.unionByName(delta_resolved)
 
@@ -1868,7 +1876,7 @@ def _append_delta_derived(
     back to the canonical layout. Blocks of one (term, shard) never
     overlap in docid between segments, so serving only needs to order a
     term's blocks by ``first_doc_id`` (engine._build_shard /
-    _payload_blocks).
+    query/wand.py _Cursor).
 
     RE-CRAWLED urls (LSM deletes): the old docid is TOMBSTONED — its
     stale rows stay on disk in every bulky table. Posting/position
@@ -1912,14 +1920,9 @@ def _append_delta_derived(
     total_docs = int(meta["total_docs"])
     watermark = int(meta.get("docid_watermark", total_docs))
 
-    # intra-delta url dedupe with read_stage's tie rule (max md5(text)) so a
-    # later recompaction resolves to the same rows
-    payload = [c for c in delta.columns if c != "url"]
-    delta = (
-        delta.groupBy("url")
-        .agg(F.max_by(F.struct(*payload), F.md5(F.col("text"))).alias("_r"))
-        .select("url", *[F.col("_r." + c).alias(c) for c in payload])
-    )
+    # intra-delta url dedupe through read_stage's own delta resolution, so
+    # a later recompaction resolves to the same rows
+    delta = _resolve_deltas([delta])
 
     # Independent phases overlap via threaded job submission, mirroring
     # _build_derived: the doc_text generation and the tombstone resolution

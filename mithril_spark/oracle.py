@@ -16,7 +16,7 @@ url sort is the deterministic, cluster-size-independent equivalent.
 
 from __future__ import annotations
 
-from .query.isr import DocMeta, ShardIndex
+from .query.isr import DocMapCols, DocMeta, ShardIndex
 from .query.shard import answer_query_on_shards, evaluate_query
 from .ranking import static_rank
 from .text.docproc import DocTerms, process_page
@@ -137,6 +137,8 @@ class OracleIndex:
                 pentry[0].append(local)
                 pentry[1].append(flags)
                 pentry[2].append(flat)
+        for shard in shards:
+            shard.doc_cols = DocMapCols.from_metas(shard.doc_map)
         return cls(shards, admitted)
 
     # --- query API (single-shard parity + multi-shard coordinator) ---

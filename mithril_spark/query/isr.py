@@ -39,6 +39,7 @@ from ..ranking import (
     ascii_lower,
     contains_porn_keywords,
     contains_porn_keywords_any,
+    static_rank,
 )
 from ..text.normalize import (
     ALL,
@@ -56,6 +57,9 @@ DOCID_MAX = 0xFFFFFFFF
 
 @dataclass
 class DocMeta:
+    """One doc-map row: the oracle's per-doc build record and the scalar
+    ranking path's per-doc view (``DocMapCols.meta``)."""
+
     doc_id: int
     url: bytes
     title: list[bytes]
@@ -66,7 +70,7 @@ class DocMeta:
     pagerank: float = 0.0
     # precomputed ranking.static_rank(url) — pure function of the url,
     # computed once at index build instead of per match in the hot loop;
-    # None falls back to computing it at ranking time.
+    # None: DocMapCols.from_metas computes it from the url.
     static_rank: float | None = None
 
 
@@ -76,11 +80,12 @@ class DocMapCols:
     The Spark analog of the reference's mmap'd document map
     (index/src/DocumentMapReader.cpp:15-100): one ``searchsorted`` resolves
     a docid to a row, and ranking gathers whole column slices per match
-    batch instead of probing a dict-of-DocMeta per match. The engine builds
-    one per shard from the doc_map parquet (``engine._docmap_image``) and
-    caches it; the dict ``doc_map`` stays as the oracle-side representation
-    (both must rank identically —
-    tests/test_vec_match.py::test_columnar_docmap_rank_identity).
+    batch instead of probing a dict-of-DocMeta per match. It is the only
+    doc-map form ranking reads: the engine builds one per shard from the
+    doc_map parquet (``engine._docmap_image``) and caches it, and the
+    oracle builds one per shard from its DocMeta dict (``from_metas``);
+    both builders must give tuple-identical rankings
+    (tests/test_vec_match.py::test_columnar_docmap_rank_identity).
     """
 
     __slots__ = ("local_ids", "urls", "titles", "title_counts", "body_lens",
@@ -105,9 +110,9 @@ class DocMapCols:
         self.static_ranks = np.asarray(static_ranks, dtype=np.float64)
         # Doc-only ranking precomputes (pure functions of url/title), paid
         # ONCE per image instead of per match per query, so per-query
-        # ranking skips the decode / ascii-lower / porn-regex work. The
-        # dict doc_map path computes the same values inline in
-        # handle_ranking — rank identity gates both forms.
+        # ranking skips the decode / ascii-lower / porn-regex work.
+        # handle_ranking_scalar recomputes them inline from the raw bytes
+        # ``meta`` returns, so vectorized == scalar gates them.
         self.urls_dec = [u.decode("latin-1") for u in urls]
         self.url_str_lens = np.fromiter(
             (len(u) for u in self.urls_dec), np.int64, n)
@@ -120,6 +125,26 @@ class DocMapCols:
         self.porn_mask = np.fromiter(
             (contains_porn_keywords_any(tw) or contains_porn_keywords(u)
              for tw, u in zip(titles, urls)), bool, n)
+
+    @classmethod
+    def from_metas(cls, doc_map: dict[int, DocMeta]) -> "DocMapCols":
+        """Image over a dict of DocMeta (the oracle's build, hand-built
+        test shards). A DocMeta without a static rank gets it computed from
+        the url, as the index build writes it into doc_map."""
+        ids = sorted(doc_map)
+        metas = [doc_map[i] for i in ids]
+        return cls(
+            ids,
+            [m.url for m in metas],
+            [m.title for m in metas],
+            [m.body_len for m in metas],
+            [m.title_len for m in metas],
+            [m.url_len for m in metas],
+            [m.desc_len for m in metas],
+            [m.pagerank for m in metas],
+            [static_rank(m.url.decode("latin-1")) if m.static_rank is None
+             else m.static_rank for m in metas],
+        )
 
     def __len__(self) -> int:
         return len(self.local_ids)
@@ -135,7 +160,7 @@ class DocMapCols:
         return idxc, (idx < len(ids)) & (ids[idxc] == m_arr)
 
     def meta(self, local_id: int) -> DocMeta | None:
-        """Single-doc DocMeta view (scalar oracle path compatibility)."""
+        """Single-doc DocMeta view (the scalar ranking path's lookup)."""
         ids = self.local_ids
         i = int(np.searchsorted(ids, local_id))
         if i >= len(ids) or ids[i] != local_id:
@@ -151,7 +176,11 @@ class DocMapCols:
 
 @dataclass
 class ShardIndex:
-    """One shard's RAM-resident index (the reference mmaps + loads the same)."""
+    """One shard's RAM-resident index (the reference mmaps + loads the same).
+
+    Ranking reads per-doc metadata only from ``doc_cols``; the oracle's
+    ``doc_map`` dict is build data (WAND's test twins read its body
+    lengths), never a ranking input."""
 
     doc_count: int = 0
     base_doc_id: int = 0
@@ -181,7 +210,9 @@ class ShardIndex:
     # dynamicranker.conf pagerank weight (shipped config: 0.0); a runtime
     # knob so a non-zero-weight config is answerable (VERDICT r01 #6)
     pagerank_weight: float = 0.0
-    # columnar doc-map image (engine path; None = dict doc_map only)
+    # the doc-map image ranking reads (engine._docmap_image on the engine,
+    # DocMapCols.from_metas on the oracle); None only on shards that are
+    # never ranked (match-enumeration tests)
     doc_cols: "DocMapCols | None" = None
     # per-term sorted int64 docid arrays for the vectorized match walk
     # (lazy views of `postings`; query/vecisr.py)
@@ -248,10 +279,8 @@ class ShardIndex:
         return entry
 
     def get_meta(self, local_id: int) -> DocMeta | None:
-        """Doc metadata by local id — columnar image when present."""
-        if self.doc_cols is not None:
-            return self.doc_cols.meta(local_id)
-        return self.doc_map.get(local_id)
+        """Doc metadata by local id, from the doc-map image."""
+        return self.doc_cols.meta(local_id)
 
     def has_positions(self, term: str, doc_id: int) -> bool:
         entry = self.positions.get(term)

@@ -19,12 +19,10 @@ from __future__ import annotations
 import numpy as np
 
 from ..ranking import (
-    ascii_lower,
     contains_porn_keywords,
     contains_porn_keywords_any,
     final_score,
     final_score_batch,
-    static_rank,
     tokenify_query,
 )
 from ..text.normalize import ALL, ANCHOR, DESC, STOPWORDS, TITLE, URL, normalize
@@ -402,87 +400,34 @@ def handle_ranking(
     stop = False
 
     cols = shard.doc_cols
+    pmask = cols.porn_mask
     for start in range(0, len(matches), RANK_CHUNK):
         chunk = matches[start:start + RANK_CHUNK]
         # entries in scan order; payload = (url_bytes, title_list) or None
-        # (missing doc). Porn-filtered docs are dropped entirely.
+        # (missing doc). Porn-filtered docs are dropped entirely. One
+        # searchsorted resolves the whole chunk, numeric columns gather by
+        # row index, and the image's doc-only precomputes (porn mask,
+        # decoded/lowered strings — DocMapCols) skip the per-match
+        # regex/decode/lower work entirely
         entries: list[tuple[int, object]] = []
-        if cols is not None:
-            # columnar image: one searchsorted resolves the whole chunk,
-            # numeric columns gather by row index (no per-match dict
-            # probes), and the image's doc-only precomputes (porn mask,
-            # decoded/lowered strings — DocMapCols) skip the per-match
-            # regex/decode/lower work entirely
-            c_arr = np.asarray(chunk, dtype=np.int64)
-            ridx, found = cols.gather(c_arr)
-            pmask = cols.porn_mask
-            sel_rows: list[int] = []
-            m_list: list[int] = []
-            for m, ok, i in zip(c_arr.tolist(), found.tolist(), ridx.tolist()):
-                if not ok:
-                    entries.append((m, None))
-                    continue
-                if pmask[i]:
-                    continue
-                entries.append((m, (cols.urls[i], cols.titles[i])))
-                sel_rows.append(i)
-                m_list.append(m)
-            nsc = len(sel_rows)
-            scored = nsc > 0
-            if scored:
-                rows = np.asarray(sel_rows, dtype=np.int64)
-                m_arr = np.asarray(m_list, dtype=np.int64)
-                urls = [cols.urls_dec[i] for i in sel_rows]
-                urls_low = [cols.urls_low[i] for i in sel_rows]
-                # pre-lowered words: ordered_match_score's lowering is
-                # idempotent, and the concat equals ascii_lower(concat)
-                title_words_list = [cols.titles_low[i] for i in sel_rows]
-                title_concats = [cols.title_concat_low[i] for i in sel_rows]
-                titles_pre_lowered = True
-                url_str_lens = cols.url_str_lens[rows]
-                title_sizes = cols.title_counts[rows]
-                body_lens = cols.body_lens[rows]
-                pageranks = cols.pageranks[rows]
-                static_ranks = cols.static_ranks[rows]
-        else:
-            scored_metas: list[tuple[int, object]] = []
-            for m in (chunk.tolist() if isinstance(chunk, np.ndarray) else chunk):
-                meta = shard.doc_map.get(m)
-                if meta is None:
-                    entries.append((m, None))
-                    continue
-                if contains_porn_keywords_any(meta.title) or contains_porn_keywords(meta.url):
-                    continue
-                entries.append((m, (meta.url, meta.title)))
-                scored_metas.append((m, meta))
-            nsc = len(scored_metas)
-            scored = nsc > 0
-            if scored:
-                m_arr = np.fromiter((m for m, _ in scored_metas), np.int64, nsc)
-                urls = [meta.url.decode("latin-1") for _, meta in scored_metas]
-                urls_low = None
-                title_words_list = [
-                    [t.decode("latin-1") for t in meta.title]
-                    for _, meta in scored_metas
-                ]
-                title_concats = [
-                    ascii_lower("".join(tw)) for tw in title_words_list]
-                titles_pre_lowered = False
-                url_str_lens = None
-                title_sizes = np.fromiter(
-                    (len(meta.title) for _, meta in scored_metas), np.int64, nsc)
-                body_lens = np.fromiter(
-                    (meta.body_len for _, meta in scored_metas), np.int64, nsc)
-                pageranks = np.fromiter(
-                    (meta.pagerank for _, meta in scored_metas), np.float64, nsc)
-                static_ranks = np.fromiter(
-                    (meta.static_rank if meta.static_rank is not None
-                     else static_rank(u)
-                     for (_, meta), u in zip(scored_metas, urls)),
-                    np.float64, nsc)
+        c_arr = np.asarray(chunk, dtype=np.int64)
+        ridx, found = cols.gather(c_arr)
+        sel_rows: list[int] = []
+        m_list: list[int] = []
+        for m, ok, i in zip(c_arr.tolist(), found.tolist(), ridx.tolist()):
+            if not ok:
+                entries.append((m, None))
+                continue
+            if pmask[i]:
+                continue
+            entries.append((m, (cols.urls[i], cols.titles[i])))
+            sel_rows.append(i)
+            m_list.append(m)
 
         scores = None
-        if scored:
+        if sel_rows:
+            rows = np.asarray(sel_rows, dtype=np.int64)
+            m_arr = np.asarray(m_list, dtype=np.int64)
             tf_by_term: dict[str, np.ndarray] = {}
             first_by_term: dict[str, np.ndarray] = {}
             in_desc_by_term: dict[str, np.ndarray] = {}
@@ -495,20 +440,25 @@ def handle_ranking(
                 da = desc_arrays.get(term)
                 if da is not None and term not in in_desc_by_term:
                     in_desc_by_term[term] = _sorted_member(da, m_arr)
+            # pre-lowered title words: ordered_match_score's lowering is
+            # idempotent, and the concat equals ascii_lower(concat)
             scores = final_score_batch(
                 tokens, stopword_idx, nonstopword_idx,
-                urls=urls, title_concats=title_concats,
-                title_words_list=title_words_list,
-                title_sizes=title_sizes, body_lens=body_lens,
+                urls=[cols.urls_dec[i] for i in sel_rows],
+                urls_low=[cols.urls_low[i] for i in sel_rows],
+                url_str_lens=cols.url_str_lens[rows],
+                title_concats=[cols.title_concat_low[i] for i in sel_rows],
+                title_words_list=[cols.titles_low[i] for i in sel_rows],
+                title_sizes=cols.title_counts[rows],
+                body_lens=cols.body_lens[rows],
                 doc_count=shard.doc_count,
                 avg_body_length=shard.avg_body_length,
                 doc_freqs=doc_freqs, tf_by_term=tf_by_term,
                 first_pos_by_term=first_by_term,
                 in_desc_by_term=in_desc_by_term,
-                static_ranks=static_ranks, pageranks=pageranks,
+                static_ranks=cols.static_ranks[rows],
+                pageranks=cols.pageranks[rows],
                 pagerank_weight=shard.pagerank_weight,
-                urls_low=urls_low, titles_pre_lowered=titles_pre_lowered,
-                url_str_lens=url_str_lens,
             )
 
         # replay the reference loop's counters over the score sequence

@@ -30,8 +30,6 @@ import numpy as np
 from ..codec import decode_posting_block
 from ..ranking import BM25_B, BM25_K1, bm25_score
 
-_MIN_NORM_BODY_LEN = 0  # norm factor floor (1-b) -> upper bound on tf'
-
 
 class _Cursor:
     """Lazy block cursor over one term's posting blocks (sorted by doc).
@@ -78,12 +76,7 @@ class _Cursor:
         # Tight bound: the block stores max normalized tf (tf / norm(body)),
         # computed with real body lengths at build time, so this equals the
         # max achievable score in the block for positive idf.
-        tfn = block.get("max_tfn")
-        if tfn is None:  # loose fallback when metadata is absent
-            return bm25_score(
-                self.doc_count, self.avg_body, _MIN_NORM_BODY_LEN,
-                self.df, block["max_freq"],
-            )
+        tfn = block["max_tfn"]
         idf = math.log(
             (self.doc_count - self.df + 0.5) / (self.df + 0.5)
         )

@@ -405,7 +405,7 @@ def final_score(
     body_positions: dict[str, list[int]],
     in_description: dict[str, bool],
     pagerank: float = 0.0,
-    static_rank_value: float | None = None,
+    static_rank_value: float,
     pagerank_weight: float | None = None,
 ) -> int:
     """GetFinalScore (Ranker.cpp:66-243) transcription.
@@ -533,9 +533,7 @@ def final_score(
         "earliest_pos_title": earliest_pos_title,
         "earliest_pos_body": earliest_pos_body,
         "bm25": weighted_bm25,
-        "static_rank": F32(
-            static_rank(url) if static_rank_value is None else static_rank_value
-        ),
+        "static_rank": F32(static_rank_value),
         "pagerank": F32(pagerank),
     }
     np.seterr(**_err)
@@ -569,6 +567,8 @@ def final_score_batch(
     nonstopword_idx: list[int],
     *,
     urls: list[str],
+    urls_low: list[str],
+    url_str_lens,
     title_concats: list[str],
     title_words_list: list[list[str]],
     title_sizes,
@@ -582,9 +582,6 @@ def final_score_batch(
     static_ranks,
     pageranks,
     pagerank_weight: float | None = None,
-    urls_low: list[str] | None = None,
-    titles_pre_lowered: bool = False,
-    url_str_lens=None,
 ) -> "np.ndarray":
     """GetFinalScore over a batch of matched docs; returns uint32 scores.
 
@@ -592,12 +589,10 @@ def final_score_batch(
     and first position per doc (0 where absent / no pointer — matching the
     scalar path's empty-positions convention); ``in_desc_by_term[t]`` is the
     %t presence bool. Missing term keys mean "no position pointer" (all 0 /
-    False), mirroring SetupPositionIndexPointers. ``urls_low`` /
-    ``titles_pre_lowered`` / ``url_str_lens`` let the engine supply its
-    per-shard-image doc-only precomputes (lowered strings, decoded url
-    lengths); absent, they are computed here — identical either way
-    (lowering is idempotent; str_len of a latin-1 decode equals the byte
-    length).
+    False), mirroring SetupPositionIndexPointers. ``urls_low``,
+    ``url_str_lens``, ``title_concats`` and ``title_words_list`` are the
+    doc-map image's doc-only precomputes (query/isr.py DocMapCols): the
+    title words and their concat arrive already ascii-lowered.
     """
     n = len(urls)
     if n == 0:
@@ -608,16 +603,10 @@ def final_score_batch(
     _false = np.zeros(n, dtype=bool)
 
     url_raw = np.asarray(urls, dtype=np.str_)
-    # lowered urls are only read SPARSELY (density counts at matching
-    # rows), so they stay a python list — no UCS4 array materialization
-    url_low_list = (
-        urls_low if urls_low is not None
-        else [ascii_lower(u) for u in urls])
+    # urls_low is only read SPARSELY (density counts at matching rows), so
+    # it stays a python list — no UCS4 array materialization
     title_low = np.asarray(title_concats, dtype=np.str_)
-    len_url = (
-        np.asarray(url_str_lens, dtype=np.int64)
-        if url_str_lens is not None
-        else np.char.str_len(url_raw).astype(np.int64))
+    len_url = np.asarray(url_str_lens, dtype=np.int64)
     title_sizes = np.asarray(title_sizes, dtype=np.int64)
     body_lens = np.asarray(body_lens, dtype=np.int64)
 
@@ -683,7 +672,7 @@ def final_score_batch(
                 url_occ = np.zeros(n, dtype=np.int64)
                 nz = np.flatnonzero(m_url)
                 for i in nz.tolist():
-                    url_occ[i] = url_low_list[i].count(term)
+                    url_occ[i] = urls_low[i].count(term)
                 url_occ = np.minimum(url_occ * len(term), len_url)
                 du = (url_occ.astype(f32) / len_url.astype(f32)) * mult_frac
                 density_url = np.where(m_url, density_url + du, density_url)
@@ -746,8 +735,7 @@ def final_score_batch(
             scan(stopword_idx, gate)
 
         ordered = np.fromiter(
-            (math.sqrt(ordered_match_score(tokens, tw,
-                                           pre_lowered=titles_pre_lowered))
+            (math.sqrt(ordered_match_score(tokens, tw, pre_lowered=True))
              for tw in title_words_list),
             dtype=np.float32, count=n,
         )

@@ -1107,6 +1107,59 @@ def test_empty_delta_merge_is_a_true_noop(spark, tmp_path_factory):
     _assert_same_index(spark, twin, inc_dir)
 
 
+def test_extracted_delta_duplicate_urls_resolve_like_read_stage(
+        spark, tmp_path_factory):
+    """An ``extracted=`` delta skips dedupe_pages, so it can hold several
+    rows of one url. The append resolves them through read_stage's own
+    delta resolution (indexer._resolve_deltas: greatest md5(text) within a
+    generation), so the appended index and its compaction serve the same
+    row — the one an oracle over that row serves — in top_k and in
+    snippet text."""
+    import hashlib
+
+    from mithril_spark.indexer import extract_docs
+    from mithril_spark.oracle import extract_text
+
+    admitted = [p for p in _sorted_pages(100, seed=42)
+                if extract_text(p["url"].encode(), p["html"]) is not None]
+    # an odd base leaves one free slot in the tail shard, so the appended
+    # url (it sorts last) lands where a fresh build and the compaction
+    # put it: docids and per-shard stats agree on all three indexes
+    base, last = admitted[:-1], admitted[-1]
+    assert len(base) % 2 == 1
+    url = last["url"].encode()
+    variants = [dict(last, html=admitted[i]["html"]) for i in (-1, 5, 40)]
+    texts = [extract_text(url, v["html"]) for v in variants]
+    assert len(set(texts)) == 3
+    winner = max(zip(texts, variants),
+                 key=lambda tv: hashlib.md5(tv[0]).hexdigest())[1]
+
+    inc_dir = str(tmp_path_factory.mktemp("dup_inc") / "i")
+    build_index(pages_to_df(spark, base), inc_dir, num_shards=2)
+    delta = extract_docs(pages_to_df(spark, variants))
+    assert delta.count() == 3
+    res = merge_index_delta(inc_dir, extracted=delta)
+    assert res["mode"] == "append"
+
+    oracle = OracleIndex.build(
+        [(p["url"].encode(), p["html"]) for p in base + [winner]],
+        num_shards=2)
+    # each of the three texts ranks the url differently on these queries
+    queries = ["search engine", "granite OR marble", "NOT quartz", "index"]
+    want = {q: (oracle.top_k(q), oracle.top_k_with_snippets(q))
+            for q in queries}
+    appended = SearchEngine(spark, inc_dir)
+    for q in queries:
+        assert appended.top_k(q) == want[q][0], q
+        assert appended.top_k_with_snippets(q) == want[q][1], q
+
+    compact_index(spark, inc_dir)
+    compacted = SearchEngine(spark, inc_dir)
+    for q in queries:
+        assert compacted.top_k(q) == want[q][0], q
+        assert compacted.top_k_with_snippets(q) == want[q][1], q
+
+
 def test_force_rebuild_sweeps_stale_stage_deltas(spark, tmp_path_factory):
     """build_index(force=True) over a dir that previously received append
     merges must sweep the old stage_delta_* generations: the rebuild

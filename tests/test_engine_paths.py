@@ -132,7 +132,7 @@ def _spark_payload(spark, path, pt, xt, dt) -> dict[int, dict[str, set]]:
         add(r, "P", (r["term"], int(r["salt"]), int(r["block_id"]),
                      int(r["doc_count"]), int(r["first_doc_id"]),
                      int(r["last_doc_id"]), int(r["max_freq"]),
-                     None if r["max_tfn"] is None else float(r["max_tfn"]),
+                     float(r["max_tfn"]),
                      bytes(r["doc_ids_enc"]), bytes(r["freqs_enc"])))
     for r in scan("positions", xt):
         add(r, "X", (r["term"], int(r["salt"]), int(r["first_doc_id"]),

@@ -13,7 +13,7 @@ import pytest
 
 from mithril_spark.fixtures import QUERY_SET, generate_pages, VOCAB, STOP_SAMPLE
 from mithril_spark.oracle import OracleIndex
-from mithril_spark.query.isr import DocMeta, ShardIndex
+from mithril_spark.query.isr import DocMapCols, DocMeta, ShardIndex
 from mithril_spark.query.shard import (
     evaluate_query,
     handle_ranking,
@@ -75,6 +75,7 @@ def _synthetic_shard(n_docs: int, seed: int = 3) -> ShardIndex:
     )
     # a doc-map hole: NotISR-style matches can reference unmapped docids
     del shard.doc_map[n_docs // 2]
+    shard.doc_cols = DocMapCols.from_metas(shard.doc_map)
     return shard
 
 

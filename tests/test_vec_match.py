@@ -1,5 +1,5 @@
 """Vectorized match enumeration == scalar ISR walk (exact), and the
-columnar doc-map image ranks identically to the dict image.
+engine's and the oracle's doc-map image builders rank identically.
 
 The numpy set-algebra evaluator (query/vecisr.py) is the engine default for
 quote/phrase-free trees; the per-doc cursor walk (evaluate_query_scalar,
@@ -8,9 +8,11 @@ Random trees cover AND/OR/NOT nesting, field terms, stopwords, missing
 terms, and quote/phrase fall-through.
 """
 
+import copy
 import random
 
 import numpy as np
+import pandas as pd
 import pytest
 
 from mithril_spark.fixtures import QUERY_SET, STOP_SAMPLE, VOCAB, generate_pages
@@ -114,6 +116,7 @@ def _tombstoned(shard, rng):
                                 [fl for _, fl, _ in kept],
                                 [p for _, _, p in kept])
     out.doc_map = {d: m for d, m in shard.doc_map.items() if d not in dead}
+    out.doc_cols = DocMapCols.from_metas(out.doc_map)
     return out
 
 
@@ -236,88 +239,80 @@ def test_kernels_against_python_sets():
         assert complement_sorted(b, dc).tolist() == want
 
 
-def _to_cols(shard: ShardIndex) -> ShardIndex:
-    """Clone a dict-doc_map shard into a columnar-image shard (the engine's
-    image form: DocMapCols with its doc-only ranking precomputes). A
-    DocMeta without a static rank gets it computed from the url, as the
-    index build writes it into doc_map."""
-    from mithril_spark.ranking import static_rank
-
-    ids = sorted(shard.doc_map)
-    metas = [shard.doc_map[i] for i in ids]
-    clone = ShardIndex(
-        doc_count=shard.doc_count, base_doc_id=shard.base_doc_id,
-        postings=shard.postings, positions=shard.positions,
-        total_body_length=shard.total_body_length,
-        total_title_length=shard.total_title_length,
-        total_url_length=shard.total_url_length,
-        total_desc_length=shard.total_desc_length,
-        extra_doc_freqs=shard.extra_doc_freqs,
-        pagerank_weight=shard.pagerank_weight,
-    )
-    clone.doc_cols = DocMapCols(
-        np.array(ids, dtype=np.int64),
-        [m.url for m in metas],
-        [m.title for m in metas],
-        [m.body_len for m in metas],
-        [m.title_len for m in metas],
-        [m.url_len for m in metas],
-        [m.desc_len for m in metas],
-        [m.pagerank for m in metas],
-        [m.static_rank if m.static_rank is not None
-         else static_rank(m.url.decode("latin-1")) for m in metas],
-    )
-    return clone
-
-
 def test_columnar_docmap_rank_identity(oracle):
-    """handle_ranking over the columnar image == over the dict image,
-    tuple-exact, for fixture + random queries (both score paths share
-    final_score_batch; this gates the gather/porn-filter/replay plumbing)."""
+    """The engine's image builder (engine._docmap_image over doc_map rows,
+    here a shuffled frame of an oracle shard's rows) and the oracle's
+    (DocMapCols.from_metas) rank tuple-identically, for fixture + random
+    queries — this gates the row sort and column conversions of the
+    engine's image against the oracle's."""
+    from mithril_spark.engine import _docmap_image
+
     rng = random.Random(99)
     queries = list(QUERY_SET) + [
         " ".join(rng.choice(VOCAB + STOP_SAMPLE) for _ in range(rng.randint(1, 4)))
         for _ in range(20)
     ]
     for shard in oracle.shards:
-        cshard = _to_cols(shard)
+        rows = [
+            {"local_id": d, "url": m.url, "title": m.title,
+             "body_len": m.body_len, "title_len": m.title_len,
+             "url_len": m.url_len, "desc_len": m.desc_len,
+             "pagerank": m.pagerank, "static_rank": m.static_rank}
+            for d, m in shard.doc_map.items()
+        ]
+        rng.shuffle(rows)
+        eshard = copy.copy(shard)
+        eshard.doc_cols = _docmap_image(pd.DataFrame(rows))
         for q in queries:
             matches = evaluate_query(q, shard)
-            assert handle_ranking(q, cshard, matches) == \
+            assert handle_ranking(q, eshard, matches) == \
                 handle_ranking(q, shard, matches), q
 
 
 def test_columnar_docmap_scalar_path(oracle):
-    """handle_ranking_scalar (per-doc DocMeta via get_meta) over the
-    columnar image == over the dict image — the oracle-compat surface."""
-    from mithril_spark.query.shard import handle_ranking_scalar
-
-    shard = oracle.shards[0]
-    cshard = _to_cols(shard)
-    for q in list(QUERY_SET)[:8]:
-        matches = evaluate_query(q, shard)
-        assert handle_ranking_scalar(q, cshard, matches) == \
-            handle_ranking_scalar(q, shard, matches), q
+    """DocMapCols.meta (the scalar ranking path's per-doc lookup) round-trips
+    every oracle DocMeta; an absent id gives None."""
+    for shard in oracle.shards:
+        for d, m in shard.doc_map.items():
+            assert shard.get_meta(d) == m, d
+        assert shard.get_meta(-1) is None
+        assert shard.get_meta(max(shard.doc_map) + 1) is None
 
 
 def test_columnar_docmap_with_holes():
-    """Missing docids rank as (m, 0, b'', []) on both representations."""
+    """Missing docids rank as (m, 0, b'', []) and porn-keyword docs drop
+    out, identically on the vectorized and scalar paths. Mixed-case urls
+    and titles reach the image's lowered-string precomputes."""
+    from mithril_spark.query.isr import DocMeta
+    from mithril_spark.query.shard import handle_ranking_scalar
+
     docs = list(range(0, 40, 2))
+    holes = {10, 26}
+    porn_urls = {4: b"https://ex.com/xxx/4.html", 30: b"https://nsfw.ex.com/30"}
+    porn_titles = {12: [b"free", b"P0RN"], 34: [b"sex"]}
     shard = ShardIndex(doc_count=40, base_doc_id=0)
     shard.postings["alpha"] = (docs, [1] * len(docs))
-    from mithril_spark.query.isr import DocMeta
-
     for d in docs:
-        if d == 10:
-            continue  # hole
+        if d in holes:
+            continue
+        mixed = d % 3 == 0
         shard.doc_map[d] = DocMeta(
-            doc_id=d, url=f"https://ex.com/a/{d}.html".encode(),
-            title=[b"doc"], body_len=50, title_len=3, url_len=20, desc_len=0,
+            doc_id=d,
+            url=porn_urls.get(d, (f"https://ex.com/alpha/ALPHA/{d}.html"
+                                  if mixed else f"https://ex.com/a/{d}.html"
+                                  ).encode()),
+            title=porn_titles.get(d, [b"Doc", b"ALPHA"] if mixed
+                                  else [b"doc", b"alpha"]),
+            body_len=50, title_len=3, url_len=20, desc_len=0,
         )
         shard.total_body_length += 50
-    cshard = _to_cols(shard)
+    shard.doc_cols = DocMapCols.from_metas(shard.doc_map)
+    assert shard.doc_cols.porn_mask.sum() == len(porn_urls) + len(porn_titles)
     matches = evaluate_query("alpha", shard)
     assert _as_list(matches) == docs
-    assert handle_ranking("alpha", cshard, matches) == handle_ranking(
-        "alpha", shard, matches
-    )
+    ranked = handle_ranking("alpha", shard, matches)
+    assert ranked == handle_ranking_scalar("alpha", shard, matches)
+    by_id = {d: (s, u, t) for d, s, u, t in ranked}
+    for d in holes:
+        assert by_id[d] == (0, b"", [])
+    assert not (set(porn_urls) | set(porn_titles)) & set(by_id)
