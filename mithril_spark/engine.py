@@ -36,7 +36,6 @@ concurrent queries over resident shards.
 from __future__ import annotations
 
 import collections
-import json
 import os
 import pickle
 
@@ -54,6 +53,11 @@ from .query.shard import (
 from .ranking import tokenify_query
 
 RESULT_SCHEMA = "shard int, doc_id long, score long, url binary, title_packed binary"
+# WAND pruning counters (query/wand.py::bm25_wand_topk's ``stats``)
+WAND_COUNTERS = ("blocks_total", "blocks_decoded", "blocks_skipped",
+                 "docs_scored")
+WAND_SCHEMA = ("doc_id long, score double, url binary, title_packed binary, "
+               + ", ".join(f"{c} long" for c in WAND_COUNTERS))
 
 
 def plan_terms(
@@ -238,13 +242,7 @@ def _worker_image(index_dir: str, shard: int, token: str) -> DocMapCols:
 # which bounds every payload per task instead.
 DEFAULT_MAX_PAYLOAD_ROWS = 1_000_000
 # The same bound in payload rows: ~128 postings per posting block row.
-# Position (X) rows are a DIFFERENT granularity: one row packs a whole
-# (term, shard, salt) group of up to SALT_RANGE (32k) docs' position lists,
-# so the posting-calibrated cap under-guards X bytes by up to ~256x — X
-# rows get their own, much lower cap, the driver-memory bound of
-# ``_hit_positions``.
 PAYLOAD_ROW_CAP = DEFAULT_MAX_PAYLOAD_ROWS // 128
-POSITION_ROW_CAP = DEFAULT_MAX_PAYLOAD_ROWS // 8192
 
 # On-disk bytes of the whole index (doc_map, postings, positions and
 # term_dict) under which the shard images and the term store are held
@@ -363,17 +361,6 @@ def _term_filter(terms, num_buckets: int):
             & ds.field("term").isin(sorted(terms)))
 
 
-def _count_rows(index_dir: str, kind: str, terms, num_buckets: int) -> int:
-    """Rows of one kind for ``terms`` across all shards, counted from the
-    ``term`` column alone — no payload bytes are read."""
-    import pyarrow.dataset as ds
-
-    return ds.dataset(
-        os.path.join(index_dir, PAYLOAD_TABLES[kind]), format="parquet",
-        partitioning="hive",
-    ).count_rows(filter=_term_filter(terms, num_buckets))
-
-
 def _read_shard_payload(index_dir: str, shard: int, posting_terms,
                         position_terms, df_terms, num_buckets: int) -> dict:
     """One shard's pruned query payload read DIRECTLY from the parquet
@@ -382,8 +369,7 @@ def _read_shard_payload(index_dir: str, shard: int, posting_terms,
     mapInPandas job, so posting blocks never transit the driver and no
     payload-collect job runs (r06, VERDICT r5 #3: a collect-then-dispatch
     plan paid TWO Spark jobs per query, ~0.4 s of its ~0.43 s/query in job
-    submission); ``_hit_positions`` calls it driver-side for the hit
-    shards only, after a row count.
+    submission).
 
     It reads the same files the Spark scans would (pyarrow's dataset
     reader ignores the same dot/underscore side files Spark does, and
@@ -433,6 +419,8 @@ class SearchEngine:
         self.postings = spark.read.parquet(os.path.join(index_dir, "postings"))
         self.positions = spark.read.parquet(os.path.join(index_dir, "positions"))
         self.term_dict = spark.read.parquet(os.path.join(index_dir, "term_dict"))
+        import pyarrow.parquet as pq
+
         self.stats = {
             int(r["shard"]): {
                 "doc_count": int(r["doc_count"]),
@@ -441,7 +429,8 @@ class SearchEngine:
                 "total_url": int(r["total_url"]),
                 "total_desc": int(r["total_desc"]),
             }
-            for r in spark.read.parquet(os.path.join(index_dir, "index_stats")).collect()
+            for r in pq.read_table(
+                os.path.join(index_dir, "index_stats")).to_pylist()
         }
         # Shard doc-map images are WORKER-RESIDENT (VERDICT r03 perf): a
         # query job ships only (shard, index_dir, token) rows; each reused
@@ -479,8 +468,6 @@ class SearchEngine:
         self._tombstones: dict[int, "np.ndarray"] = {}
         tomb_dir = os.path.join(index_dir, "tombstones")
         if os.path.isdir(tomb_dir) and _dir_parquet_bytes(tomb_dir):
-            import pyarrow.parquet as pq
-
             td = pq.read_table(tomb_dir).to_pydict()
             by_shard: dict[int, list] = {}
             for s, lid in zip(td["shard"], td["local_id"]):
@@ -522,8 +509,6 @@ class SearchEngine:
             _dir_parquet_bytes(os.path.join(index_dir, t))
             for t in PAYLOAD_TABLES.values())
         if shard_rows and 0 < dm_bytes and idx_bytes <= driver_serve_bytes:
-            import pyarrow.parquet as pq
-
             pdf = pq.read_table(
                 os.path.join(index_dir, "doc_map")).to_pandas()
             self._driver_images = {}
@@ -687,7 +672,8 @@ class SearchEngine:
                 for qi, q in enumerate(qlist):
                     matches = evaluate_query(q, shard)
                     qtokens = (
-                        tokenify_query(q)[0] if want_positions else None
+                        [t for t, _m in tokenify_query(q)[0]]
+                        if want_positions else None
                     )
                     for d, s, u, t in handle_ranking(q, shard, matches):
                         out["qidx"].append(qi)
@@ -697,16 +683,10 @@ class SearchEngine:
                         out["url"].append(u)
                         out["title_packed"].append(pack_words(t))
                         if want_positions:
-                            # per-term body positions for this hit (local
-                            # docid d) — already decoded for ranking
-                            pos = {}
-                            for term, _m in qtokens:
-                                p = shard.get_positions(term, int(d))
-                                if len(p):
-                                    pos[term] = [int(x) for x in p]
-                            out["pos_packed"].append(
-                                pickle.dumps(pos, protocol=4)
-                            )
+                            # already decoded for ranking
+                            out["pos_packed"].append(pickle.dumps(
+                                _term_positions(shard, qtokens, int(d)),
+                                protocol=4))
             return pd.DataFrame(out)
 
         from .codec import unpack_words
@@ -748,33 +728,42 @@ class SearchEngine:
         driver merges by (score desc, global doc asc).
 
         ``return_stats=True`` returns (results, stats) where stats carries
-        the aggregated pruning counters (blocks_total / blocks_skipped /
-        docs_scored) — the evidence that block-max metadata actually skips
-        undecoded blocks. This pruning stays BM25-only by design: the
+        the aggregated pruning counters (blocks_total / blocks_decoded /
+        blocks_skipped / docs_scored; empty when no shard ran WAND) — the
+        evidence that block-max metadata actually skips undecoded blocks.
+        This pruning stays BM25-only by design: the
         flagship ``top_k`` ranker's uint32 wrap makes any
         cannot-reach-threshold bound unsound (a negative pre-wrap score
         wraps to ~2^32 and ranks FIRST — ranking.py get_url_dynamic_rank),
         so the exhaustive dynamic path cannot skip blocks without changing
         results."""
-        from .text.normalize import BODY, normalize
+        hits, agg = self._wand(_wand_terms(query), k)
+        res = [(d, s) for d, s, *_ in hits]
+        return (res, agg) if return_stats else res
 
-        terms = {
-            normalize(tok.encode("utf-8"), BODY).decode("latin-1")
-            for tok in query.split()
-        } - {""}
-        if not terms:
-            return []
+    def _wand(self, qterms: list[str], k: int, with_positions: bool = False):
+        """(merged WAND hits, summed pruning counters) of ONE ``_execute``
+        pass. A hit is (doc_id, score, url, title_words), plus its
+        {term: body positions} when ``with_positions`` is set: url and
+        title come from the shard's doc-map image, positions from the same
+        pass's X payload (fetched only then), decoded and tombstone-filtered
+        by ``_build_shard`` exactly as for the flagship path. Each shard
+        that ran WAND adds one counters row (doc_id -1); hit rows carry
+        zero counters. A query without terms runs no pass."""
+        if not qterms:
+            return [], {}
+        terms = sorted(set(qterms))
         stats = self.stats
         shard_size = self.meta["shard_size"]
         tfn_scales = self._tfn_scale
         tombs = self._tombstones
 
         def shard_fn(shard_id, pl, docmap_img):
+            from .codec import pack_words
             from .query.wand import bm25_wand_topk
 
-            shards_out, docs_out, scores_out, stats_out = [], [], [], []
+            rows = []
             st = stats.get(shard_id)
-            wstats: dict = {}
             if st is not None and pl and pl["P"]:
                 base = shard_id * shard_size
                 body_lens = dict(zip(
@@ -791,7 +780,8 @@ class SearchEngine:
                     st["total_body"] / st["doc_count"]
                     if st["doc_count"] else 0.0
                 )
-                for d, s in bm25_wand_topk(
+                wstats: dict = {}
+                top = bm25_wand_topk(
                     term_blocks, body_lens, st["doc_count"], avg, k,
                     stats=wstats,
                     # exact term_dict dfs + dead filtering keep WAND
@@ -799,104 +789,46 @@ class SearchEngine:
                     # segments; both are identity on a clean index
                     dfs=dict(pl.get("D") or []) or None,
                     tombstones=tombs.get(shard_id),
-                ):
-                    shards_out.append(shard_id)
-                    docs_out.append(d + base)
-                    scores_out.append(s)
-                stats_out = [json.dumps(wstats)] * len(shards_out)
-                if not shards_out:
-                    # a shard whose candidates were all pruned/tombstoned
-                    # still ran WAND — its pruning counters must reach the
-                    # driver (they undercounted exactly when pruning was
-                    # most effective, code-review r5); doc_id=-1 marks a
-                    # stats-only sentinel the merge drops
-                    shards_out, docs_out = [shard_id], [-1]
-                    scores_out, stats_out = [0.0], [json.dumps(wstats)]
-            return pd.DataFrame(
-                {"shard": shards_out, "doc_id": docs_out,
-                 "score": scores_out, "wstats": stats_out}
-            )
+                )
+                if with_positions:
+                    shard = _build_shard(
+                        shard_id, shard_size, st, {"P": [], "X": pl["X"]},
+                        docmap_img, tombstones=tombs.get(shard_id))
+                for d, s in top:
+                    meta = docmap_img.meta(d)
+                    row = [d + base, s, meta.url, pack_words(meta.title),
+                           0, 0, 0, 0]
+                    if with_positions:
+                        row.append(pickle.dumps(
+                            _term_positions(shard, terms, d), protocol=4))
+                    rows.append(row)
+                if wstats:
+                    row = [-1, 0.0, b"", b"",
+                           *(wstats[c] for c in WAND_COUNTERS)]
+                    rows.append(row + [b""] if with_positions else row)
+            return pd.DataFrame(rows, columns=cols)
 
-        rows = self._execute(
-            terms, set(), terms, shard_fn,
-            "shard int, doc_id long, score double, wstats string",
-        )
-        merged = sorted(
-            ((int(r["doc_id"]), float(r["score"])) for r in rows
-             if int(r["doc_id"]) >= 0),
-            key=lambda t: (-t[1], t[0]),
-        )
-        if not return_stats:
-            return merged[:k]
-        agg: dict[str, int] = {}
-        for sid in {int(r["shard"]) for r in rows}:
-            per = next(
-                (json.loads(r["wstats"]) for r in rows
-                 if int(r["shard"]) == sid and r["wstats"]), {},
-            )
-            for key, v in per.items():
-                agg[key] = agg.get(key, 0) + int(v)
-        return merged[:k], agg
+        from .codec import unpack_words
 
-    def _hit_positions(
-        self, terms: set[str], hit_ids: list[int]
-    ) -> dict[int, dict[str, list[int]]]:
-        """Per-hit-docid {term: body positions} via ONE pruned positions
-        fetch for the query's terms (VERDICT r04 #6): the resident term
-        store when available, else ``_read_shard_payload`` for the hit
-        shards only, after a ``term``-column row count across all shards.
-        Returns {} when the terms' position rows exceed
-        ``POSITION_ROW_CAP`` (head terms) — the caller degrades to the
-        substring stage, exactly the positions-less behavior. k hit docs
-        means the decode work is one bounded pass over the query terms'
-        blocks; dead locals cannot collide with hits (tombstoned ids are
-        never reused — docid_watermark).
-
-        Snippet assembly is a DRIVER-side serving API by design (the doc
-        text fetch already collects the top-k rows), so unlike the match
-        path this fetch runs in the driver on both tiers; the row count
-        comes before any payload read, so the cap bounds driver bytes at
-        X-row granularity (one row per (term, shard, salt) group of up to
-        SALT_RANGE docs' position lists)."""
-        if not terms or not hit_ids:
-            return {}
-        from .codec import decode_position_block
-
-        shard_size = self.meta["shard_size"]
-        want_by_shard: dict[int, dict[int, int]] = {}
-        for gid in hit_ids:
-            s = gid // shard_size
-            want_by_shard.setdefault(s, {})[gid - s * shard_size] = gid
-        nb = self.meta["num_buckets"]
-        if self._driver_store is not None:
-            shards, rows = self._driver_store.rows("X", terms)
-            if len(rows) > POSITION_ROW_CAP:
-                return {}
-        elif _count_rows(self.index_dir, "X", terms, nb) > POSITION_ROW_CAP:
-            return {}
-        else:
-            shards, rows = [], []
-            for s in sorted(want_by_shard):
-                xs = _read_shard_payload(
-                    self.index_dir, s, (), terms, (), nb)["X"]
-                shards += [s] * len(xs)
-                rows += xs
-        by_key: dict[tuple, list] = {}
-        for s, (t, salt, fd, de, fe, ce, pe) in zip(shards, rows):
-            if s in want_by_shard:
-                by_key.setdefault((s, t), []).append((salt, fd, de, fe, ce, pe))
-        out: dict[int, dict[str, list[int]]] = {}
-        for (s, t), blocks in by_key.items():
-            blocks.sort(key=lambda b: (b[0], b[1]))
-            locals_ = want_by_shard[s]
-            for _salt, _fd, de, fe, ce, pe in blocks:
-                docs, _flags, plists = decode_position_block(de, fe, ce, pe)
-                for i, d in enumerate(docs.tolist()):
-                    gid = locals_.get(d)
-                    if gid is not None and len(plists[i]):
-                        out.setdefault(gid, {})[t] = [
-                            int(x) for x in plists[i]]
-        return out
+        cols = ["doc_id", "score", "url", "title_packed", *WAND_COUNTERS]
+        schema = WAND_SCHEMA
+        if with_positions:
+            cols.append("pos_packed")
+            schema += ", pos_packed binary"
+        hits, agg = [], {}
+        for r in self._execute(terms, terms if with_positions else (),
+                               terms, shard_fn, schema):
+            if int(r["doc_id"]) < 0:
+                for c in WAND_COUNTERS:
+                    agg[c] = agg.get(c, 0) + int(r[c])
+                continue
+            hit = (int(r["doc_id"]), float(r["score"]), bytes(r["url"]),
+                   unpack_words(bytes(r["title_packed"])))
+            if with_positions:
+                hit += (pickle.loads(bytes(r["pos_packed"])),)
+            hits.append(hit)
+        hits.sort(key=lambda h: (-h[1], h[0]))
+        return hits[:k], agg
 
     def bm25_topk_with_snippets(
         self, query: str, k: int = 10
@@ -905,118 +837,62 @@ class SearchEngine:
         score, url, title_words, snippet) — feature parity with
         ``top_k_with_snippets`` for the WAND path (VERDICT r03 #8).
 
-        Hit urls/titles resolve with one pruned scan of the ``doc_map``
-        table (doc_id IN pushes to parquet); document text comes from the
-        same url-sorted ``doc_text`` sidecar fetch. WAND itself carries no
-        positions, but the top-k docs' term positions are recovered with
-        one extra pruned positions fetch (``_hit_positions``, VERDICT r04
-        #6) so snippet extraction enters generateSnippet's preference
-        order at the positions stage like the flagship path
-        (Snippets.h:183-217); an oversized positions payload degrades to
-        the substring stage, then the document-head fallback."""
-        from pyspark.sql import functions as F
-
-        from .snippets import combined_text, generate_snippet
-        from .text.normalize import BODY, normalize
-
-        results = self.bm25_topk(query, k)
-        if not results:
-            return []
-        ids = [d for d, _s in results]
-        # the live view, not the raw table (CLAUDE.md: never read doc_map
-        # raw on a tombstoned index): the k hit ids are provably live
-        # (WAND decode filters tombstones; docids are never reused), but
-        # the masked view costs only a broadcast anti-join here and keeps
-        # the invariant structural — the IN filter still pushes to parquet
-        from .indexer import read_doc_map_live
-
-        dm = (
-            read_doc_map_live(self.spark, self.index_dir)
-            .filter(F.col("doc_id").isin(ids))
-            .select("doc_id", "url", "title")
-            .collect()
-        )
-        meta_by_id = {int(r["doc_id"]): r for r in dm}
-        urls = [bytes(meta_by_id[d]["url"]) for d in ids if d in meta_by_id]
-        by_url = self._fetch_doc_rows(urls)
-        qterms = [
-            t for t in (
-                normalize(tok.encode("utf-8"), BODY).decode("latin-1")
-                for tok in query.split()
-            ) if t
-        ]
-        pos_by_doc = self._hit_positions(set(qterms), ids)
-        out = []
-        for doc_id, score in results:
-            meta = meta_by_id.get(doc_id)
-            if meta is None:
-                out.append((doc_id, score, b"", [], "No preview available"))
-                continue
-            url = bytes(meta["url"])
-            title = [bytes(t) for t in (meta["title"] or [])]
-            row = by_url.get(url)
-            if row is None:
-                out.append((doc_id, score, url, title, "No preview available"))
-                continue
-            text = combined_text(
-                [t.decode("latin-1") for t in title],
-                bytes(row["desc"]).decode("latin-1")
-                if row["desc"] is not None else "",
-                bytes(row["text"]).decode("latin-1"),
-            )
-            out.append((
-                doc_id, score, url, title,
-                generate_snippet(text, qterms,
-                                 positions=pos_by_doc.get(doc_id)),
-            ))
-        return out
+        Url, title and the query terms' body positions of each hit ride
+        the WAND pass itself (``_wand(with_positions=True)``), so snippet
+        extraction enters generateSnippet's preference order at the
+        positions stage like the flagship path (Snippets.h:183-217)."""
+        qterms = _wand_terms(query)
+        hits, _agg = self._wand(qterms, k, with_positions=True)
+        return self._with_snippets(hits, qterms)
 
     def top_k_with_snippets(
         self, query: str
     ) -> list[tuple[int, int, bytes, list[bytes], str]]:
         """top_k + a result snippet per hit (web/src/Snippets.h:183-217).
 
+        Each hit carries its per-term body positions exactly like the
+        reference's std::get<4>(result) (SearchPlugin.cpp:494); the
+        snippet is built by ``_with_snippets``."""
+        results = self.top_k_many([query], with_positions=True)[0]
+        _pt, _xt, tokens = plan_terms(query)
+        return self._with_snippets(results, [t for t, _m in tokens])
+
+    def _with_snippets(self, hits, qterms: list[str]) -> list[tuple]:
+        """(doc_id, score, url, title_words, snippet) per hit (doc_id,
+        score, url, title_words, positions) — the one snippet assembler.
+
         The reference's web tier re-reads gzipped crawl chunks through an
         LRU (DocumentAccessor); here the documents live in the index's
         url-sorted ``doc_text`` sidecar, so the hits are fetched with one
         pruned scan (url IN top-k reaches the parquet scan as pushed
         filters, and the url sort makes row-group min/max skipping
-        effective — tests/test_plans.py guards the plan shape).
+        effective — tests/test_snippets.py guards the plan shape).
 
         Snippet extraction follows generateSnippet's preference order: the
-        hit's per-term body positions (carried on the result tuple exactly
-        like the reference's std::get<4>(result), SearchPlugin.cpp:494)
-        feed extractSnippetFromPositions first, then the substring search,
-        then the document-head fallback. Like the reference's dormant
-        positions path, token positions index into the combined
-        title+desc+body text unadjusted (Snippets.h:287-328 applies them to
-        getDocumentText's output as-is).
-        """
-        results = self.top_k_many([query], with_positions=True)[0]
-        if not results:
+        hit's positions feed extractSnippetFromPositions first, then the
+        substring search, then the document-head fallback. Like the
+        reference's dormant positions path, token positions index into the
+        combined title+desc+body text unadjusted (Snippets.h:287-328
+        applies them to getDocumentText's output as-is)."""
+        if not hits:
             return []
         from .snippets import combined_text, generate_snippet
 
-        urls = [url for _d, _s, url, _t, _p in results]
-        by_url = self._fetch_doc_rows(urls)
-        _pt, _xt, tokens = plan_terms(query)
-        qterms = [t for t, _m in tokens]
+        by_url = self._fetch_doc_rows([h[2] for h in hits])
         out = []
-        for doc_id, score, url, title, positions in results:
+        for doc_id, score, url, title, positions in hits:
             row = by_url.get(url)
             if row is None:
-                out.append((doc_id, score, url, title, "No preview available"))
-                continue
-            text = combined_text(
-                [bytes(t).decode("latin-1") for t in (row["title"] or [])],
-                bytes(row["desc"]).decode("latin-1")
-                if row["desc"] is not None else "",
-                bytes(row["text"]).decode("latin-1"),
-            )
-            out.append((
-                doc_id, score, url, title,
-                generate_snippet(text, qterms, positions=positions),
-            ))
+                snippet = "No preview available"
+            else:
+                text = combined_text(
+                    [bytes(t).decode("latin-1") for t in (row["title"] or [])],
+                    bytes(row["desc"]).decode("latin-1")
+                    if row["desc"] is not None else "",
+                    bytes(row["text"]).decode("latin-1"),
+                )
+                snippet = generate_snippet(text, qterms, positions=positions)
+            out.append((doc_id, score, url, title, snippet))
         return out
 
     def _fetch_doc_rows(self, urls) -> dict[bytes, dict]:
@@ -1107,6 +983,25 @@ class SearchEngine:
             posting_terms, position_terms, set(), shard_fn, "doc_id long"
         )
         return sorted(int(r["doc_id"]) for r in rows)
+
+
+def _wand_terms(query: str) -> list[str]:
+    """A WAND query's body-normalized terms, in query order."""
+    from .text.normalize import BODY, normalize
+
+    return [t for t in (normalize(tok.encode("utf-8"), BODY).decode("latin-1")
+                        for tok in query.split()) if t]
+
+
+def _term_positions(shard: ShardIndex, terms, local_doc: int) -> dict:
+    """{term: body positions} of one hit (local docid) for the terms that
+    occur in it — the positions a snippet starts from."""
+    pos = {}
+    for term in terms:
+        p = shard.get_positions(term, local_doc)
+        if len(p):
+            pos[term] = [int(x) for x in p]
+    return pos
 
 
 def _payload_blocks(p_rows) -> dict[str, list[dict]]:

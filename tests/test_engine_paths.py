@@ -151,9 +151,14 @@ def test_direct_payload_read_equals_union_scan(spark, corpus,
     same payload tuples per shard as plain ``term.isin`` scans of the
     parquet tables, including for a term absent from the index (the e2e
     rank-identity tests would also catch a divergence, but only if it
-    flips a top-50). _hit_positions must also return the same positions
-    from the resident store as from the DIRECT reads."""
-    from mithril_spark.engine import SearchEngine, _read_shard_payload
+    flips a top-50). WAND snippets must also be the same, hit for hit,
+    whether their positions come from the resident store or the DIRECT
+    reads."""
+    from mithril_spark.engine import (
+        SearchEngine,
+        _read_shard_payload,
+        _wand_terms,
+    )
 
     path = _index(spark, corpus, tmp_path_factory, 3)
     e = SearchEngine(spark, path, driver_serve_bytes=0)
@@ -180,11 +185,13 @@ def test_direct_payload_read_equals_union_scan(spark, corpus,
                 assert set(got[kind]) == want[kind], (name, shard, kind)
                 assert absent not in {t[0] for t in got[kind]}
 
-    hits = [d for d, _s in resident.bm25_topk("granite quartz marble", k=20)]
-    terms = {"granite", "quartz", "marble", absent}
-    got = resident._hit_positions(terms, hits)
-    assert got, "no positions recovered for the hits"
-    assert got == e._hit_positions(terms, hits)
+    q = f"granite quartz marble {absent}"
+    hits, st = resident._wand(_wand_terms(q), 20, with_positions=True)
+    assert any(pos for *_h, pos in hits), "no positions recovered"
+    assert (hits, st) == e._wand(_wand_terms(q), 20, with_positions=True)
+    got = resident.bm25_topk_with_snippets(q, k=20)
+    assert [(d, s) for d, s, *_r in got] == resident.bm25_topk(q, k=20)
+    assert got == e.bm25_topk_with_snippets(q, k=20)
 
 
 def test_image_load_stats_plumbing(spark, corpus, tmp_path_factory):
@@ -235,9 +242,9 @@ def test_direct_matches_and_wand_agree_with_resident_path(
         assert direct.top_k_many([q], with_positions=True) == \
             drv.top_k_many([q], with_positions=True), q
         assert direct.top_k_with_snippets(q) == drv.top_k_with_snippets(q), q
-        # WAND snippets (positions recovered via _hit_positions) must be
-        # identical whether the positions payload comes from the resident
-        # store (drv) or the DIRECT reads of the hit shards (direct)
+        # WAND snippets (positions ride the WAND pass) must be identical
+        # whether the positions payload comes from the resident store (drv)
+        # or the DIRECT reads (direct)
         assert direct.bm25_topk_with_snippets(q, k=5) == \
             drv.bm25_topk_with_snippets(q, k=5), q
 
@@ -260,6 +267,7 @@ def test_oversized_resident_payload_serves_direct(
     wand = ["search engine", "granite quartz marble", "marble"]
     matched = ["search engine", "index NOT (spark OR engine)", "thermite"]
     want_wand = {q: e.bm25_topk(q, k=5) for q in wand}
+    want_snippets = {q: e.bm25_topk_with_snippets(q, k=5) for q in wand}
     want_matches = {q: e.matches(q) for q in matched}
 
     sc = spark.sparkContext
@@ -281,6 +289,49 @@ def test_oversized_resident_payload_serves_direct(
              + [(e.matches, (q,), {}, want_matches[q]) for q in matched])
     for i, (fn, args, kwargs, want) in enumerate(calls):
         assert one_job(i, fn, *args, **kwargs) == want, (fn, args)
+    # WAND snippets over the cap: the WAND pass (urls, titles, positions)
+    # runs DIRECT, and the answer equals the resident one
+    for q in wand:
+        assert e.bm25_topk_with_snippets(q, k=5) == want_snippets[q], q
+
+
+def test_wand_snippets_take_one_wand_pass(spark, corpus, tmp_path_factory,
+                                          monkeypatch):
+    """bm25_topk_with_snippets takes each hit's url, title and positions
+    from its own WAND pass: with the doc_text fetch (_fetch_doc_rows)
+    answering from the rows the real fetch returned, a resident engine
+    submits no Spark job and a DIRECT engine exactly one."""
+    from mithril_spark.engine import SearchEngine
+
+    path = _index(spark, corpus, tmp_path_factory, 2)
+    resident = SearchEngine(spark, path)
+    direct = SearchEngine(spark, path, driver_serve_bytes=0)
+    assert resident._driver_store is not None
+    q = "granite quartz marble"
+    fetched = []
+    real_fetch = SearchEngine._fetch_doc_rows
+
+    def record(self, urls):
+        fetched.append(real_fetch(self, urls))
+        return fetched[-1]
+
+    monkeypatch.setattr(SearchEngine, "_fetch_doc_rows", record)
+    want = resident.bm25_topk_with_snippets(q, k=5)
+    assert want and len(fetched) == 1
+    monkeypatch.setattr(SearchEngine, "_fetch_doc_rows",
+                        lambda self, urls: fetched[0])
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    for engine, n_jobs in ((resident, 0), (direct, 1)):
+        group = f"wand-snippet-jobs-{n_jobs}"
+        sc.setJobGroup(group, group)
+        try:
+            got = engine.bm25_topk_with_snippets(q, k=5)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert len(tracker.getJobIdsForGroup(group)) == n_jobs
+        assert got == want
 
 
 def test_docmap_token_covers_success_markers(tmp_path):

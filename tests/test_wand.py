@@ -207,6 +207,24 @@ def test_engine_bm25_topk(spark, tmp_path_factory):
     )
 
 
+def test_bm25_topk_no_terms_returns_empty_stats(spark, tmp_path_factory):
+    """A query with no WAND term (empty, or punctuation only) answers []
+    — and ([], {}) with return_stats, like a query whose terms match
+    nothing."""
+    from mithril_spark.engine import SearchEngine
+    from mithril_spark.fixtures import generate_pages, pages_to_df
+    from mithril_spark.indexer import build_index
+
+    idx_dir = str(tmp_path_factory.mktemp("wand_noterms") / "i")
+    build_index(pages_to_df(spark, generate_pages(40, seed=3)), idx_dir,
+                num_shards=1)
+    engine = SearchEngine(spark, idx_dir)
+    for query in ("", "!!"):
+        assert engine.bm25_topk(query) == [], query
+        assert engine.bm25_topk(query, return_stats=True) == ([], {}), query
+        assert engine.bm25_topk_with_snippets(query) == [], query
+
+
 def test_tfn_scale_zero_avg_encode(spark, tmp_path_factory):
     """min_avg_body_enc == 0.0 must NOT read as "absent" (code-review r5):
     blocks encoded at avg body length 0 carry max_tfn == max freq
