@@ -42,8 +42,8 @@ def main() -> None:
     ap.add_argument("--compact", action="store_true",
                     help="fold segments/tombstones back to the dense "
                          "layout instead of merging a delta")
-    ap.add_argument("--mode", choices=["auto", "append", "recompact"],
-                    default="auto")
+    ap.add_argument("--mode", choices=["append", "recompact"],
+                    default="append")
     ap.add_argument("--pagerank", action="store_true",
                     help="refresh PageRank after the merge (append mode "
                          "writes the slim sidecar — no table rewrite)")

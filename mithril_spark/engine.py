@@ -236,13 +236,11 @@ def _worker_image(index_dir: str, shard: int, token: str) -> DocMapCols:
     return img
 
 
-# Estimated posting entries a resident query may gather in the driver. ~1M
-# entries is a few thousand 128-doc blocks — tens of MB; a head term at web
-# scale blows far past it, and such a query is served by the DIRECT tier,
-# which bounds every payload per task instead.
-DEFAULT_MAX_PAYLOAD_ROWS = 1_000_000
-# The same bound in payload rows: ~128 postings per posting block row.
-PAYLOAD_ROW_CAP = DEFAULT_MAX_PAYLOAD_ROWS // 128
+# Payload rows a resident query may gather in the driver: ~1M posting
+# entries at ~128 postings per block row, a few thousand blocks — tens of
+# MB; a head term at web scale blows far past it, and such a query is
+# served by the DIRECT tier, which bounds every payload per task instead.
+PAYLOAD_ROW_CAP = 1_000_000 // 128
 
 # On-disk bytes of the whole index (doc_map, postings, positions and
 # term_dict) under which the shard images and the term store are held
@@ -766,29 +764,20 @@ class SearchEngine:
             st = stats.get(shard_id)
             if st is not None and pl and pl["P"]:
                 base = shard_id * shard_size
-                body_lens = dict(zip(
-                    docmap_img.local_ids.tolist(),
-                    docmap_img.body_lens.tolist(),
-                ))
-                term_blocks = _payload_blocks(pl["P"])
-                scale = tfn_scales.get(shard_id)
-                if scale:
-                    for blocks in term_blocks.values():
-                        for b in blocks:
-                            b["max_tfn"] *= scale
                 avg = (
                     st["total_body"] / st["doc_count"]
                     if st["doc_count"] else 0.0
                 )
                 wstats: dict = {}
                 top = bm25_wand_topk(
-                    term_blocks, body_lens, st["doc_count"], avg, k,
+                    pl["P"], docmap_img, st["doc_count"], avg, k,
                     stats=wstats,
                     # exact term_dict dfs + dead filtering keep WAND
                     # scoring exact over append-merged (tombstoned)
                     # segments; both are identity on a clean index
                     dfs=dict(pl.get("D") or []) or None,
                     tombstones=tombs.get(shard_id),
+                    tfn_scale=tfn_scales.get(shard_id, 1.0),
                 )
                 if with_positions:
                     shard = _build_shard(
@@ -1002,18 +991,6 @@ def _term_positions(shard: ShardIndex, terms, local_doc: int) -> dict:
         if len(p):
             pos[term] = [int(x) for x in p]
     return pos
-
-
-def _payload_blocks(p_rows) -> dict[str, list[dict]]:
-    """Payload posting tuples -> per-term block dicts for the WAND cursors
-    (unordered: ``_Cursor`` sorts a term's blocks by ``first_doc_id``)."""
-    out: dict[str, list[dict]] = {}
-    for term, _salt, _block_id, dc, fd, ld, mf, mt, de, fe in p_rows:
-        out.setdefault(term, []).append({
-            "doc_count": dc, "first_doc_id": fd, "last_doc_id": ld,
-            "max_freq": mf, "max_tfn": mt, "doc_ids_enc": de, "freqs_enc": fe,
-        })
-    return out
 
 
 def _build_shard(

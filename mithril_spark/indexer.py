@@ -1571,7 +1571,7 @@ def merge_index_delta(
     sort_partitions: int | None = None,
     pagerank: bool | None = None,
     extracted: DataFrame | None = None,
-    mode: str = "auto",
+    mode: str = "append",
     auto_compact_tombstone_frac: float | None = TOMBSTONE_COMPACT_FRAC,
     auto_compact_min_tombstones: int = TOMBSTONE_COMPACT_MIN,
 ) -> dict:
@@ -1582,7 +1582,7 @@ def merge_index_delta(
     is appended as a ``stage_delta_N`` generation. What happens to the
     derived tables depends on ``mode``:
 
-    * ``"append"`` — the 100-TB path (VERDICT r03 #4). Delta docs get
+    * ``"append"`` (default) — the 100-TB path. Delta docs get
       docids appended after the existing corpus (url-ranked within the
       delta, from the never-decreasing ``docid_watermark``), which fills
       the tail of the last shard and spills into new serving shards;
@@ -1605,20 +1605,7 @@ def merge_index_delta(
       into a slim sidecar, no table rewrite; bit-identical to a fresh
       pagerank build). Without it, delta docs carry pagerank 0.0 (and
       re-crawled docs lose their old score) until a refresh or pagerank
-      recompaction, and merging into a pagerank-bearing index warns.
-    * ``"recompact"`` — the exact-layout path: derived tables are rebuilt
-      from the resolved stage. Under the dense-url-rank docid policy
-      (oracle.py) a new url shifts every rank behind it, so this is the
-      mode that keeps the merged index byte-identical to a from-scratch
-      build over the union corpus (tests/test_incremental.py gates two
-      increments at 1/2/3 shards). ``pagerank=None`` (default) PRESERVES
-      what the index already has, like ``compact_index``: a
-      pagerank-bearing index recomputes its scores into the fresh
-      doc_map rather than silently zeroing the whole corpus; pass an
-      explicit ``False`` to drop pagerank on purpose.
-    * ``"auto"`` (default) — ``"append"``. With ``pagerank=True`` the
-      append is followed by ``refresh_pagerank`` (global recompute into
-      the slim sidecar — no table rewrite); only an explicit
+      recompaction, and merging into a pagerank-bearing index warns; only
       ``mode="recompact"`` folds pagerank into doc_map itself.
       ``compact_index`` folds an appended index back to the canonical
       dense layout (byte-identical to a fresh build), clearing tombstones
@@ -1629,6 +1616,16 @@ def merge_index_delta(
       tombstones otherwise grow unboundedly and ship in every query's
       task closure. Pass ``auto_compact_tombstone_frac=None`` to manage
       compaction externally.
+    * ``"recompact"`` — the exact-layout path: derived tables are rebuilt
+      from the resolved stage. Under the dense-url-rank docid policy
+      (oracle.py) a new url shifts every rank behind it, so this is the
+      mode that keeps the merged index byte-identical to a from-scratch
+      build over the union corpus (tests/test_incremental.py gates two
+      increments at 1/2/3 shards). ``pagerank=None`` (default) PRESERVES
+      what the index already has, like ``compact_index``: a
+      pagerank-bearing index recomputes its scores into the fresh
+      doc_map rather than silently zeroing the whole corpus; pass an
+      explicit ``False`` to drop pagerank on purpose.
 
     The reference's builder is batch-only (index/src/main.cpp); this is the
     "crawler keeps writing" continuation of streaming.stream_extract_pages:
@@ -1665,7 +1662,7 @@ def merge_index_delta(
     """
     if (new_pages is None) == (extracted is None):
         raise ValueError("pass exactly one of new_pages / extracted")
-    if mode not in ("auto", "append", "recompact"):
+    if mode not in ("append", "recompact"):
         raise ValueError(f"unknown mode {mode!r}")
     spark = (new_pages if new_pages is not None else extracted).sparkSession
     meta = read_index_meta(index_dir)
@@ -1718,10 +1715,6 @@ def merge_index_delta(
         if "html" in new_pages.columns:
             new_pages = dedupe_pages(new_pages)
         delta_rows = extract_docs(new_pages)
-    if mode == "auto":
-        # append handles new urls, re-crawls (tombstones) AND pagerank
-        # refreshes (sidecar) — nothing forces the full recompaction
-        mode = "append"
     # constructed BEFORE the new generation lands, so this lazy view
     # resolves to the PRE-merge corpus (generation list is captured here)
     old_stage = read_stage(spark, index_dir) if mode == "append" else None

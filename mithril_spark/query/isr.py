@@ -81,7 +81,7 @@ class DocMapCols:
     (index/src/DocumentMapReader.cpp:15-100): one ``searchsorted`` resolves
     a docid to a row, and ranking gathers whole column slices per match
     batch instead of probing a dict-of-DocMeta per match. It is the only
-    doc-map form ranking reads: the engine builds one per shard from the
+    doc-map form ranking and WAND (query/wand.py) read: the engine builds one per shard from the
     doc_map parquet (``engine._docmap_image``) and caches it, and the
     oracle builds one per shard from its DocMeta dict (``from_metas``);
     both builders must give tuple-identical rankings

@@ -28,67 +28,91 @@ from bisect import bisect_left
 import numpy as np
 
 from ..codec import decode_posting_block
-from ..ranking import BM25_B, BM25_K1, bm25_score
+from ..ranking import BM25_K1, bm25_score
+
+
+def _by_term(p_rows) -> dict[str, list[tuple]]:
+    """The shard's P payload tuples (engine.PAYLOAD_COLS["P"] order)
+    grouped by term, one (first_doc_id, last_doc_id, max_tfn, doc_count,
+    doc_ids_enc, freqs_enc) per block, in payload order."""
+    out: dict[str, list[tuple]] = {}
+    for term, _salt, _bid, dc, fd, ld, _mf, mt, de, fe in p_rows:
+        out.setdefault(term, []).append((fd, ld, mt, dc, de, fe))
+    return out
+
+
+def _body_lens(docmap, docs: np.ndarray) -> np.ndarray:
+    """Body lengths of local ``docs`` in the shard's DocMapCols image, by
+    one searchsorted in ``local_ids``; 0 for docids the image does not
+    hold."""
+    idx, found = docmap.gather(docs)
+    return np.where(found, docmap.body_lens[idx], 0)
 
 
 class _Cursor:
     """Lazy block cursor over one term's posting blocks (sorted by doc).
+
+    Block metadata is held as columns sorted by first doc: ``last`` (each
+    block's last docid), ``ubs`` (each block's score upper bound) and
+    ``enc`` (the encoded (doc_ids, freqs) pairs, decoded on demand).
 
     ``dead`` (sorted local docids tombstoned by an append-mode merge,
     indexer.py) are filtered out at block decode: stale postings never
     reach the candidate walk, and the stored block bounds stay valid
     upper bounds (dropping docs can only lower the true maximum). ``df``
     may be overridden with the exact term_dict value — identical to the
-    block sum on a tombstone-free index, and dead-corrected with one."""
+    block sum on a tombstone-free index, and dead-corrected with one.
+    ``tfn_scale`` multiplies the stored ``max_tfn`` bounds (blocks encoded
+    before appends raised the shard's average body length, engine.py)."""
 
-    __slots__ = ("term", "blocks", "df", "block_idx", "docs", "freqs", "off",
-                 "exhausted", "term_ub", "doc_count", "avg_body",
-                 "blocks_decoded", "dead")
+    __slots__ = ("term", "last", "ubs", "enc", "df", "block_idx", "docs",
+                 "freqs", "body_lens", "off", "exhausted", "term_ub",
+                 "doc_count", "avg_body", "blocks_decoded", "dead", "docmap")
 
-    def __init__(self, term, blocks, doc_count, avg_body, df=None, dead=None):
-        # blocks: list of dicts with first/last/max_freq/doc_ids_enc/freqs_enc
+    def __init__(self, term, blocks, docmap, doc_count, avg_body, df=None,
+                 dead=None, tfn_scale=1.0):
+        # blocks: this term's _by_term tuples (at least one)
         self.term = term
+        self.docmap = docmap
         self.blocks_decoded = 0
         self.dead = dead if dead is not None and len(dead) else None
-        self.blocks = sorted(blocks, key=lambda b: b["first_doc_id"])
-        self.df = df if df is not None else sum(
-            b["doc_count"] for b in self.blocks)
+        _first, last, max_tfn, counts, doc_enc, freq_enc = zip(
+            *sorted(blocks, key=lambda b: b[0]))
+        self.last = np.array(last, dtype=np.int64)
+        self.enc = list(zip(doc_enc, freq_enc))
+        self.df = df if df is not None else sum(counts)
         self.doc_count = doc_count
         self.avg_body = avg_body
         self.block_idx = 0
         self.docs = None
         self.freqs = None
+        self.body_lens = None
         self.off = 0
-        self.exhausted = not self.blocks
-        self.term_ub = max(
-            (self._block_ub(b) for b in self.blocks), default=0.0
-        )
-        if not self.exhausted:
-            self._load_block(0)
+        self.exhausted = False
+        self.ubs = self._block_ubs(
+            np.array(max_tfn, dtype=np.float64) * tfn_scale)
+        self.term_ub = float(self.ubs.max())
+        self._load_block(0)
 
-    def _block_ub(self, block) -> float:
+    def _block_ubs(self, tfn: np.ndarray) -> np.ndarray:
         # Negative idf (df > N/2) inverts monotonicity: the score is then
         # bounded above by 0 (approached as tf' -> 0), not by max tf.
-        if 2 * self.df > self.doc_count:
-            return 0.0
-        if self.df == 0:
-            return 0.0
+        if 2 * self.df > self.doc_count or self.df == 0:
+            return np.zeros(len(tfn))
         # Tight bound: the block stores max normalized tf (tf / norm(body)),
         # computed with real body lengths at build time, so this equals the
         # max achievable score in the block for positive idf.
-        tfn = block["max_tfn"]
         idf = math.log(
             (self.doc_count - self.df + 0.5) / (self.df + 0.5)
         )
-        # identical float expression to ranking.bm25_score so the bound can
-        # never fall a ulp below an actual score
+        # identical float expression to ranking.bm25_score, elementwise, so
+        # the bound can never fall a ulp below an actual score
         score = idf * (tfn * (BM25_K1 + 1)) / (tfn + BM25_K1)
-        return min(score, 6.0) / 6.0
+        return np.minimum(score, 6.0) / 6.0
 
     def _load_block(self, idx: int) -> None:
-        while idx < len(self.blocks):
-            blk = self.blocks[idx]
-            d, f = decode_posting_block(blk["doc_ids_enc"], blk["freqs_enc"])
+        while idx < len(self.enc):
+            d, f = decode_posting_block(*self.enc[idx])
             self.blocks_decoded += 1
             if self.dead is not None and len(d):
                 keep = ~np.isin(d, self.dead, assume_unique=True)
@@ -99,6 +123,7 @@ class _Cursor:
             self.freqs = f
             self.off = 0
             if len(d):
+                self.body_lens = _body_lens(self.docmap, d)
                 return
             idx += 1  # block fully tombstoned — skip to the next
         self.exhausted = True
@@ -107,7 +132,7 @@ class _Cursor:
         return int(self.docs[self.off])
 
     def current_block_ub(self) -> float:
-        return self._block_ub(self.blocks[self.block_idx])
+        return self.ubs[self.block_idx]
 
     def seek(self, target: int) -> None:
         """Advance to the first doc >= target, skipping blocks undecoded."""
@@ -115,27 +140,19 @@ class _Cursor:
             return
         if self.current_doc() >= target:
             return
-        idx = self.block_idx
-        blocks = self.blocks
-        if blocks[idx]["last_doc_id"] < target:
-            # binary search over block metadata (no decode)
-            lo, hi = idx + 1, len(blocks)
-            while lo < hi:
-                mid = (lo + hi) // 2
-                if blocks[mid]["last_doc_id"] < target:
-                    lo = mid + 1
-                else:
-                    hi = mid
-            if lo >= len(blocks):
+        if self.last[self.block_idx] < target:
+            # first block that can hold target, over block metadata only
+            idx = int(self.last.searchsorted(target))
+            if idx >= len(self.enc):
                 self.exhausted = True
                 return
-            self._load_block(lo)
+            self._load_block(idx)
             if self.exhausted:
                 return
         i = bisect_left(self.docs, target, self.off)
         if i >= len(self.docs):
             # target falls in a gap right after this block
-            if self.block_idx + 1 >= len(self.blocks):
+            if self.block_idx + 1 >= len(self.enc):
                 self.exhausted = True
                 return
             self._load_block(self.block_idx + 1)
@@ -150,46 +167,51 @@ class _Cursor:
     def advance(self) -> None:
         self.off += 1
         if self.off >= len(self.docs):
-            if self.block_idx + 1 >= len(self.blocks):
+            if self.block_idx + 1 >= len(self.enc):
                 self.exhausted = True
             else:
                 self._load_block(self.block_idx + 1)
 
-    def score_current(self, body_len: int) -> float:
+    def score_current(self) -> float:
         return bm25_score(
-            self.doc_count, self.avg_body, body_len,
+            self.doc_count, self.avg_body, int(self.body_lens[self.off]),
             self.df, int(self.freqs[self.off]),
         )
 
 
 def bm25_wand_topk(
-    term_blocks: dict[str, list[dict]],
-    body_lens: dict[int, int],
+    p_rows,
+    docmap,
     doc_count: int,
     avg_body_length: float,
     k: int = 10,
     stats: dict | None = None,
     dfs: dict[str, int] | None = None,
     tombstones=None,
+    tfn_scale: float = 1.0,
 ) -> list[tuple[int, float]]:
-    """Disjunctive block-max WAND top-k; returns [(doc, score)] sorted
-    (score desc, doc asc). Exact — identical to exhaustive evaluation.
+    """Disjunctive block-max WAND top-k over one shard; returns
+    [(doc, score)] sorted (score desc, doc asc). Exact — identical to
+    exhaustive evaluation.
 
-    Pass ``stats`` (a dict) to receive the pruning counters:
-    blocks_total / blocks_decoded / blocks_skipped / docs_scored.
-    ``dfs`` (exact per-term document frequencies, e.g. term_dict rows) and
-    ``tombstones`` (sorted dead local docids) make scoring exact over an
-    append-merged index carrying stale postings; both are no-ops on a
-    tombstone-free index.
+    ``p_rows`` are the shard's posting-block payload tuples in
+    engine.PAYLOAD_COLS["P"] order; ``docmap`` is the shard's DocMapCols
+    image, whose ``local_ids``/``body_lens`` give each scored doc's body
+    length (0 for a docid it does not hold). Pass ``stats`` (a dict) to
+    receive the pruning counters: blocks_total / blocks_decoded /
+    blocks_skipped / docs_scored. ``dfs`` (exact per-term document
+    frequencies, e.g. term_dict rows) and ``tombstones`` (sorted dead local
+    docids) make scoring exact over an append-merged index carrying stale
+    postings; both are no-ops on a tombstone-free index. ``tfn_scale``
+    multiplies the stored ``max_tfn`` block bounds.
     """
     if k <= 0:
         return []
     cursors = [
-        _Cursor(t, blocks, doc_count, avg_body_length,
+        _Cursor(t, blocks, docmap, doc_count, avg_body_length,
                 df=None if dfs is None else dfs.get(t),
-                dead=tombstones)
-        for t, blocks in term_blocks.items()
-        if blocks
+                dead=tombstones, tfn_scale=tfn_scale)
+        for t, blocks in _by_term(p_rows).items()
     ]
     all_cursors = list(cursors)
     docs_scored = 0
@@ -231,7 +253,6 @@ def bm25_wand_topk(
             for c in aligned:
                 block_acc += c.current_block_ub()
             if block_acc > threshold():
-                body_len = body_lens.get(pivot_doc, 0)
                 docs_scored += 1
                 score = 0.0
                 # canonical summation order (term name): float addition is
@@ -239,7 +260,7 @@ def bm25_wand_topk(
                 # must add per-term scores in the same order for the
                 # "provably identical" claim to hold bit-exactly
                 for c in sorted(aligned, key=lambda c: c.term):
-                    score += c.score_current(body_len)
+                    score += c.score_current()
                 item = (score, -pivot_doc)
                 if len(heap) < k:
                     heapq.heappush(heap, item)
@@ -253,7 +274,7 @@ def bm25_wand_topk(
                 c.seek(pivot_doc)
 
     if stats is not None:
-        total = sum(len(c.blocks) for c in all_cursors)
+        total = sum(len(c.enc) for c in all_cursors)
         decoded = sum(c.blocks_decoded for c in all_cursors)
         stats["blocks_total"] = stats.get("blocks_total", 0) + total
         stats["blocks_decoded"] = stats.get("blocks_decoded", 0) + decoded
@@ -268,33 +289,32 @@ def bm25_wand_topk(
 
 
 def bm25_exhaustive_topk(
-    term_blocks: dict[str, list[dict]],
-    body_lens: dict[int, int],
+    p_rows,
+    docmap,
     doc_count: int,
     avg_body_length: float,
     k: int = 10,
     dfs: dict[str, int] | None = None,
     tombstones=None,
 ) -> list[tuple[int, float]]:
-    """Reference implementation: decode + score everything (for testing)."""
+    """Reference twin of ``bm25_wand_topk``: decode + score everything."""
     if k <= 0:
         return []
     dead = set() if tombstones is None else set(int(t) for t in tombstones)
     scores: dict[int, float] = {}
     # same canonical term order as bm25_wand_topk's aligned-scoring loop
-    for term, blocks in sorted(term_blocks.items()):
+    for term, blocks in sorted(_by_term(p_rows).items()):
         df = (dfs or {}).get(term)
         if df is None:
-            df = sum(b["doc_count"] for b in blocks)
-        for blk in blocks:
-            docs, freqs = decode_posting_block(
-                blk["doc_ids_enc"], blk["freqs_enc"]
-            )
-            for d, f in zip(docs.tolist(), freqs.tolist()):
+            df = sum(dc for _fd, _ld, _mt, dc, _de, _fe in blocks)
+        for _fd, _ld, _mt, _dc, de, fe in blocks:
+            docs, freqs = decode_posting_block(de, fe)
+            for d, f, bl in zip(docs.tolist(), freqs.tolist(),
+                                _body_lens(docmap, docs).tolist()):
                 if d in dead:
                     continue
                 scores[d] = scores.get(d, 0.0) + bm25_score(
-                    doc_count, avg_body_length, body_lens.get(d, 0), df, f
+                    doc_count, avg_body_length, bl, df, f
                 )
     ordered = sorted(scores.items(), key=lambda t: (-t[1], t[0]))
     return ordered[:k]

@@ -434,9 +434,9 @@ def test_append_on_pagerank_index_warns(spark, tmp_path_factory):
 
 
 def test_auto_mode_selection(spark, tmp_path_factory):
-    """auto: append for any content delta (new urls AND re-crawls, the
-    latter via tombstones) — including pagerank refreshes, which append
-    then recompute the sidecar instead of recompacting (round 5)."""
+    """The default mode appends any content delta (new urls AND
+    re-crawls, the latter via tombstones) — including pagerank refreshes,
+    which append then recompute the sidecar instead of recompacting."""
     pages = generate_pages(40, seed=5)
     inc_dir = str(tmp_path_factory.mktemp("auto_inc") / "i")
     build_index(pages_to_df(spark, pages[:30]), inc_dir, num_shards=2)

@@ -6,7 +6,24 @@ import numpy as np
 import pytest
 
 from mithril_spark.codec import encode_posting_blocks
+from mithril_spark.engine import PAYLOAD_COLS
+from mithril_spark.query.isr import DocMapCols
 from mithril_spark.query.wand import bm25_exhaustive_topk, bm25_wand_topk
+
+
+def _shard_inputs(term_blocks, body_lens):
+    """Codec block dicts per term -> the shard's P payload tuples, and
+    {local docid: body length} -> its DocMapCols image (the kernel's two
+    inputs, as the engine hands them over)."""
+    p_rows = [
+        tuple({**b, "term": term, "salt": 0}[c] for c in PAYLOAD_COLS["P"])
+        for term, blocks in term_blocks.items() for b in blocks
+    ]
+    ids = sorted(body_lens)
+    n = len(ids)
+    img = DocMapCols(ids, [b""] * n, [[]] * n, [body_lens[d] for d in ids],
+                     [0] * n, [0] * n, [0] * n, [0.0] * n, [0.0] * n)
+    return p_rows, img
 
 
 @pytest.mark.parametrize("seed", [0, 1, 2])
@@ -25,9 +42,10 @@ def test_wand_equals_exhaustive_random(seed):
                     np.array(docs, np.uint32), np.array(freqs, np.uint32)
                 )
             )
+        p_rows, img = _shard_inputs(term_blocks, body_lens)
         for k in (1, 5, 20):
-            assert bm25_wand_topk(term_blocks, body_lens, n_docs, avg, k) == \
-                bm25_exhaustive_topk(term_blocks, body_lens, n_docs, avg, k)
+            assert bm25_wand_topk(p_rows, img, n_docs, avg, k) == \
+                bm25_exhaustive_topk(p_rows, img, n_docs, avg, k)
 
 
 @pytest.mark.parametrize("seed", [3, 4])
@@ -61,10 +79,11 @@ def test_wand_equals_exhaustive_with_tombstones(seed):
             t: sum(1 for d in docs if d not in deadset)
             for t, docs in postings.items()
         }
+        p_rows, img = _shard_inputs(term_blocks, body_lens)
         for k in (1, 5, 20):
-            got = bm25_wand_topk(term_blocks, body_lens, n_docs, avg, k,
+            got = bm25_wand_topk(p_rows, img, n_docs, avg, k,
                                  dfs=dfs, tombstones=dead)
-            want = bm25_exhaustive_topk(term_blocks, body_lens, n_docs,
+            want = bm25_exhaustive_topk(p_rows, img, n_docs,
                                         avg, k, dfs=dfs, tombstones=dead)
             assert got == want
             assert not deadset.intersection(d for d, _s in got)
@@ -85,6 +104,7 @@ def test_wand_skips_blocks():
         "rare": list(encode_posting_blocks(docs_b, freqs_b, tf_norms=freqs_b)),
     }
     body_lens = {d: 30 for d in range(n)}
+    p_rows, img = _shard_inputs(term_blocks, body_lens)
     decoded = 0
     orig = wand._Cursor._load_block
 
@@ -96,10 +116,10 @@ def test_wand_skips_blocks():
     wand._Cursor._load_block = counting
     stats = {}
     try:
-        got = bm25_wand_topk(term_blocks, body_lens, n, 30.0, 1, stats=stats)
+        got = bm25_wand_topk(p_rows, img, n, 30.0, 1, stats=stats)
     finally:
         wand._Cursor._load_block = orig
-    want = bm25_exhaustive_topk(term_blocks, body_lens, n, 30.0, 1)
+    want = bm25_exhaustive_topk(p_rows, img, n, 30.0, 1)
     assert got == want
     total_blocks = len(term_blocks["common"]) + len(term_blocks["rare"])
     assert decoded < total_blocks, "WAND decoded every block — no skipping"
@@ -108,6 +128,67 @@ def test_wand_skips_blocks():
     assert stats["blocks_decoded"] == decoded
     assert stats["blocks_skipped"] == total_blocks - decoded > 0
     assert 0 < stats["docs_scored"] < n
+
+
+def _random_shard(rng, body_lens, n_terms, under_bound=1.0):
+    """Random P tuples over ``body_lens``'s docs whose stored ``max_tfn``
+    is the true per-block max normalized tf divided by ``under_bound``."""
+    n_docs = max(body_lens) + 1
+    avg = sum(body_lens.values()) / len(body_lens)
+    term_blocks = {}
+    for t in range(n_terms):
+        docs = sorted(rng.sample(range(n_docs), rng.randint(1, n_docs)))
+        freqs = [rng.choice([1, 1, 2, 3, 5, 100]) for _ in docs]
+        tfn = [f / (0.25 + 0.75 * body_lens.get(d, 0) / avg)
+               for d, f in zip(docs, freqs)]
+        term_blocks[f"t{t}"] = list(encode_posting_blocks(
+            np.array(docs, np.uint32), np.array(freqs, np.uint32),
+            tf_norms=np.array(tfn) / under_bound))
+    return term_blocks, avg
+
+
+@pytest.mark.parametrize("scale", [2.0, 4.0])
+def test_wand_tfn_scale_covers_under_bound_blocks(scale):
+    """Blocks whose stored max_tfn under-bounds the true normalized tf by
+    ``scale`` (encoded before appends raised the average body length):
+    WAND with ``tfn_scale=scale`` stays equal to the exhaustive twin."""
+    rng = random.Random(int(scale))
+    for _trial in range(30):
+        n_docs = rng.randint(50, 1500)
+        body_lens = {d: rng.randint(1, 60) for d in range(n_docs)}
+        term_blocks, avg = _random_shard(rng, body_lens, rng.randint(1, 4),
+                                         under_bound=scale)
+        p_rows, img = _shard_inputs(term_blocks, body_lens)
+        for k in (1, 5, 20):
+            assert bm25_wand_topk(p_rows, img, n_docs, avg, k,
+                                  tfn_scale=scale) == \
+                bm25_exhaustive_topk(p_rows, img, n_docs, avg, k)
+
+
+def test_wand_holey_image_scores_absent_docs_at_zero_length():
+    """An image holding a sparse subset of the posting docids: absent docs
+    score with body length 0, and WAND equals the exhaustive twin."""
+    from mithril_spark.ranking import bm25_score
+
+    rng = random.Random(11)
+    for _trial in range(20):
+        n_docs = rng.randint(20, 1200)
+        body_lens = {d: rng.randint(1, 50) for d in range(n_docs)
+                     if rng.random() < 0.4}
+        body_lens.setdefault(n_docs - 1, 7)
+        term_blocks, avg = _random_shard(rng, body_lens, rng.randint(1, 4))
+        p_rows, img = _shard_inputs(term_blocks, body_lens)
+        assert len(img) < n_docs
+        for k in (1, 5, 20):
+            assert bm25_wand_topk(p_rows, img, n_docs, avg, k) == \
+                bm25_exhaustive_topk(p_rows, img, n_docs, avg, k)
+    # one absent doc, one term: its score is the body-length-0 score
+    absent = next(d for d in range(n_docs) if d not in body_lens)
+    (blk,) = encode_posting_blocks(np.array([absent], np.uint32),
+                                   np.array([3], np.uint32))
+    p_rows, _ = _shard_inputs({"t": [blk]}, {})
+    assert bm25_wand_topk(p_rows, img, n_docs, avg, 1) == \
+        [(absent, bm25_score(n_docs, avg, 0, 1, 3))]
 
 
 def test_engine_wand_skips_on_zipf_corpus(spark, tmp_path_factory):
@@ -223,6 +304,36 @@ def test_bm25_topk_no_terms_returns_empty_stats(spark, tmp_path_factory):
         assert engine.bm25_topk(query) == [], query
         assert engine.bm25_topk(query, return_stats=True) == ([], {}), query
         assert engine.bm25_topk_with_snippets(query) == [], query
+
+
+def test_bm25_topk_reads_image_columns_in_place(spark, tmp_path_factory):
+    """Resident WAND reads each shard image's ``local_ids``/``body_lens``
+    where they are: with columns that refuse to become Python lists or to
+    iterate, ``bm25_topk`` returns the same answer and counters."""
+    from mithril_spark.engine import SearchEngine
+    from mithril_spark.fixtures import generate_pages, pages_to_df
+    from mithril_spark.indexer import build_index
+
+    class NoCopy(np.ndarray):
+        def tolist(self):
+            raise AssertionError("image column copied to a list")
+
+        def __iter__(self):
+            raise AssertionError("image column iterated")
+
+    idx_dir = str(tmp_path_factory.mktemp("wand_inplace") / "i")
+    build_index(pages_to_df(spark, generate_pages(150, seed=42)), idx_dir,
+                num_shards=2)
+    engine = SearchEngine(spark, idx_dir)
+    assert engine._driver_images
+    queries = ("search engine", "granite quartz marble", "the and of")
+    want = {q: engine.bm25_topk(q, k=10, return_stats=True) for q in queries}
+    assert want["search engine"][0]
+    for img in engine._driver_images.values():
+        img.local_ids = img.local_ids.view(NoCopy)
+        img.body_lens = img.body_lens.view(NoCopy)
+    for q in queries:
+        assert engine.bm25_topk(q, k=10, return_stats=True) == want[q], q
 
 
 def test_tfn_scale_zero_avg_encode(spark, tmp_path_factory):
