@@ -42,16 +42,9 @@ def main() -> None:
     ap.add_argument("--compact", action="store_true",
                     help="fold segments/tombstones back to the dense "
                          "layout instead of merging a delta")
-    ap.add_argument("--mode", choices=["append", "recompact"],
-                    default="append")
     ap.add_argument("--pagerank", action="store_true",
-                    help="refresh PageRank after the merge (append mode "
-                         "writes the slim sidecar — no table rewrite)")
-    ap.add_argument("--auto-compact-frac", type=float, default=0.02,
-                    help="compact when tombstones exceed this corpus "
-                         "fraction (0 disables the guard)")
-    ap.add_argument("--auto-compact-min", type=int, default=100_000,
-                    help="absolute tombstone floor for the guard")
+                    help="refresh PageRank after the merge (writes the "
+                         "slim sidecar — no table rewrite)")
     ap.add_argument("--cores", type=int, default=None,
                     help="local[] cores; omit under spark-submit on a cluster")
     args = ap.parse_args()
@@ -72,29 +65,17 @@ def main() -> None:
     if args.compact:
         if args.pages or args.extracted:
             ap.error("--compact takes no delta input")
-        # None = preserve: a pagerank-bearing index recomputes it into the
-        # fresh doc_map rather than silently zeroing the corpus's scores
-        res = compact_index(spark, args.index,
-                            pagerank=args.pagerank or None)
+        # a pagerank-bearing index recomputes it into the fresh doc_map
+        # with or without the flag
+        res = compact_index(spark, args.index, pagerank=args.pagerank)
     elif (args.pages is None) == (args.extracted is None):
         ap.error("need exactly one of --pages / --extracted (or --compact)")
         return
     else:
-        guard = {
-            "auto_compact_tombstone_frac": args.auto_compact_frac or None,
-            "auto_compact_min_tombstones": args.auto_compact_min,
-        }
-        # None = preserve (recompact of a pagerank-bearing index keeps
-        # its scores); the flag opts IN to refresh/recompute
-        pr = args.pagerank or None
-        if args.pages:
-            res = merge_index_delta(
-                args.index, new_pages=spark.read.parquet(args.pages),
-                mode=args.mode, pagerank=pr, **guard)
-        else:
-            res = merge_index_delta(
-                args.index, extracted=spark.read.parquet(args.extracted),
-                mode=args.mode, pagerank=pr, **guard)
+        kind, path = (("new_pages", args.pages) if args.pages
+                      else ("extracted", args.extracted))
+        res = merge_index_delta(args.index, pagerank=args.pagerank,
+                                **{kind: spark.read.parquet(path)})
     dt = time.time() - t0
     phases = {p["phase"]: round(p.get("finished", 0.0) - p["started"], 2)
               for p in res["phases"]}

@@ -194,6 +194,21 @@ def _apply_pagerank_sidecar(pdf: pd.DataFrame, index_dir: str,
     return pdf.drop(columns=["_pr_side"])
 
 
+def _load_image(index_dir: str, shard: int, sidecar: bool) -> DocMapCols:
+    """One shard's doc-map image read from its doc_map partition, dead
+    rows included (query/shard.py::_drop_tombstoned is the one
+    dead-filtering point), with the pagerank sidecar applied when
+    ``sidecar``. Both tiers load here: the engine's driver images at init,
+    ``_worker_image`` on a cache miss."""
+    import pyarrow.parquet as pq
+
+    path = os.path.join(index_dir, "doc_map", f"shard={shard}")
+    pdf = pq.read_table(path).to_pandas()
+    if sidecar:
+        pdf = _apply_pagerank_sidecar(pdf, index_dir, shard)
+    return _docmap_image(pdf)
+
+
 def _worker_image(index_dir: str, shard: int, token: str) -> DocMapCols:
     """Load (or fetch cached) one shard's doc-map image, keyed by the
     ENGINE's epoch token.
@@ -220,13 +235,7 @@ def _worker_image(index_dir: str, shard: int, token: str) -> DocMapCols:
     if hit is not None:
         _IMAGE_CACHE.move_to_end(key)
         return hit[0]
-    import pyarrow.parquet as pq
-
-    path = os.path.join(index_dir, "doc_map", f"shard={shard}")
-    pdf = pq.read_table(path).to_pandas()
-    if _docmap_token(index_dir) == token:
-        pdf = _apply_pagerank_sidecar(pdf, index_dir, shard)
-    img = _docmap_image(pdf)
+    img = _load_image(index_dir, shard, _docmap_token(index_dir) == token)
     _IMAGE_LOADS += 1
     _IMAGE_CACHE[key] = (img, _image_nbytes(img))
     total = sum(b for _i, b in _IMAGE_CACHE.values())
@@ -458,8 +467,9 @@ class SearchEngine:
         # per shard, filtered out of every decoded posting/position stream
         # at shard build and out of every match list before ranking
         # (query/shard.py::_drop_tombstoned) — THE dead-filtering point;
-        # worker images carry no mask of their own so they stay epoch-
-        # consistent under concurrent merges (_worker_image docstring).
+        # driver and worker images carry no mask of their own, so worker
+        # images stay epoch-consistent under concurrent merges
+        # (_worker_image docstring).
         # Absent (empty dict) on any index without replacement appends.
         # Loaded driver-side and shipped in the task closure — the
         # auto-compaction guard keeps the set delta-bounded.
@@ -478,8 +488,8 @@ class SearchEngine:
             total = max(int(self.meta.get("total_docs", 0)), 1)
             if n_tomb >= max(TOMBSTONE_COMPACT_FRAC * total,
                              TOMBSTONE_COMPACT_MIN):
-                # merge_index_delta's auto-compaction guard normally fires
-                # first; reaching here means it was disabled — be loud
+                # merge_index_delta compacts at this same threshold, so
+                # reaching here means a compaction did not finish — be loud
                 import warnings
 
                 warnings.warn(
@@ -507,15 +517,9 @@ class SearchEngine:
             _dir_parquet_bytes(os.path.join(index_dir, t))
             for t in PAYLOAD_TABLES.values())
         if shard_rows and 0 < dm_bytes and idx_bytes <= driver_serve_bytes:
-            pdf = pq.read_table(
-                os.path.join(index_dir, "doc_map")).to_pandas()
-            self._driver_images = {}
-            for s, grp in pdf.groupby("shard", observed=True):
-                dead = self._tombstones.get(int(s))
-                if dead is not None and len(dead):
-                    grp = grp[~grp["local_id"].isin(dead)]
-                grp = _apply_pagerank_sidecar(grp, index_dir, int(s))
-                self._driver_images[int(s)] = _docmap_image(grp)
+            self._driver_images = {
+                s: _load_image(index_dir, s, sidecar=True) for s in self.stats
+            }
             self._driver_store = _TermStore(index_dir)
         # WAND soundness across append-mode segments (indexer.py): blocks
         # encoded before a shard's avg body length grew carry a too-small
@@ -1012,7 +1016,8 @@ def _build_shard(
     with replacements, indexer.py) are filtered out of every decoded
     posting/position stream, so the walk — and ``doc_freq`` via
     materialized-list length — sees only live docs; the NOT complement
-    runs over ``docid_space`` (max live local + 1) and any dead docids it
+    runs over ``docid_space`` (the image's max local id + 1, dead ids
+    included, since images keep dead rows) and any dead docids it
     yields are dropped from the match list before ranking
     (query/shard.py::_drop_tombstoned) and by ``matches()``."""
     from .codec import decode_position_block, decode_posting_block
@@ -1083,6 +1088,6 @@ def _build_shard(
 
     shard.doc_cols = docmap
     lids = docmap.local_ids
-    # == doc_count on a clean index; > it when tombstoned holes exist
+    # == doc_count on a clean index; > it when tombstoned rows exist
     shard.docid_space = int(lids[-1]) + 1 if len(lids) else 0
     return shard

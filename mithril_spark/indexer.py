@@ -217,7 +217,7 @@ def _resolve_deltas(deltas: list[DataFrame]) -> DataFrame:
     (streamed re-crawls of one url land in one delta) the content md5
     breaks the tie deterministically — max_by alone would pick an
     arbitrary row. ``read_stage`` resolves its deltas here and the append
-    merge resolves its one delta here, so a later recompaction keeps the
+    merge resolves its one delta here, so a later compaction keeps the
     rows the append kept."""
     payload = [c for c in deltas[0].columns if c != "url"]
     tagged = deltas[0].withColumn("_gen", F.lit(0))
@@ -1071,9 +1071,6 @@ def build_index(
         num_buckets=num_buckets, sort_partitions=sort_partitions,
         force=force, pagerank=pagerank,
         recorder=recorder,
-        # this build derives from stage_raw ALONE: any older append-merge
-        # generations are stale corpus now, not adopted state
-        sweep_stage_deltas=True,
     )
 
 
@@ -1105,13 +1102,12 @@ def _build_derived(
     force: bool,
     pagerank: bool,
     recorder: _PhaseRecorder,
-    sweep_stage_deltas: bool = False,
 ) -> dict:
     """Phases 2+ of the build: everything derived from the parsed ``stage``
     rows (docids, doc_map, stats, postings, positions, doc_text, term_dict,
-    counters, metadata). ``build_index`` calls this on stage_raw;
-    ``merge_index_delta`` calls it on the resolved multi-generation stage —
-    the derived tables are a deterministic function of the stage row set,
+    counters, metadata). ``build_index`` and ``compact_index`` call this
+    on stage_raw (compaction first folds every generation into it) — the
+    derived tables are a deterministic function of the stage row set,
     which is what makes incremental maintenance byte-identical to a full
     rebuild (tests/test_incremental.py).
 
@@ -1340,19 +1336,16 @@ def _build_derived(
             if e.is_dir() and e.name.startswith("doc_text_delta_"):
                 shutil.rmtree(os.path.join(out_dir, e.name),
                               ignore_errors=True)
-        # stage_delta_* sweep is CALLER-dependent (code-review r5):
-        # build_index(force=True) rebuilt from a freshly written
-        # stage_raw alone, so surviving deltas would both be counted
-        # adopted by the ledger below AND resolve their stale rows back
-        # over the new corpus in every read_stage consumer — sweep them.
-        # merge recompact built from the RESOLVED view (deltas folded
-        # in — adopted is correct and the dirs stay), and compact_index
-        # already folded them via compact_stage.
-        if sweep_stage_deltas:
-            for e in os.scandir(out_dir):
-                if e.is_dir() and e.name.startswith("stage_delta_"):
-                    shutil.rmtree(os.path.join(out_dir, e.name),
-                                  ignore_errors=True)
+        # stage_delta_* sweep (code-review r5): build_index(force=True)
+        # rebuilt from a freshly written stage_raw alone, so surviving
+        # deltas would both be counted adopted by the ledger below AND
+        # resolve their stale rows back over the new corpus in every
+        # read_stage consumer. compact_index already folded them via
+        # compact_stage, so there it finds nothing.
+        for e in os.scandir(out_dir):
+            if e.is_dir() and e.name.startswith("stage_delta_"):
+                shutil.rmtree(os.path.join(out_dir, e.name),
+                              ignore_errors=True)
 
     # --- metadata + metrics ---
     meta = {
@@ -1367,9 +1360,10 @@ def _build_derived(
         "block_size": BLOCK_SIZE,
         "salt_range": SALT_RANGE,
         "counters": counters,
-        # whether the last full (re)build computed pagerank — append-mode
+        # whether the last full (re)build computed pagerank — append
         # merges cannot maintain it (the graph is global), so they warn
-        # and leave delta docs at pagerank 0.0 until a recompaction
+        # and leave delta docs at pagerank 0.0 until refresh_pagerank or
+        # compact_index
         "built_with_pagerank": bool(pagerank),
         # smallest per-shard avg body length any of this shard's posting
         # blocks were encoded with — append-mode merges lower it as the
@@ -1522,7 +1516,7 @@ def refresh_pagerank(spark: SparkSession, index_dir: str) -> dict:
     function of the whole link graph (the reference computes it over the
     full crawl in one batch, /root/reference/index/src/PageRank.cpp), so
     delta docs serve 0.0 after an append and re-crawled docs lose their
-    old score (ADVICE r04). A full recompaction fixes that at the cost of
+    old score (ADVICE r04). A compaction fixes that at the cost of
     rebuilding every table; this refresh pays only the pagerank compute
     itself (O(graph) by nature) plus one slim (shard, local_id, pagerank)
     sidecar write — doc_map/postings/positions stay byte-untouched, which
@@ -1569,63 +1563,51 @@ def merge_index_delta(
     index_dir: str,
     new_pages: DataFrame | None = None,
     sort_partitions: int | None = None,
-    pagerank: bool | None = None,
+    pagerank: bool = False,
     extracted: DataFrame | None = None,
-    mode: str = "append",
-    auto_compact_tombstone_frac: float | None = TOMBSTONE_COMPACT_FRAC,
-    auto_compact_min_tombstones: int = TOMBSTONE_COMPACT_MIN,
 ) -> dict:
-    """Incrementally fold new pages into an existing index.
+    """Incrementally fold new pages into an existing index by APPENDING
+    them — the 100-TB path; ``compact_index`` is the one way back to the
+    canonical dense layout.
 
     The split follows where the cost lives: extraction (HTML parse +
     tokenization, the dominant build cost) runs ONLY for the new pages and
-    is appended as a ``stage_delta_N`` generation. What happens to the
-    derived tables depends on ``mode``:
+    is appended as a ``stage_delta_N`` generation. Delta docs get docids
+    appended after the existing corpus (url-ranked within the delta, from
+    the never-decreasing ``docid_watermark``), which fills the tail of the
+    last shard and spills into new serving shards; their posting/position
+    blocks are encoded from the delta alone and the files land next to
+    the existing ones (blocks of one (term, shard) never overlap in docid,
+    so serving just orders by first_doc_id). RE-CRAWLED urls are handled
+    as LSM deletes: the old docid is tombstoned and its stale rows stay
+    on disk in EVERY bulky table — postings/positions filter them at
+    block decode, match lists drop them before ranking
+    (query/shard.py::_drop_tombstoned) and read_doc_map_live masks them
+    for external readers; index_stats and term_dict (dictionary-sized)
+    update incrementally by exact subtraction, and doc_text gains a
+    latest-wins generation dir. A 1% delta shuffles and writes O(delta)
+    posting/position bytes, not O(corpus) — the ``postings``/
+    ``positions`` phase metrics record ``appended_bytes`` next to the
+    pre-merge ``table_bytes_before`` so the bound is checkable
+    (tests/test_append_merge.py).
 
-    * ``"append"`` (default) — the 100-TB path. Delta docs get
-      docids appended after the existing corpus (url-ranked within the
-      delta, from the never-decreasing ``docid_watermark``), which fills
-      the tail of the last shard and spills into new serving shards;
-      their posting/position blocks are encoded from the delta alone and
-      the files land next to the existing ones (blocks of one
-      (term, shard) never overlap in docid, so serving just orders by
-      first_doc_id). RE-CRAWLED urls are handled as LSM deletes: the old
-      docid is tombstoned and its stale rows stay on disk in EVERY bulky
-      table — postings/positions filter them at block decode, doc_map and
-      doc_ids mask them at read (engine image build / read_doc_map_live);
-      index_stats and term_dict (dictionary-sized) update incrementally
-      by exact subtraction, and doc_text gains a latest-wins generation
-      dir. A 1% delta shuffles and writes O(delta)
-      posting/position bytes, not O(corpus) — the ``postings``/
-      ``positions`` phase metrics record ``appended_bytes`` next to the
-      pre-merge ``table_bytes_before`` so the bound is checkable
-      (tests/test_append_merge.py). Pagerank is a global graph property
-      and is NOT maintained by the append itself — pass ``pagerank=True``
-      to follow the append with ``refresh_pagerank`` (global recompute
-      into a slim sidecar, no table rewrite; bit-identical to a fresh
-      pagerank build). Without it, delta docs carry pagerank 0.0 (and
-      re-crawled docs lose their old score) until a refresh or pagerank
-      recompaction, and merging into a pagerank-bearing index warns; only
-      ``mode="recompact"`` folds pagerank into doc_map itself.
-      ``compact_index`` folds an appended index back to the canonical
-      dense layout (byte-identical to a fresh build), clearing tombstones
-      and sidecar generations. AUTO-COMPACTION GUARD: when an append
-      leaves ``tombstone_count >= max(auto_compact_tombstone_frac *
-      total_docs, auto_compact_min_tombstones)`` the merge compacts the
-      index itself before returning (``result["compacted"] = True``) —
-      tombstones otherwise grow unboundedly and ship in every query's
-      task closure. Pass ``auto_compact_tombstone_frac=None`` to manage
-      compaction externally.
-    * ``"recompact"`` — the exact-layout path: derived tables are rebuilt
-      from the resolved stage. Under the dense-url-rank docid policy
-      (oracle.py) a new url shifts every rank behind it, so this is the
-      mode that keeps the merged index byte-identical to a from-scratch
-      build over the union corpus (tests/test_incremental.py gates two
-      increments at 1/2/3 shards). ``pagerank=None`` (default) PRESERVES
-      what the index already has, like ``compact_index``: a
-      pagerank-bearing index recomputes its scores into the fresh
-      doc_map rather than silently zeroing the whole corpus; pass an
-      explicit ``False`` to drop pagerank on purpose.
+    Pagerank is a global graph property and is NOT maintained by the
+    append itself — pass ``pagerank=True`` to follow the append with
+    ``refresh_pagerank`` (global recompute into a slim sidecar, no table
+    rewrite; bit-identical to a fresh pagerank build). Without it, delta
+    docs carry pagerank 0.0 (and re-crawled docs lose their old score)
+    until a refresh or a compaction, and merging into a pagerank-bearing
+    index warns.
+
+    ``compact_index`` folds an appended index back to the canonical dense
+    layout: appends followed by ``compact_index`` are byte-identical to a
+    from-scratch build over the union corpus (tests/test_incremental.py
+    gates two increments at 1/2/3 shards). AUTO-COMPACTION GUARD: when an
+    append leaves ``tombstone_count >= max(TOMBSTONE_COMPACT_FRAC *
+    total_docs, TOMBSTONE_COMPACT_MIN)`` (read at call time) the merge
+    compacts the index itself before returning
+    (``result["compacted"] = True``) — tombstones otherwise grow
+    unboundedly and ship in every query's task closure.
 
     The reference's builder is batch-only (index/src/main.cpp); this is the
     "crawler keeps writing" continuation of streaming.stream_extract_pages:
@@ -1662,8 +1644,6 @@ def merge_index_delta(
     """
     if (new_pages is None) == (extracted is None):
         raise ValueError("pass exactly one of new_pages / extracted")
-    if mode not in ("append", "recompact"):
-        raise ValueError(f"unknown mode {mode!r}")
     spark = (new_pages if new_pages is not None else extracted).sparkSession
     meta = read_index_meta(index_dir)
     # Crash-consistency guard (code-review r5): a committed stage
@@ -1717,7 +1697,7 @@ def merge_index_delta(
         delta_rows = extract_docs(new_pages)
     # constructed BEFORE the new generation lands, so this lazy view
     # resolves to the PRE-merge corpus (generation list is captured here)
-    old_stage = read_stage(spark, index_dir) if mode == "append" else None
+    old_stage = read_stage(spark, index_dir)
     n_existing = len(_stage_generations(index_dir))
     delta_path = os.path.join(index_dir, f"stage_delta_{n_existing:05d}")
     _write_once(delta_rows, delta_path, force=True)
@@ -1725,62 +1705,38 @@ def merge_index_delta(
     m["ran"] = True
     m["finished"] = recorder.elapsed()
 
-    if mode == "append":
-        idx_pagerank = _index_has_pagerank(index_dir, meta)
-        result = _append_delta_derived(
-            spark, delta_rows, index_dir, meta,
-            old_stage=old_stage,
-            sort_partitions=sort_partitions,
-            recorder=recorder,
-            # the staleness warning is moot when this merge refreshes
-            # the sidecar itself right after
-            index_has_pagerank=idx_pagerank and not pagerank,
-        )
-        # Auto-compaction guard (VERDICT r04 #2): tombstones and segments
-        # grow without bound under repeated re-crawl merges, and every
-        # query ships the tombstone arrays in its task closure — past the
-        # threshold the merge folds the index back to the canonical dense
-        # layout itself instead of relying on operator discipline. The
-        # absolute floor keeps small/test corpora on the LSM path.
-        new_meta = result["meta"]
-        tc = int(new_meta.get("tombstone_count", 0))
-        if (
-            auto_compact_tombstone_frac
-            and tc >= max(auto_compact_tombstone_frac
-                          * max(int(new_meta["total_docs"]), 1),
-                          auto_compact_min_tombstones)
-        ):
-            # a pagerank-built index must recompact WITH pagerank or the
-            # rebuild would zero the whole corpus's scores, not just the
-            # delta's (code-review r5 finding)
-            comp = compact_index(spark, index_dir,
-                                 sort_partitions=sort_partitions,
-                                 pagerank=pagerank or idx_pagerank)
-            result["compacted"] = True
-            result["meta"] = comp["meta"]
-            result["compact_wall_s"] = comp["wall_s"]
-        if pagerank and not result.get("compacted"):
-            # global recompute over the live resolved corpus into the
-            # slim sidecar — the O(delta)-write pagerank path (a
-            # compaction above already folded real values into doc_map)
-            result["pagerank_refresh"] = refresh_pagerank(spark, index_dir)
-        return result
-
-    stage = read_stage(spark, index_dir)
-    if pagerank is None:
-        # preserve, like compact_index: an unqualified recompact of a
-        # pagerank-bearing index must never silently zero the corpus's
-        # scores (code-review r5 finding — only compact_index and the
-        # auto-compaction guard enforced this before)
-        pagerank = _index_has_pagerank(index_dir, meta)
-    result = _build_derived(
-        spark, stage, index_dir,
-        num_shards=int(meta["num_shards_base"]),
-        num_buckets=meta["num_buckets"],
-        sort_partitions=sort_partitions, force=True, pagerank=pagerank,
+    result = _append_delta_derived(
+        spark, delta_rows, index_dir, meta,
+        old_stage=old_stage,
+        sort_partitions=sort_partitions,
         recorder=recorder,
+        # the staleness warning is moot when this merge refreshes the
+        # sidecar itself right after
+        index_has_pagerank=(not pagerank
+                            and _index_has_pagerank(index_dir, meta)),
     )
-    result["mode"] = "recompact"
+    # Auto-compaction guard (VERDICT r04 #2): tombstones and segments grow
+    # without bound under repeated re-crawl merges, and every query ships
+    # the tombstone arrays in its task closure — past the threshold the
+    # merge folds the index back to the canonical dense layout itself
+    # instead of relying on operator discipline. The absolute floor keeps
+    # small/test corpora on the LSM path.
+    new_meta = result["meta"]
+    tc = int(new_meta.get("tombstone_count", 0))
+    if tc >= max(TOMBSTONE_COMPACT_FRAC * max(int(new_meta["total_docs"]), 1),
+                 TOMBSTONE_COMPACT_MIN):
+        # compact_index keeps a pagerank-bearing index's scores itself
+        comp = compact_index(spark, index_dir,
+                             sort_partitions=sort_partitions,
+                             pagerank=pagerank)
+        result["compacted"] = True
+        result["meta"] = comp["meta"]
+        result["compact_wall_s"] = comp["wall_s"]
+    elif pagerank:
+        # global recompute over the live resolved corpus into the slim
+        # sidecar — the O(delta)-write pagerank path (a compaction above
+        # already folded real values into doc_map)
+        result["pagerank_refresh"] = refresh_pagerank(spark, index_dir)
     return result
 
 
@@ -1874,10 +1830,11 @@ def _append_delta_derived(
     RE-CRAWLED urls (LSM deletes): the old docid is TOMBSTONED — its
     stale rows stay on disk in every bulky table. Posting/position
     streams filter them at block decode (engine._build_shard,
-    query/wand.py); doc_map/doc_ids are append-only too (VERDICT r04 #1)
-    and mask dead rows at read (engine._worker_image filters the shard
-    image; read_doc_map_live / read_doc_ids_live are the external view) —
-    so a re-crawl delta writes O(delta) bytes for ALL row-sized tables,
+    query/wand.py); doc_map/doc_ids are append-only too (VERDICT r04 #1):
+    shard images keep the dead rows (engine._load_image), match lists
+    drop dead ids before ranking (query/shard.py::_drop_tombstoned), and
+    read_doc_map_live / read_doc_ids_live mask them for external
+    readers — so a re-crawl delta writes O(delta) bytes for ALL row-sized tables,
     never an O(corpus) rewrite. The two dictionary/shard-sized exact
     tables update incrementally: term_dict subtracts the dead docs'
     per-(term, shard) df/cf computed from their OLD stage rows (the only
@@ -1897,7 +1854,8 @@ def _append_delta_derived(
     never wrong."""
     if index_has_pagerank:
         # ADVICE r04: delta docs get pagerank=0.0 and re-crawled docs lose
-        # their old score until a recompaction recomputes the global graph
+        # their old score until refresh_pagerank or compact_index
+        # recomputes the global graph
         import warnings
 
         warnings.warn(
@@ -1914,7 +1872,7 @@ def _append_delta_derived(
     watermark = int(meta.get("docid_watermark", total_docs))
 
     # intra-delta url dedupe through read_stage's own delta resolution, so
-    # a later recompaction resolves to the same rows
+    # a later compaction resolves to the same rows
     delta = _resolve_deltas([delta])
 
     # Independent phases overlap via threaded job submission, mirroring
@@ -2048,8 +2006,9 @@ def _append_delta_derived(
 
         # --- doc_map: APPEND-ONLY under the LSM layout (VERDICT r04 #1) —
         # delta rows land next to the existing ones and a re-crawl's dead
-        # rows STAY on disk, masked at read by the tombstone set
-        # (engine._worker_image / read_doc_map_live) and folded out only by
+        # rows STAY on disk, kept in the shard images (engine._load_image)
+        # and filtered by the tombstone set (query/shard.py::
+        # _drop_tombstoned, read_doc_map_live), folded out only by
         # compact_index — the same treatment postings already get. O(delta)
         # bytes written, no corpus shuffle. Stats update incrementally
         # (old + delta - dead; exact integer sums, so identical to a fresh
@@ -2225,25 +2184,21 @@ def _append_delta_derived(
 
 
 def compact_index(spark: SparkSession, index_dir: str,
-                  num_shards: int | None = None,
                   sort_partitions: int | None = None,
-                  pagerank: bool | None = None) -> dict:
+                  pagerank: bool = False) -> dict:
     """Fold an append-mode index back to the canonical dense layout: stage
     generations compact to one stage_raw and every derived table is rebuilt
     from it — byte-identical to a from-scratch build over the same corpus
     (tests/test_incremental.py). This is the periodic compaction that
-    bounds segment growth between appends.
+    bounds segment growth between appends, and the only rebuild an index
+    gets after its first build: the shard count is always the last full
+    build's ``num_shards_base``.
 
-    ``pagerank=None`` (default) preserves what the index already has: a
-    pagerank-bearing index (doc_map values or a refresh_pagerank sidecar)
-    recomputes pagerank into the fresh doc_map, a plain index stays plain
-    — compacting must never silently zero the corpus's scores. Pass an
-    explicit bool to override."""
+    Pagerank is computed into the fresh doc_map when ``pagerank`` is True
+    OR the index already has it (doc_map values or a refresh_pagerank
+    sidecar), so compacting never zeroes the corpus's scores."""
     meta = read_index_meta(index_dir)
-    if pagerank is None:
-        pagerank = _index_has_pagerank(index_dir, meta)
-    if num_shards is None:
-        num_shards = int(meta["num_shards_base"])
+    pagerank = pagerank or _index_has_pagerank(index_dir, meta)
     if sort_partitions is None:
         sort_partitions = max(spark.sparkContext.defaultParallelism, 4)
     compact_stage(spark, index_dir)
@@ -2252,7 +2207,8 @@ def compact_index(spark: SparkSession, index_dir: str,
     stage = spark.read.parquet(os.path.join(index_dir, "stage_raw"))
     result = _build_derived(
         spark, stage, index_dir,
-        num_shards=num_shards, num_buckets=int(meta["num_buckets"]),
+        num_shards=int(meta["num_shards_base"]),
+        num_buckets=int(meta["num_buckets"]),
         sort_partitions=sort_partitions, force=True, pagerank=pagerank,
         recorder=recorder,
     )

@@ -1,8 +1,7 @@
 """Append-mode incremental merge (VERDICT r03 #4): O(delta) posting work.
 
-``merge_index_delta(mode="append")`` — selected automatically for deltas of
-new urls — appends posting/position segments instead of recompacting the
-corpus. Docids stay dense per shard (the delta fills the tail shard and
+``merge_index_delta`` appends posting/position segments instead of
+rebuilding the corpus. Docids stay dense per shard (the delta fills the tail shard and
 spills into new serving shards), so when the delta's urls all sort AFTER
 the existing corpus the result is exactly the dense layout a fresh build
 would produce: those cases gate VALUE identity of every derived table and
@@ -18,6 +17,7 @@ import os
 import numpy as np
 
 from mithril_spark.codec import decode_posting_block, decode_position_block
+from mithril_spark import indexer
 from mithril_spark.engine import SearchEngine
 from mithril_spark.fixtures import generate_pages, pages_to_df
 from mithril_spark.indexer import (
@@ -284,7 +284,7 @@ def test_append_writes_o_delta_bytes(spark, tmp_path_factory):
     assert {d for d, *_ in ei2.top_k("search")} <= set(urls2)
 
 
-def test_auto_compaction_guard(spark, tmp_path_factory):
+def test_auto_compaction_guard(spark, tmp_path_factory, monkeypatch):
     """VERDICT r04 #2: past the tombstone threshold the merge compacts the
     index ITSELF (result['compacted']), restoring the canonical dense
     layout byte-identically; below it (default floor) the LSM path is
@@ -317,8 +317,8 @@ def test_auto_compaction_guard(spark, tmp_path_factory):
     # merge 2: floor lowered to 1 — the guard must fire and compact
     d2 = admitted_recrawls((3, 11, 30), 7)
     assert d2
-    res2 = merge_index_delta(inc_dir, pages_to_df(spark, d2),
-                             auto_compact_min_tombstones=1)
+    monkeypatch.setattr(indexer, "TOMBSTONE_COMPACT_MIN", 1)
+    res2 = merge_index_delta(inc_dir, pages_to_df(spark, d2))
     assert res2["mode"] == "append" and res2.get("compacted") is True
     assert not os.path.isdir(os.path.join(inc_dir, "tombstones"))
     assert int(res2["meta"].get("tombstone_count", 0)) == 0
@@ -365,7 +365,8 @@ def test_cached_engine_plans_dont_leak_across_merges(spark, tmp_path_factory):
         assert e2.top_k(q) == oracle.top_k(q), q
 
 
-def test_auto_compaction_preserves_pagerank(spark, tmp_path_factory):
+def test_auto_compaction_preserves_pagerank(spark, tmp_path_factory,
+                                            monkeypatch):
     """code-review r5: when the guard compacts a pagerank-built index it
     must recompute pagerank — compact_index(pagerank=False) would zero
     the WHOLE corpus's scores, not just the delta's. The result must be
@@ -387,9 +388,9 @@ def test_auto_compaction_preserves_pagerank(spark, tmp_path_factory):
         if process_page(cand["url"].encode(), cand["html"]) is not None:
             delta.append(cand)
     delta += pages[24:26]
+    monkeypatch.setattr(indexer, "TOMBSTONE_COMPACT_MIN", 1)
     with pytest.warns(UserWarning, match="pagerank"):
-        res = merge_index_delta(inc_dir, pages_to_df(spark, delta),
-                                auto_compact_min_tombstones=1)
+        res = merge_index_delta(inc_dir, pages_to_df(spark, delta))
     assert res["mode"] == "append" and res.get("compacted") is True
     for p in delta:
         current[p["url"]] = p
@@ -464,42 +465,31 @@ def test_auto_mode_selection(spark, tmp_path_factory):
     assert res["mode"] == "append"
     assert res["pagerank_refresh"]["mode"] == "pagerank_refresh"
     assert os.path.exists(os.path.join(inc_dir, "pagerank", "_SUCCESS"))
-    # an explicit recompact still folds pagerank into doc_map directly
-    res = merge_index_delta(inc_dir, pages_to_df(spark, pages[2:3]),
-                            mode="recompact", pagerank=True)
-    assert res["mode"] == "recompact"
+    # compaction folds pagerank into doc_map directly
+    res = compact_index(spark, inc_dir, pagerank=True)
+    assert res["mode"] == "compact"
     assert not os.path.isdir(os.path.join(inc_dir, "pagerank"))
     dm = spark.read.parquet(f"{inc_dir}/doc_map")
     assert dm.filter("pagerank != 0.0").count() > 0
 
 
-def test_recompact_default_preserves_pagerank(spark, tmp_path_factory):
-    """code-review r5: merge_index_delta(mode="recompact") with the
-    DEFAULT pagerank arg must PRESERVE a pagerank-bearing index's scores
-    (recomputed over the union corpus — byte-identical to a fresh
-    pagerank build), like compact_index; only an explicit pagerank=False
-    drops them. Before the fix the default silently zeroed the whole
-    corpus's scores and deleted any refresh sidecar."""
-    pages = generate_pages(26, seed=13)
-    inc_dir = str(tmp_path_factory.mktemp("rdp_inc") / "i")
-    build_index(pages_to_df(spark, pages[:22]), inc_dir, num_shards=1,
+def test_compaction_never_drops_pagerank(spark, tmp_path_factory):
+    """compact_index computes pagerank whenever the index already has it:
+    ``pagerank=False`` on a pagerank-built index still recomputes every
+    doc's score into the fresh doc_map, bit-identical to the build's."""
+    pages = generate_pages(22, seed=13)
+    idx_dir = str(tmp_path_factory.mktemp("cndp") / "i")
+    build_index(pages_to_df(spark, pages), idx_dir, num_shards=1,
                 pagerank=True)
-    res = merge_index_delta(inc_dir, pages_to_df(spark, pages[22:24]),
-                            mode="recompact")
-    assert res["mode"] == "recompact"
 
-    full_dir = str(tmp_path_factory.mktemp("rdp_full") / "i")
-    build_index(pages_to_df(spark, pages[:24]), full_dir, num_shards=1,
-                pagerank=True)
-    _assert_same_index(spark, full_dir, inc_dir)
-    dm = spark.read.parquet(f"{inc_dir}/doc_map")
-    assert dm.filter("pagerank != 0.0").count() > 0
+    def pr_by_url():
+        return {bytes(r["url"]): float(r["pagerank"]) for r in
+                spark.read.parquet(f"{idx_dir}/doc_map").collect()}
 
-    # explicit False is the documented opt-out: scores drop on purpose
-    merge_index_delta(inc_dir, pages_to_df(spark, pages[24:25]),
-                      mode="recompact", pagerank=False)
-    dm = spark.read.parquet(f"{inc_dir}/doc_map")
-    assert dm.filter("pagerank != 0.0").count() == 0
+    want = pr_by_url()
+    assert any(v != 0.0 for v in want.values())
+    compact_index(spark, idx_dir, pagerank=False)
+    assert pr_by_url() == want
 
 
 def test_many_appends_lsm_stability(spark, tmp_path_factory):
@@ -806,9 +796,11 @@ def test_refresh_pagerank_sidecar(spark, tmp_path_factory):
     eng = SearchEngine(spark, inc_dir, pagerank_weight=80.0)
     assert eng._driver_images
     img_pr = {}
-    for img in eng._driver_images.values():
-        for u, v in zip(img.urls, img.pageranks):
-            img_pr[u] = float(v)
+    for s, img in eng._driver_images.items():
+        dead = eng._tombstones.get(s, ())
+        for lid, u, v in zip(img.local_ids, img.urls, img.pageranks):
+            if lid not in dead:
+                img_pr[u] = float(v)
     assert img_pr == want
 
     # compaction with the autodetect default must PRESERVE pagerank
@@ -1049,6 +1041,41 @@ def test_worker_image_epoch_stability(spark, tmp_path_factory):
     assert not np.any(img_stale.pageranks)  # doc_map's own 0.0 values
     img_live = _worker_image(inc_dir, 0, _docmap_token(inc_dir))
     assert np.any(img_live.pageranks)  # sidecar applied at match
+
+
+def test_driver_images_equal_worker_images(spark, tmp_path_factory):
+    """One image loader for both tiers: on a re-crawled, pagerank-
+    refreshed index every driver-resident shard image equals the worker
+    image for the engine's token, column by column — dead rows kept (the
+    tombstone set filters match lists, not images) and the sidecar
+    applied on both."""
+    from mithril_spark.engine import _worker_image
+    from mithril_spark.query.isr import DocMapCols
+
+    pages = _sorted_pages(40, seed=41)
+    base = pages[:34]
+    inc_dir = str(tmp_path_factory.mktemp("img_eq") / "i")
+    build_index(pages_to_df(spark, base), inc_dir, num_shards=2)
+    delta = [dict(base[2], html=base[9]["html"]),
+             dict(base[25], html=base[4]["html"])] + pages[34:]
+    res = merge_index_delta(inc_dir, pages_to_df(spark, delta),
+                            pagerank=True)
+    assert res["meta"]["tombstone_count"] >= 1
+    assert "pagerank_refresh" in res
+
+    eng = SearchEngine(spark, inc_dir)
+    assert eng._driver_images and eng._tombstones
+    assert sorted(eng._driver_images) == sorted(eng.stats)
+    for s, img in eng._driver_images.items():
+        want = _worker_image(inc_dir, s, eng._image_token)
+        for col in DocMapCols.__slots__:
+            a, b = getattr(img, col), getattr(want, col)
+            if isinstance(b, np.ndarray):
+                assert np.array_equal(a, b), (s, col)
+            else:
+                assert a == b, (s, col)
+        assert np.isin(eng._tombstones.get(s, []), img.local_ids).all(), s
+    assert any(np.any(img.pageranks) for img in eng._driver_images.values())
 
 
 def test_empty_delta_merge_is_a_true_noop(spark, tmp_path_factory):

@@ -1,10 +1,12 @@
-"""Incremental index maintenance: merge_index_delta == full rebuild.
+"""Incremental index maintenance: appends then compact_index == full
+rebuild.
 
 The derived tables (doc_map, postings, positions, term_dict, index_stats)
 are a deterministic function of the staged row set, so folding new pages in
-through two merge_index_delta calls must produce BYTE-IDENTICAL tables to a
-from-scratch build over the union corpus — at 1, 2 and 3 shards. Only the
-stage layout differs (generations vs one dir); read_stage resolves it.
+through two merge_index_delta appends and one compact_index must produce
+BYTE-IDENTICAL tables to a from-scratch build over the union corpus — at 1,
+2 and 3 shards. Compaction folds the stage generations into one dir without
+changing the rows read_stage resolves.
 """
 
 import shutil
@@ -13,7 +15,9 @@ import pytest
 
 from mithril_spark.fixtures import generate_pages, pages_to_df
 from mithril_spark.indexer import (
+    _stage_generations,
     build_index,
+    compact_index,
     compact_stage,
     merge_index_delta,
     read_stage,
@@ -40,6 +44,21 @@ def _tbl(spark, path, name, cols):
     )
 
 
+def _stage_urls(spark, path):
+    return {bytes(r["url"]) for r in read_stage(spark, path)
+            .select("url").collect()}
+
+
+def _compact_keeps_stage(spark, path, generations):
+    """compact_index over ``generations`` stage generations folds them into
+    one while read_stage resolves the same urls before and after."""
+    assert len(_stage_generations(path)) == generations
+    before = _stage_urls(spark, path)
+    assert compact_index(spark, path)["mode"] == "compact"
+    assert len(_stage_generations(path)) == 1
+    assert _stage_urls(spark, path) == before
+
+
 def _assert_same_index(spark, a, b):
     for name, cols in [("doc_map", DCOLS), ("postings", PCOLS),
                        ("positions", XCOLS), ("term_dict", TCOLS),
@@ -59,8 +78,9 @@ def test_two_increments_equal_full_rebuild(spark, tmp_path_factory, shards):
     inc_dir = str(tmp_path_factory.mktemp(f"inc_inc_{shards}") / "i")
     shutil.rmtree(inc_dir, ignore_errors=True)
     build_index(pages_to_df(spark, p1), inc_dir, num_shards=shards)
-    merge_index_delta(inc_dir, pages_to_df(spark, p2), mode="recompact")
-    merge_index_delta(inc_dir, pages_to_df(spark, p3), mode="recompact")
+    merge_index_delta(inc_dir, pages_to_df(spark, p2))
+    merge_index_delta(inc_dir, pages_to_df(spark, p3))
+    _compact_keeps_stage(spark, inc_dir, 3)
 
     _assert_same_index(spark, full_dir, inc_dir)
 
@@ -72,21 +92,13 @@ def test_two_increments_equal_full_rebuild(spark, tmp_path_factory, shards):
     for q in ["search engine", "granite OR marble", "NOT quartz"]:
         assert ef.top_k(q) == ei.top_k(q), q
 
-    # compaction folds generations without changing the resolved rows
-    before = {bytes(r["url"]) for r in read_stage(spark, inc_dir)
-              .select("url").collect()}
-    folded = compact_stage(spark, inc_dir)
-    assert folded == 3
-    after = {bytes(r["url"]) for r in read_stage(spark, inc_dir)
-             .select("url").collect()}
-    assert before == after
-
 
 def test_streaming_ingest_feeds_incremental_merge(spark, tmp_path_factory):
     """The full freshness loop: the crawler keeps writing (streaming
-    extraction over a pages directory), merge_index_delta folds the
-    stream's extracted rows into the index WITHOUT re-parsing, and the
-    result is byte-identical to a from-scratch build over the union."""
+    extraction over a pages directory), merge_index_delta appends the
+    stream's extracted rows to the index WITHOUT re-parsing, and after
+    compact_index the result is byte-identical to a from-scratch build
+    over the union."""
     from mithril_spark.streaming import stream_extract_pages
 
     pages = generate_pages(100, seed=42)
@@ -107,8 +119,8 @@ def test_streaming_ingest_feeds_incremental_merge(spark, tmp_path_factory):
     q = stream_extract_pages(spark, pages_dir, extracted_dir, ckpt)
     q.awaitTermination(120)
 
-    merge_index_delta(inc_dir, extracted=spark.read.parquet(extracted_dir),
-                      mode="recompact")
+    merge_index_delta(inc_dir, extracted=spark.read.parquet(extracted_dir))
+    _compact_keeps_stage(spark, inc_dir, 2)
     _assert_same_index(spark, full_dir, inc_dir)
 
 
@@ -238,7 +250,7 @@ def test_old_index_format_rejected_at_open(spark, tmp_path_factory):
     import os
 
     from mithril_spark.engine import SearchEngine
-    from mithril_spark.indexer import INDEX_META_KEYS, compact_index
+    from mithril_spark.indexer import INDEX_META_KEYS
 
     pages = generate_pages(40, seed=23)
     built = str(tmp_path_factory.mktemp("fmt_built") / "i")
