@@ -1331,19 +1331,14 @@ def _build_derived(
         # (the refresh_pagerank sidecar was deleted BEFORE the phases ran
         # — see the top of this function for the mis-key rationale)
         # raw scan, not _doc_text_generations: sweep marker-less
-        # (aborted-write) generation debris too
+        # (aborted-write) generation debris too. stage_delta_*: a
+        # build_index(force=True) rebuilt from a freshly written stage_raw
+        # alone, so surviving deltas would both be counted adopted by the
+        # ledger below AND resolve their stale rows back over the new
+        # corpus in every read_stage consumer.
         for e in os.scandir(out_dir):
-            if e.is_dir() and e.name.startswith("doc_text_delta_"):
-                shutil.rmtree(os.path.join(out_dir, e.name),
-                              ignore_errors=True)
-        # stage_delta_* sweep (code-review r5): build_index(force=True)
-        # rebuilt from a freshly written stage_raw alone, so surviving
-        # deltas would both be counted adopted by the ledger below AND
-        # resolve their stale rows back over the new corpus in every
-        # read_stage consumer. compact_index already folded them via
-        # compact_stage, so there it finds nothing.
-        for e in os.scandir(out_dir):
-            if e.is_dir() and e.name.startswith("stage_delta_"):
+            if e.is_dir() and e.name.startswith(("doc_text_delta_",
+                                                 "stage_delta_")):
                 shutil.rmtree(os.path.join(out_dir, e.name),
                               ignore_errors=True)
 
